@@ -2328,7 +2328,7 @@ def q_range_join(spark, sf_dir):
 
 def q_dedup_embedding(spark, sf_dir):
     """Embedding-cosine near-dup pairs: sign-LSH banded buckets (portable
-    md5-derived planes) -> capped bucket self-join -> exact cosine verify.
+    md5-derived planes) -> capped banded pairs -> exact cosine verify.
     The synthetic embeddings have no true near-dups (max pairwise cosine
     ~0.51), so the gate threshold is 0.35 — it pins the ALGORITHM, bucket
     bits and all, against the oracle."""
@@ -4477,7 +4477,7 @@ def q_image_neardup(spark, sf_dir):
     """Image near-duplicate detection at corpus scale: originals +
     brightness-shifted copies (the classic re-encode twin), perceptual
     dHash per image, banded Hamming pairing (hamming_pairs64 — one
-    banding shuffle + capped bucket self-join, never n^2). Thumbnails
+    banding shuffle + capped per-bucket pair collect, never n^2). Thumbnails
     (< 8px a side) are skipped — their perceptual hash is noise."""
     from bun_csv_spark.multimodal.binary import attach_bmp_payload, extract_dhash
     from bun_csv_spark.operators.dedup import hamming_pairs64
@@ -5464,8 +5464,8 @@ def _knn_join_bucketed_sql(
     """
 
 
-# mirrors neardup_pairs_minhash's max_bucket degenerate-bucket guard
-# (dedup.py): buckets larger than the cap are dropped before the self-join
+# mirrors the max_bucket degenerate-bucket guard of dedup._banded_pairs:
+# buckets larger than the cap are dropped before pairing
 _BANDS_CAPPED_SQL = """
 bands_c AS (
   SELECT doc_id, band, bucket FROM (

@@ -23,13 +23,10 @@ Scale notes:
 - the explode(shingles) stage is the big one: rows × (len-k+1) shingles.
   Aggregating min() per (doc, hash-index) is map-side combinable, so the
   shuffle carries only n_docs × n_hashes rows.
-- band-bucket join skew: a degenerate bucket (empty/boilerplate docs all
-  hashing identically) makes the self-join quadratic.
-  ``neardup_pairs_minhash`` therefore drops buckets larger than
-  ``max_bucket`` (default 64) BEFORE the join — a band shared by hundreds
-  of documents is boilerplate, not near-dup signal, and exact/fingerprint
-  dedup already handles identical docs. AQE skew-join handles residual
-  imbalance below the cap.
+- band-bucket skew: a degenerate bucket (empty/boilerplate docs all
+  hashing identically) makes pairing quadratic. Every banded operator
+  therefore emits its pairs through ``_banded_pairs``, which drops
+  buckets above ``max_bucket`` first (the cap rationale lives there).
 """
 
 from __future__ import annotations
@@ -137,11 +134,10 @@ def minhash_signatures(
 
 def _cap_buckets(df: DataFrame, max_bucket: "int | None") -> DataFrame:
     """Drop every row of any (band, bucket) holding more than
-    ``max_bucket`` members — the degenerate-bucket guard shared by every
-    banded pairing path (minhash, simhash/hamming, embedding LSH, the
-    incremental fold). The size count is a window over the SAME
-    (band, bucket) key the candidate joins use, so the cap adds no
-    extra exchange. ``None`` disables."""
+    ``max_bucket`` members — the degenerate-bucket guard of
+    ``_banded_pairs`` and the incremental fold (``_day_pairs``). The size
+    count is a window over the SAME (band, bucket) key the pairing uses,
+    so the cap adds no extra exchange. ``None`` disables."""
     if max_bucket is None:
         return df
     from pyspark.sql import Window
@@ -162,18 +158,10 @@ def _band_buckets(
     bands: int,
     shingle_k: int,
     repartition: int | None,
-    max_bucket: int | None,
     bucket_encoding: str = "md5",
 ) -> DataFrame:
-    """(id, band, bucket) LSH banding table with the degenerate-bucket cap
-    applied — the shared head of both neardup candidate strategies.
-
-    ``max_bucket``: any (band, bucket) holding more than this many docs is
-    dropped before any join (one bucket of B docs contributes B²/2
-    candidate pairs — a single 10k-identical-docs bucket would add 5·10⁷
-    pairs and stall the stage). The size count is a window over the SAME
-    (band, bucket) key later joins use, so the cap adds no extra
-    exchange. ``None`` disables.
+    """(id, band, bucket) MinHash LSH banding table, uncapped — the shared
+    head of the near-dup candidate paths and the incremental band store.
 
     ``bucket_encoding``: the bucket key is an identity stand-in for the
     band's minhash VECTOR — two docs share a bucket iff their band
@@ -185,7 +173,7 @@ def _band_buckets(
     (SCALE.md r16 A/B: same pairs, smaller store). Collision risk is
     2^-64 per colliding PAIR within one band — and a collision only
     ADDS a candidate pair (verified downstream by Jaccard); the one
-    exception is with ``max_bucket`` set, where a collision that merges
+    exception is under a ``max_bucket`` cap, where a collision that merges
     two buckets can push the merged bucket over the cap and drop ALL
     its rows, removing pairs the md5 encoding would emit — same 2^-64
     order, negligible, but the invariant is "adds except across the cap
@@ -204,11 +192,9 @@ def _band_buckets(
         band_cols.append(
             F.struct(F.lit(b).alias("band"), bucket.alias("bucket"))
         )
-    buckets = sig.select(
+    return sig.select(
         F.col(id_col), F.explode(F.array(*band_cols)).alias("bk")
     ).select(id_col, F.col("bk.band").alias("band"), F.col("bk.bucket").alias("bucket"))
-
-    return _cap_buckets(buckets, max_bucket)
 
 
 def _spread_for_cpu(df: DataFrame, *key_cols: str) -> DataFrame:
@@ -237,19 +223,84 @@ def _spread_for_cpu(df: DataFrame, *key_cols: str) -> DataFrame:
     return df.repartition(par, *[F.col(c) for c in key_cols])
 
 
-def _bucket_pairs(a: DataFrame, b: DataFrame, id_col: str) -> DataFrame:
-    """Distinct (id_a, id_b), id_a < id_b, sharing any (band, bucket)."""
+def _banded_pairs(
+    banded: DataFrame,
+    id_col: str,
+    max_bucket: "int | None",
+    carry: "str | None" = None,
+) -> DataFrame:
+    """The one pair emitter of every banded near-dup operator (MinHash
+    LSH, SimHash / image / audio Hamming, embedding sign-LSH). Takes
+    (id, band, bucket[, carry]) rows and returns the distinct pairs of
+    ids sharing any (band, bucket): (id_a, id_b[, carry_a, carry_b]),
+    id_a < id_b. ``carry`` rides along with each side (the fingerprint a
+    Hamming verify needs), so no payload join follows.
+
+    The cap: any (band, bucket) holding more than ``max_bucket`` rows is
+    dropped first (``_cap_buckets``). One bucket of B rows is B²/2 pairs
+    — a single 10k-identical-docs bucket would add 5·10⁷ pairs and stall
+    the stage — and a band shared by hundreds of documents is
+    boilerplate, not near-dup signal (exact/fingerprint dedup already
+    handles identical docs). ``None`` disables the cap.
+
+    The shape follows the cap. Capped: groupBy (band, bucket) collects
+    each surviving bucket's <= ``max_bucket`` members and a per-bucket
+    combination explode emits the pairs — one aggregation over the
+    exchange the cap window already made, no self-join (r19: the join
+    evaluated the whole banding subtree once per side and broadcast an
+    O(corpus x bands) table; pair sets identical, sf0.1 flat). Uncapped:
+    the keyed self-join, because a collect would buffer an unbounded
+    degenerate bucket in one task while the join streams it — and a
+    table bucketed on (band, bucket) joins without an Exchange."""
+    banded = _cap_buckets(banded, max_bucket)
+    fields = [(id_col, "id")] + ([(carry, "carry")] if carry else [])
+    if max_bucket is None:
+        return (
+            banded.alias("a")
+            .join(
+                banded.alias("b"),
+                (F.col("a.band") == F.col("b.band"))
+                & (F.col("a.bucket") == F.col("b.bucket"))
+                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            )
+            .select(
+                *[F.col(f"{s}.{f}").alias(f"{n}_{s}") for f, n in fields for s in "ab"]
+            )
+            .distinct()
+        )
+    # members are bare ids unless a carry rides along
+    member = F.struct(id_col, carry) if carry else F.col(id_col)
+    grouped = (
+        banded.groupBy("band", "bucket")
+        .agg(F.array_sort(F.collect_list(member)).alias("__m"))
+        .filter(F.size("__m") >= 2)
+    )
+
+    def pair(a, b):
+        ends = {"a": a, "b": b}
+        return F.struct(
+            *[
+                (ends[s][f] if carry else ends[s]).alias(f"{n}_{s}")
+                for f, n in fields
+                for s in "ab"
+            ]
+        )
+
+    combos = F.flatten(
+        F.transform(
+            F.sequence(F.lit(0), F.size("__m") - 2),
+            lambda i: F.transform(
+                F.slice(F.col("__m"), i + 2, F.size("__m")),
+                lambda b: pair(F.element_at(F.col("__m"), i + 1), b),
+            ),
+        )
+    )
+    # an id repeated within a bucket sits next to itself in the sorted
+    # members; the join shape drops that self-pair in its condition
     return (
-        a.alias("a")
-        .join(
-            b.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
+        grouped.select(F.explode(combos).alias("p"))
+        .select("p.*")
+        .filter(F.col("id_a") < F.col("id_b"))
         .distinct()
     )
 
@@ -265,59 +316,12 @@ def neardup_pairs_minhash(
     max_bucket: int | None = 64,
 ) -> DataFrame:
     """LSH candidate pairs: docs sharing ANY band of n_hashes/bands
-    min-hashes. Returns (id_a, id_b) with id_a < id_b, distinct.
-
-    r19 shape (guide §2.4 "remove shuffles outright" / §2.3): with the
-    cap in play, pairs are emitted by ONE pass over the banding table —
-    groupBy (band, bucket) collects each bucket's <=``max_bucket`` ids
-    (bounded state: the cap window drops degenerate buckets FIRST, and it
-    shares the same (band, bucket) exchange, so the groupBy adds none)
-    and a per-bucket combination explode replaces the bucket SELF-JOIN.
-    The old join evaluated the whole shingle+minhash banding subtree
-    TWICE (once per side) and broadcast one side — a broadcast of an
-    O(corpus x bands) table that cannot fit at 100 TB (AQE would fall
-    back to shuffling both sides). Local A/B at sf0.1: flat (1.23 vs
-    1.14 s best-of-3); pair set verified identical (156 541 pairs).
-    ``max_bucket=None`` keeps the join shape — without the cap the
-    per-bucket collect would buffer unbounded degenerate buckets, which
-    the streaming window count never does."""
+    min-hashes, buckets above ``max_bucket`` dropped (``_banded_pairs``).
+    Returns (id_a, id_b) with id_a < id_b, distinct."""
     buckets = _band_buckets(
-        df, id_col, text_col, n_hashes, bands, shingle_k, repartition, max_bucket
+        df, id_col, text_col, n_hashes, bands, shingle_k, repartition
     )
-    if max_bucket is None:
-        return _bucket_pairs(buckets, buckets, id_col)
-    return _collected_bucket_pairs(buckets, id_col)
-
-
-def _collected_bucket_pairs(buckets: DataFrame, id_col: str) -> DataFrame:
-    """Distinct (id_a, id_b), id_a < id_b, from a CAPPED banding table by
-    per-bucket combination explode — one aggregation over the same
-    (band, bucket) partitioning the cap window established, no self-join,
-    no second evaluation of the banding subtree. Only safe after a
-    ``max_bucket`` cap: collect_list state is <= cap ids per bucket."""
-    ids = F.array_sort(F.collect_list(id_col))
-    grouped = (
-        buckets.groupBy("band", "bucket")
-        .agg(ids.alias("__ids"))
-        .filter(F.size("__ids") >= 2)
-    )
-    combos = F.flatten(
-        F.transform(
-            F.sequence(F.lit(0), F.size("__ids") - 2),
-            lambda i: F.transform(
-                F.slice(F.col("__ids"), i + 2, F.size("__ids")),
-                lambda b: F.struct(
-                    F.element_at(F.col("__ids"), i + 1).alias("id_a"),
-                    b.alias("id_b"),
-                ),
-            ),
-        )
-    )
-    return (
-        grouped.select(F.explode(combos).alias("p"))
-        .select(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
-        .distinct()
-    )
+    return _banded_pairs(buckets, id_col, max_bucket)
 
 
 def neardup_pairs_minhash_bucketed(
@@ -332,11 +336,11 @@ def neardup_pairs_minhash_bucketed(
     max_bucket: int | None = 64,
     n_buckets: int = 32,
 ) -> DataFrame:
-    """100 TB near-dup path (SCALE.md): materialize the banding table ONCE
-    as a parquet table bucketed+sorted by (band, bucket), then run the
-    candidate self-join against the bucketed layout — the join reads
-    co-located buckets and plans WITHOUT a shuffle Exchange (asserted in
-    tests/test_bucketing_stateful.py).
+    """100 TB near-dup path (SCALE.md): materialize the capped banding
+    table ONCE as a parquet table bucketed+sorted by (band, bucket), then
+    run the uncapped ``_banded_pairs`` self-join against the bucketed
+    layout — the join reads co-located buckets and plans WITHOUT a
+    shuffle Exchange (asserted in tests/test_bucketing_stateful.py).
 
     Why it matters at scale: the in-flight variant shuffles the banding
     rows (n_docs × bands) on every run; a recurring dedup job over a
@@ -346,13 +350,13 @@ def neardup_pairs_minhash_bucketed(
     from bun_csv_spark.operators.bucketing import write_bucketed
 
     buckets = _band_buckets(
-        df, id_col, text_col, n_hashes, bands, shingle_k, repartition, max_bucket
+        df, id_col, text_col, n_hashes, bands, shingle_k, repartition
     )
     write_bucketed(
-        buckets, table, ["band", "bucket"], n_buckets, sort_cols=["band", "bucket"]
+        _cap_buckets(buckets, max_bucket), table, ["band", "bucket"], n_buckets,
+        sort_cols=["band", "bucket"],
     )
-    persisted = df.sparkSession.table(table)
-    return _bucket_pairs(persisted, persisted, id_col)
+    return _banded_pairs(df.sparkSession.table(table), id_col, None)
 
 
 def ngram_jaccard_pairs(
@@ -473,10 +477,8 @@ def simhash_pairs(
     shift semantics on negative longs differ between engines, substring
     does not.
 
-    Per-band buckets above ``max_bucket`` docs are dropped before the
-    self-join (same cap rationale as LSH banding — one degenerate bucket
-    of B identical-ish docs is B²/2 pairs). One banding shuffle, one
-    keyed self-join, never n². Returns (id_a, id_b, hamming)."""
+    Pairing is ``hamming_pairs64`` (capped ``_banded_pairs``), never n².
+    Returns (id_a, id_b, hamming)."""
     sim = df.select(
         F.col(id_col), simhash64(F.col(text_col), shingle_k).alias("__sim")
     )
@@ -507,11 +509,10 @@ def hamming_pairs64(
     must divide the 16 hex chars): more bands = full recall at higher d,
     but coarser buckets = more candidates to verify, so pair the bump
     with a realistic ``max_bucket``. Oracle gates stay exact because the
-    oracle replays the same banding. Per-(band, bucket) groups above
-    ``max_bucket`` are dropped before the self-join — one degenerate
-    bucket of B near-equal fingerprints is B²/2 pairs. One banding
-    shuffle, one keyed self-join, never n². Returns (id_a, id_b,
-    hamming)."""
+    oracle replays the same banding. Candidates come from
+    ``_banded_pairs`` (buckets above ``max_bucket`` dropped) with the
+    fingerprint carried along, so the verify needs no join; never n².
+    Returns (id_a, id_b, hamming)."""
     if 16 % n_bands != 0:
         raise ValueError(f"n_bands must divide 16 hex chars, got {n_bands}")
     width = 16 // n_bands
@@ -533,25 +534,8 @@ def hamming_pairs64(
         F.col("bk.band").alias("band"),
         F.col("bk.bucket").alias("bucket"),
     )
-    banded = _cap_buckets(banded, max_bucket)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col(f"a.{hash_col}").alias("__sa"),
-            F.col(f"b.{hash_col}").alias("__sb"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("__sa").bitwiseXOR(F.col("__sb")))
+    pairs = _banded_pairs(banded, id_col, max_bucket, carry=hash_col)
+    hamming = F.bit_count(F.col("carry_a").bitwiseXOR(F.col("carry_b")))
     return (
         pairs.withColumn("hamming", hamming.cast("long"))
         .filter(F.col("hamming") <= max_hamming)
@@ -605,6 +589,7 @@ def connected_components(
     nodes = sym.select(F.col("a").alias("node")).distinct()
     labels = nodes.withColumn("label", F.col("node")).localCheckpoint()
 
+    changed = None  # stays None when max_iter <= 0: no round runs
     for _ in range(max_iter):
         nbr_min = (
             sym.join(labels, sym["b"] == labels["node"])
@@ -644,9 +629,12 @@ def connected_components(
         # partial labels silently
         import warnings
 
+        last = "no round ran" if changed is None else (
+            f"{changed} labels still changing last round"
+        )
         warnings.warn(
             f"connected_components hit max_iter={max_iter} before the "
-            f"fixpoint ({changed} labels still changing last round) — "
+            f"fixpoint ({last}) — "
             "labels are partial; raise max_iter for high-diameter graphs",
             RuntimeWarning,
             stacklevel=2,
@@ -695,16 +683,15 @@ def neardup_pairs_embedding(
 
     Same shape as the MinHash pipeline: each vector lands in ``bands``
     sign-LSH buckets (one per independent plane set); candidates are pairs
-    sharing ANY bucket (bucketed equi-join, NOT all-pairs); the exact
-    cosine then verifies candidates against ``threshold``. Degenerate
-    buckets above ``max_bucket`` are dropped before the join, like
-    ``neardup_pairs_minhash``.
+    sharing ANY bucket (``_banded_pairs``, buckets above ``max_bucket``
+    dropped — NOT all-pairs); the exact cosine then verifies candidates
+    against ``threshold``.
 
     The projection sign is taken on ``round(proj, 6)`` so float
     accumulation-order ULPs can't flip a bucket bit between engines.
     Returns (id_a, id_b, cosine) with id_a < id_b, cosine rounded to 6.
     Recall < 1 by design (tune bands/n_planes); at 100 TB the candidate
-    join shuffles on (band, bucket) only."""
+    pairing shuffles on (band, bucket) only."""
     from bun_csv_spark.functions.vectors import cosine_similarity, dlit
 
     planes = embedding_planes(seed, bands, n_planes, dim)
@@ -729,21 +716,7 @@ def neardup_pairs_embedding(
         F.col(id_col), F.explode(F.array(*band_cols)).alias("bk")
     ).select(id_col, F.col("bk.band").alias("band"), F.col("bk.bucket").alias("bucket"))
 
-    buckets = _cap_buckets(buckets, max_bucket)
-
-    a, b_ = buckets.alias("a"), buckets.alias("b")
-    pairs = (
-        a.join(
-            b_,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .distinct()
-    )
+    pairs = _banded_pairs(buckets, id_col, max_bucket)
     va = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"))
     vb = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"))
     cos = F.round(cosine_similarity(F.col("__va"), F.col("__vb")), 6)
@@ -850,8 +823,8 @@ def shared_substring_pairs(
     filter/transform/explode (docs shorter than ``window`` contribute
     nothing — explode of the gated NULL drops them); one shuffle on the
     md5 anchor key; ``max_per_hash`` drops ubiquitous windows (licence
-    boilerplate) before the self-join — the same degenerate-bucket cap as
-    the LSH pipeline, over the SAME join key so it adds no exchange.
+    boilerplate) before the self-join — the degenerate-bucket cap of
+    ``_banded_pairs``, over the SAME join key so it adds no exchange.
     Returns (id_a, id_b, n_shared) with id_a < id_b, n_shared = number of
     matching anchor-window pairs."""
     c = F.col(text_col)
@@ -1345,7 +1318,7 @@ def _commit_day_bands(
     ``incremental_neardup_fold_days`` run commits concurrently."""
     today = _band_buckets(
         day_df, id_col, text_col, n_hashes, bands, shingle_k, repartition,
-        None, bucket_encoding=bucket_encoding,
+        bucket_encoding=bucket_encoding,
     )
     out_dir = f"{store_dir.rstrip('/')}/day={int(day)}"
     today.select(id_col, "band", "bucket").write.mode("overwrite").parquet(out_dir)

@@ -69,7 +69,7 @@ def test_synth_recurring_rows_match_real_banding_any_day(spark):
             _recurring_pred(F.col("doc_id") - day * N)
         ),
         "doc_id", "text", PARAMS["n_hashes"], PARAMS["bands"],
-        PARAMS["shingle_k"], None, None,
+        PARAMS["shingle_k"], None,
     ).select("doc_id", "band", "bucket")
     got = sorted(map(tuple, synth.collect()))
     want = sorted(map(tuple, real.collect()))

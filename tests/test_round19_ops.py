@@ -291,6 +291,15 @@ def test_connected_components_warns_on_max_iter_exhaustion(spark):
         connected_components(pairs, max_iter=2).collect()
 
 
+def test_connected_components_zero_max_iter_warns_with_identity_labels(spark):
+    from bun_csv_spark.operators.dedup import connected_components
+
+    pairs = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
+    with pytest.warns(RuntimeWarning, match="max_iter=0"):
+        out = {r.node: r.label for r in connected_components(pairs, max_iter=0).collect()}
+    assert out == {1: 1, 2: 2, 3: 3}
+
+
 def test_connected_components_no_warning_on_convergence(spark, recwarn):
     from bun_csv_spark.operators.dedup import connected_components
 

@@ -85,7 +85,7 @@ def real_recurring_rows(spark, n: int):
     )
     rows = _band_buckets(
         docs0, "doc_id", "text", PARAMS["n_hashes"], PARAMS["bands"],
-        PARAMS["shingle_k"], None, None,
+        PARAMS["shingle_k"], None,
     ).withColumnRenamed("doc_id", "i")
     rows.cache().count()
     return rows

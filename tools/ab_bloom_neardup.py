@@ -63,7 +63,7 @@ def main() -> int:
 
     # m = 16x today's distinct (band, bucket) count -> ~0.1% FP at k=3
     today_bk = _band_buckets(
-        day2, "doc_id", "text", 8, 4, 5, par, None
+        day2, "doc_id", "text", 8, 4, 5, par
     ).select(
         F.concat_ws("|", F.col("band").cast("string"), F.col("bucket")).alias(
             "__bk"

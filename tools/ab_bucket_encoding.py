@@ -49,7 +49,7 @@ def real_recurring_rows_enc(spark, n: int, encoding: str):
     )
     rows = _band_buckets(
         docs0, "doc_id", "text", PARAMS["n_hashes"], PARAMS["bands"],
-        PARAMS["shingle_k"], None, None, bucket_encoding=encoding,
+        PARAMS["shingle_k"], None, bucket_encoding=encoding,
     ).withColumnRenamed("doc_id", "i")
     rows.cache().count()
     return rows

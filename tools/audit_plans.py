@@ -42,7 +42,9 @@ EXPECTATIONS = {
     # the final project reorders) — and NEVER a nested-loop/cartesian join
     "asof_join": (2, ["Window"], ["CartesianProduct", "BroadcastNestedLoopJoin"]),
     "range_join": (4, [], ["CartesianProduct", "BroadcastNestedLoopJoin"]),
-    "dedup_embedding": (6, [], ["CartesianProduct", "BroadcastNestedLoopJoin"]),
+    # capped banded pairs (cap window, pair distinct — no self-join) +
+    # the pinned cosine-verify spread
+    "dedup_embedding": (3, [], ["CartesianProduct", "BroadcastNestedLoopJoin"]),
     # r3 additions
     # substring anchors: window cap + equi-join + count agg — never n²
     # r18: +2 for the keyed ensure_parallelism spread of the single-file
@@ -90,9 +92,9 @@ EXPECTATIONS = {
     "rolling_range": (1, ["Window"], ["SinglePartition"]),
     "anomaly_zscore": (1, ["Window"], ["SinglePartition"]),
     "funnel": (2, [], ["SinglePartition"]),
-    # r18: +2 for the keyed ensure_parallelism spread of the corpus scan
-    # (once per side of the band self-join; no-op at scale)
-    "simhash_pairs": (5, [], ["CartesianProduct", "BroadcastNestedLoopJoin"]),
+    # r18: +1 for the keyed ensure_parallelism spread of the corpus scan
+    # (no-op at scale); the capped banded pairs evaluate the banding once
+    "simhash_pairs": (3, [], ["CartesianProduct", "BroadcastNestedLoopJoin"]),
     # r18: +1 pinned repartition of the candidate-pair ids before the
     # payload joins (_spread_for_cpu — AQE's bytes-based coalescing ran
     # the set-intersection verify single-core otherwise)
@@ -198,13 +200,14 @@ EXPECTATIONS = {
     "join_size_estimate": (8, ["HashAggregate"], []),
     # Arrow-batched decode+hash: pure mapInPandas, zero shuffles
     "image_dhash": (0, ["MapInPandas"], ["Exchange"]),
-    # banding window + capped bucket self-join — the simhash_pairs shape
-    # over image fingerprints; never a cartesian
-    "image_neardup": (6, ["MapInPandas"], ["CartesianProduct", "BroadcastNestedLoopJoin"]),
+    # banding cap window + per-bucket collect of the capped banded pairs
+    # — the simhash_pairs shape over image fingerprints, decoded once;
+    # never a cartesian
+    "image_neardup": (2, ["MapInPandas"], ["CartesianProduct", "BroadcastNestedLoopJoin"]),
     # Arrow-batched WAV decode + fingerprint: zero shuffles
     "audio_fingerprint": (0, ["MapInPandas"], ["Exchange"]),
     # same banded pairing shape as image_neardup
-    "audio_neardup": (6, ["MapInPandas"], ["CartesianProduct", "BroadcastNestedLoopJoin"]),
+    "audio_neardup": (2, ["MapInPandas"], ["CartesianProduct", "BroadcastNestedLoopJoin"]),
     # r8 additions
     # four mergeable families built per day and merged: every shuffle
     # carries bounded STATE (per-key moments / registers / bins /
