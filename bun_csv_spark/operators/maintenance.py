@@ -629,8 +629,8 @@ def daily_state_update(
     under ``state_dir`` and write the updated state back. First call
     bootstraps the directory. Each call costs ONE scan of the new day
     plus a state-sized merge — history is never re-read (measured 1.73x
-    at history/day=2 in tools/scale_test_r8.py; the advantage grows
-    linearly with history).
+    at history/day=2, SCALE.md "Round-8 measured datapoints" @ ca55360;
+    the advantage grows linearly with history).
 
     Cluster-portable durability: every marker/listing/delete goes
     through the Hadoop FileSystem resolved from ``state_dir``'s scheme,

@@ -2,7 +2,7 @@
 
 The reference has no streaming operators (SURVEY §2.9 — its "streaming" is
 incremental consumption of a static file). This module is the extension
-surface: watermarked tumbling/sliding/session windows over an event stream,
+surface: watermarked tumbling/session windows over an event stream,
 exercised in tests by replaying the static events parquet through
 ``readStream``.
 
@@ -21,11 +21,12 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# `spark.sql.shuffle.partitions` is session-global: two overlapping drains
-# pinning different counts would observe each other's value and a racy
-# interleave could restore the wrong one. The lock serializes pinned drains
-# on this process — correct by construction rather than by harness habit.
-# RLock: the provider pin nests inside the partition pin on one thread.
+# The confs a drain pins are session-global: two overlapping drains would
+# observe each other's values and a racy interleave could restore the
+# wrong one. `_pinned_drain` holds this lock for EVERY drain, pinned or
+# not, so drains in this process run one at a time. Code that sets these
+# confs outside `_pinned_drain` is not covered. RLock: a drain nested on
+# the same thread cannot deadlock.
 _PIN_LOCK = threading.RLock()
 
 
@@ -82,53 +83,48 @@ def _stream_state_partitions(
 
 
 @contextlib.contextmanager
-def _pinned_shuffle_partitions(spark: SparkSession, n: "int | None"):
-    """Set ``spark.sql.shuffle.partitions`` for the duration of a stream
-    drain (micro-batches plan against the live session conf), restoring
-    the caller's value after. No-op when ``n`` is None."""
-    if n is None:
-        yield
-        return
-    with _PIN_LOCK:
-        old = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(int(n)))
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
+def _pinned_drain(
+    spark: SparkSession, parts: "int | None", provider: "str | None"
+):
+    """Hold ``_PIN_LOCK`` for one stream drain and pin the two
+    session-global confs it plans against, restoring the caller's values
+    after (also on error). ``parts`` sets ``spark.sql.shuffle.partitions``
+    (micro-batches plan against the live session conf); ``provider`` sets
+    ``spark.sql.streaming.stateStore.providerClass`` (read at query start
+    and frozen into the checkpoint). A None value leaves its conf alone,
+    but the lock is taken either way, so an unpinned drain never runs
+    while another drain has the session conf mutated.
 
-
-@contextlib.contextmanager
-def _pinned_state_store_provider(spark: SparkSession, provider: "str | None"):
-    """Scoped pin of ``spark.sql.streaming.stateStore.providerClass`` for
-    one drain (the conf is read at query start and frozen into the
-    checkpoint). No-op when ``provider`` is None — the r19 A/B measured
+    ``provider=None`` keeps the HDFS-backed default: the r19 A/B measured
     RocksDB on the bounded sf0.1 replays at PARITY on the join/watermark
     gates (4.01 -> 3.91 / 3.74 -> 3.57 s) and WORSE on the small-state
     ones (session 1.30 -> 1.53, hll 1.90 -> 3.36 s: native store setup +
-    SST churn dwarfs the tiny per-batch deltas), so the HDFS-backed
-    default stands; deployments with large live-key state opt in with
-    ``state_store_provider="rocksdb"`` (alias) or a full provider class
-    name, where changed-key-only snapshots pay off."""
-    if provider is None:
-        yield
-        return
+    SST churn dwarfs the tiny per-batch deltas); deployments with large
+    live-key state opt in with ``state_store_provider="rocksdb"`` (alias)
+    or a full provider class name, where changed-key-only snapshots pay
+    off."""
     if provider == "rocksdb":
         provider = (
             "org.apache.spark.sql.execution.streaming.state."
             "RocksDBStateStoreProvider"
         )
-    key = "spark.sql.streaming.stateStore.providerClass"
+    pins = {}
+    if parts is not None:
+        pins["spark.sql.shuffle.partitions"] = str(int(parts))
+    if provider is not None:
+        pins["spark.sql.streaming.stateStore.providerClass"] = provider
     with _PIN_LOCK:
-        old = spark.conf.get(key, None)
-        spark.conf.set(key, provider)
+        old = {key: spark.conf.get(key, None) for key in pins}
+        for key, value in pins.items():
+            spark.conf.set(key, value)
         try:
             yield
         finally:
-            if old is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, old)
+            for key, value in old.items():
+                if value is None:
+                    spark.conf.unset(key)
+                else:
+                    spark.conf.set(key, value)
 
 
 def tumbling_counts(
@@ -168,28 +164,6 @@ def tumbling_counts(
             F.col(key_col),
             "n_events",
             "sum_value",
-        )
-    )
-
-
-def sliding_counts(
-    events: DataFrame,
-    duration: str = "1 hour",
-    slide: str = "30 minutes",
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-) -> DataFrame:
-    """Sliding-window variant: each event lands in duration/slide windows."""
-    win = F.window(F.col(ts_col), duration, slide)
-    return (
-        events.groupBy(win, F.col(key_col))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.date_format(F.col("window.start"), "yyyy-MM-dd HH:mm:ss").alias(
-                "window_start"
-            ),
-            F.col(key_col),
-            "n_events",
         )
     )
 
@@ -428,8 +402,7 @@ def run_stream_to_table(
     out = transform(stream)
     name = f"stream_out_{uuid.uuid4().hex[:8]}"
     parts = _stream_state_partitions(spark, parquet_path, state_partitions)
-    with _pinned_shuffle_partitions(spark, parts), \
-            _pinned_state_store_provider(spark, state_store_provider):
+    with _pinned_drain(spark, parts, state_store_provider):
         q = (
             out.writeStream.outputMode(output_mode)
             .format("memory")
@@ -477,8 +450,7 @@ def run_stream_polling(
     out = transform(stream)
     name = f"stream_poll_{_uuid.uuid4().hex[:8]}"
     parts = _stream_state_partitions(spark, parquet_path, state_partitions)
-    with _pinned_shuffle_partitions(spark, parts), \
-            _pinned_state_store_provider(spark, state_store_provider):
+    with _pinned_drain(spark, parts, state_store_provider):
         q = (
             out.writeStream.outputMode(output_mode)
             .format("memory")
@@ -599,8 +571,7 @@ def run_stream_checkpointed(
     # (stateful queries resume with the checkpoint's own count); the
     # derivation is still applied so fresh checkpoints size sensibly
     parts = _stream_state_partitions(spark, parquet_dir, state_partitions)
-    with _pinned_shuffle_partitions(spark, parts), \
-            _pinned_state_store_provider(spark, state_store_provider):
+    with _pinned_drain(spark, parts, state_store_provider):
         q = (
             out.writeStream.outputMode(output_mode)
             .foreachBatch(sink)

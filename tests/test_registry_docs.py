@@ -41,3 +41,14 @@ def test_every_gate_has_oracle():
 def test_registry_keys_unique_and_callable():
     qs = entry_mod.queries()
     assert all(callable(v) for v in qs.values())
+
+
+def test_every_tool_is_listed_in_verify_skill():
+    """The verify skill's Tools list names exactly the scripts under
+    tools/: a new tool must say what it is for, and a deleted one must
+    leave the list."""
+    skill = (REPO / ".claude/skills/verify/SKILL.md").read_text()
+    section = skill.split("\n## Tools\n", 1)[1].split("\n## ", 1)[0]
+    listed = set(re.findall(r"^- `tools/(\w+\.py)`", section, re.M))
+    on_disk = {p.name for p in (REPO / "tools").glob("*.py")}
+    assert listed == on_disk, sorted(listed ^ on_disk)

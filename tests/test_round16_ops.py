@@ -105,41 +105,6 @@ def test_unknown_encoding_raises(spark, tmp_path):
         )
 
 
-def test_encoding_ab_synth_matches_deepstore_synth(spark):
-    """tools/ab_bucket_encoding.synth_day_rows_enc must stay a faithful
-    generalization of the r15-pinned deepstore generator: the md5 path
-    reproduces tools/ab_bloom_deepstore.synth_day_rows EXACTLY (the
-    encoding A/B inherits the 'honest pre-grown store' premise from the
-    r15 laws), and the xxhash64 path emits the same (doc_id, band) rows
-    with long buckets that are unique per (doc, band) for novel docs."""
-    from tools.ab_bloom_deepstore import (
-        real_recurring_rows,
-        synth_day_rows,
-    )
-    from tools.ab_bucket_encoding import (
-        real_recurring_rows_enc,
-        synth_day_rows_enc,
-    )
-
-    n = 2000
-    rec_md5 = real_recurring_rows(spark, n)
-    a = synth_day_rows(spark, 4, n, rec_md5)
-    b = synth_day_rows_enc(
-        spark, 4, n, real_recurring_rows_enc(spark, n, "md5"), "md5"
-    )
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-    x = synth_day_rows_enc(
-        spark, 4, n, real_recurring_rows_enc(spark, n, "xxhash64"),
-        "xxhash64",
-    )
-    rows = x.collect()
-    assert dict(x.dtypes)["bucket"] == "bigint"
-    assert sorted((r["doc_id"], r["band"]) for r in rows) == sorted(
-        (r["doc_id"], r["band"]) for r in a.collect()
-    )
-    rec_md5.unpersist()
-
-
 def test_bloom_prune_bit_identical_on_narrow_layout(spark, tmp_path):
     """The bloom store-side prune stays bit-identical on the xxhash64
     layout (the bk concat casts the long bucket; no false negatives by

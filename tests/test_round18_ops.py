@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import contextlib
 import json
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -579,20 +580,52 @@ def test_stream_state_partitions_sizing_rule(spark, tmp_path, monkeypatch):
 
 
 def test_pinned_shuffle_partitions_restores_on_error(spark):
-    """The pin is scoped: the caller's shuffle-partition conf survives
-    both the happy path and an exception inside the drain."""
-    from bun_csv_spark.streaming.windows import _pinned_shuffle_partitions
+    """The drain pin is scoped: the caller's shuffle-partition and
+    state-store-provider confs survive both the happy path and an
+    exception inside the drain. Every drain holds ``_PIN_LOCK``, so an
+    unpinned drain waits while another thread holds the pins."""
+    from bun_csv_spark.streaming.windows import _PIN_LOCK, _pinned_drain
 
     key = "spark.sql.shuffle.partitions"
+    provider_key = "spark.sql.streaming.stateStore.providerClass"
     before = spark.conf.get(key)
-    with _pinned_shuffle_partitions(spark, 5):
+    provider_before = spark.conf.get(provider_key, None)
+    with _pinned_drain(spark, 5, "rocksdb"):
         assert spark.conf.get(key) == "5"
+        assert spark.conf.get(provider_key).endswith(
+            "RocksDBStateStoreProvider"
+        )
     assert spark.conf.get(key) == before
+    assert spark.conf.get(provider_key, None) == provider_before
     with pytest.raises(RuntimeError):
-        with _pinned_shuffle_partitions(spark, 7):
+        with _pinned_drain(spark, 7, None):
             assert spark.conf.get(key) == "7"
             raise RuntimeError("boom")
     assert spark.conf.get(key) == before
+
+    held, release, entered = (threading.Event() for _ in range(3))
+
+    def hold_pins():
+        with _PIN_LOCK:
+            held.set()
+            release.wait(30)
+
+    def unpinned_drain():
+        with _pinned_drain(spark, None, None):
+            entered.set()
+
+    holder = threading.Thread(target=hold_pins)
+    holder.start()
+    assert held.wait(30)
+    drain = threading.Thread(target=unpinned_drain)
+    drain.start()
+    try:
+        assert not entered.wait(0.5)
+    finally:
+        release.set()
+    assert entered.wait(30)
+    holder.join()
+    drain.join()
 
 
 def test_connected_components_deep_chain(spark):
