@@ -18,7 +18,7 @@ Layout
 - ``functions``    coercion / text / vector column-expression libraries
 - ``sources``      CSV reader with the reference's full option surface
 - ``streaming``    structured-streaming windows over event tables
-- ``multimodal``   binary-column plumbing with stubbed decoders
+- ``multimodal``   binary-column plumbing with pure-Python image/audio/video decoders
 """
 
 __version__ = "0.1.0"

@@ -11,12 +11,11 @@ headers, ``parse_wav_meta`` reads RIFF/WAVE headers (``wave`` + struct).
 PIXEL/SAMPLE decoding is REAL for every format stdlib can express —
 24-bit BI_RGB BMP (``decode_bmp_pixels``), 8-bit PNG including all five
 scanline filters (``decode_png_pixels``, zlib inflate + unfilter), GIF
-(``decode_gif_pixels``, pure-Python variable-width LZW + palette), and
-8/16-bit PCM WAV (``decode_wav_samples``). JPEG's DCT entropy coding and
-compressed audio (mp3/ogg) raise ValueError where PIL/libvips/ffmpeg
-would plug in. Payloads that are not a recognized container fall back to
-a deterministic md5-derived fake in the metadata extractors so the
-plumbing stays testable on arbitrary bytes.
+(``decode_gif_pixels``, pure-Python variable-width LZW + palette),
+baseline and progressive JPEG (``decode_jpeg_pixels``), and 8/16-bit PCM
+WAV (``decode_wav_samples``). Payloads that are not a recognized
+container fall back to a deterministic md5-derived fake in the metadata
+extractors so the plumbing stays testable on arbitrary bytes.
 
 Scale notes: binary payloads inflate row size — keep
 ``spark.sql.files.maxPartitionBytes`` low enough that an Arrow batch of
@@ -26,6 +25,7 @@ possible so column pruning keeps it out of unrelated scans.
 
 from __future__ import annotations
 
+import array
 import hashlib
 import io
 import struct
@@ -160,11 +160,15 @@ _PNG_CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}  # gray, RGB, gray+A, RGBA
 
 def decode_png_pixels(b: bytes):
     """REAL pixel decode for 8-bit non-interlaced PNG — stdlib zlib
-    inflate + the five scanline unfilters (None/Sub/Up/Average/Paeth),
-    vectorized per row with numpy.
+    inflate + the five scanline unfilters. None and Up are whole-row
+    numpy ops, Sub a per-channel cumulative sum along the row; Average
+    and Paeth depend on the just-reconstructed left neighbour, so they
+    run sequentially in x over Python ints on a bytearray. All filter
+    arithmetic is mod 256.
 
     Returns (width, height, ndarray[height, width, channels] uint8).
-    Palette/interlaced/16-bit images raise ValueError (out of scope)."""
+    Palette/interlaced/16-bit images raise ValueError (out of scope), as
+    do truncated or corrupt files."""
     import numpy as np
 
     if b[:8] != b"\x89PNG\r\n\x1a\n":
@@ -178,6 +182,8 @@ def decode_png_pixels(b: bytes):
         tag = b[pos + 4 : pos + 8]
         body = b[pos + 8 : pos + 8 + length]
         if tag == b"IHDR":
+            if len(body) != 13:
+                raise ValueError("truncated PNG IHDR")
             width, height, bit_depth, color_type, _, _, interlace = struct.unpack(
                 ">II5B", body
             )
@@ -196,47 +202,47 @@ def decode_png_pixels(b: bytes):
         raise ValueError("truncated PNG")
     ch = _PNG_CHANNELS[color_type]
     stride = width * ch
-    raw = zlib.decompress(bytes(idat))
+    try:
+        raw = zlib.decompress(bytes(idat))
+    except zlib.error as e:
+        raise ValueError(f"corrupt PNG image data: {e}") from e
     if len(raw) != height * (stride + 1):
         raise ValueError("scanline data size mismatch")
-    img = np.empty((height, stride), np.uint16)
-    zero = np.zeros(stride, np.uint16)
+    scan = np.frombuffer(raw, np.uint8).reshape(height, stride + 1)
+    img = np.empty((height, stride), np.uint8)
+    prev = np.zeros(stride, np.uint8)
     for y in range(height):
-        line = np.frombuffer(raw, np.uint8, stride, y * (stride + 1) + 1).astype(
-            np.uint16
-        )
         ftype = raw[y * (stride + 1)]
-        prev = img[y - 1] if y else zero
+        line = scan[y, 1:]
         if ftype == 0:
             img[y] = line
+        elif ftype == 1:  # Sub: uint8 accumulation wraps mod 256
+            img[y] = line.reshape(width, ch).cumsum(axis=0, dtype=np.uint8).reshape(-1)
         elif ftype == 2:  # Up
-            img[y] = (line + prev) & 0xFF
-        elif ftype in (1, 3, 4):
-            # Sub/Average/Paeth depend on the just-reconstructed left
-            # neighbor — sequential in x over pixel positions; channels
-            # within a position stay vectorized
-            cur = img[y]
-            for x in range(0, stride, ch):
-                a = cur[x - ch : x] if x else zero[:ch]
-                seg = slice(x, x + ch)
-                if ftype == 1:
-                    cur[seg] = (line[seg] + a) & 0xFF
-                elif ftype == 3:
-                    cur[seg] = (line[seg] + (a + prev[seg]) // 2) & 0xFF
-                else:
-                    c_ = prev[x - ch : x] if x else zero[:ch]
-                    p = a.astype(np.int32) + prev[seg].astype(np.int32) - c_.astype(np.int32)
-                    pa = np.abs(p - a)
-                    pb = np.abs(p - prev[seg])
-                    pc = np.abs(p - c_)
-                    pred = np.where(
-                        (pa <= pb) & (pa <= pc), a,
-                        np.where(pb <= pc, prev[seg], c_),
-                    )
-                    cur[seg] = (line[seg] + pred) & 0xFF
+            img[y] = line + prev
+        elif ftype in (3, 4):
+            cur = bytearray(line.tobytes())
+            up = prev.tobytes()
+            if ftype == 3:  # Average
+                for x in range(ch):
+                    cur[x] = (cur[x] + (up[x] >> 1)) & 0xFF
+                for x in range(ch, stride):
+                    cur[x] = (cur[x] + ((cur[x - ch] + up[x]) >> 1)) & 0xFF
+            else:  # Paeth; at x < ch the left and upper-left are 0, so it predicts up
+                for x in range(ch):
+                    cur[x] = (cur[x] + up[x]) & 0xFF
+                for x in range(ch, stride):
+                    a, b_, c = cur[x - ch], up[x], up[x - ch]
+                    pa, pb = b_ - c, a - c  # p - a, p - b for p = a + b - c
+                    pc = abs(pa + pb)
+                    pa, pb = abs(pa), abs(pb)
+                    pred = a if pa <= pb and pa <= pc else (b_ if pb <= pc else c)
+                    cur[x] = (cur[x] + pred) & 0xFF
+            img[y] = np.frombuffer(cur, np.uint8)
         else:
             raise ValueError(f"unknown PNG filter {ftype}")
-    return width, height, img.astype(np.uint8).reshape(height, width, ch)
+        prev = img[y]
+    return width, height, img.reshape(height, width, ch)
 
 
 def make_gif_payload(width: int, height: int) -> bytes:
@@ -310,9 +316,9 @@ def decode_bmp_pixels(b: bytes):
 def decode_image(payload: bytes):
     """Pixel decode dispatch — pure stdlib+numpy end to end: BMP (struct
     + numpy view), 8-bit PNG (zlib inflate + the five unfilters), GIF
-    (pure-Python LZW + palette), baseline-sequential JPEG (canonical
-    Huffman + dequant + IDCT, ``decode_jpeg_pixels``). Progressive JPEG
-    and subsampled chroma raise ValueError from the JPEG decoder."""
+    (pure-Python LZW + palette), baseline and progressive JPEG at any
+    supported chroma subsampling (Huffman + dequant + IDCT,
+    ``decode_jpeg_pixels``)."""
     raw = bytes(payload)
     if raw[:2] == b"BM":
         return decode_bmp_pixels(raw)
@@ -1132,6 +1138,7 @@ def _jpeg_zigzag() -> list:
 
 
 _ZIGZAG = _jpeg_zigzag()
+_UNZIGZAG = sorted(range(64), key=_ZIGZAG.__getitem__)  # raster -> scan index
 
 
 def _huff_encode_table(bits: list, vals: list) -> dict:
@@ -1146,9 +1153,25 @@ def _huff_encode_table(bits: list, vals: list) -> dict:
     return table
 
 
-def _huff_decode_table(bits: list, vals: list) -> dict:
-    """(length, code) -> symbol, same canonical assignment."""
-    return {lc: sym for sym, lc in _huff_encode_table(bits, vals).items()}
+_PEEK_BITS = 9
+_PEEK_MASK = (1 << _PEEK_BITS) - 1
+
+
+def _huff_decode_table(bits: bytes, vals: bytes) -> tuple:
+    """Decode side of the same canonical assignment, as ``(look,
+    codes)``. ``look[i]`` is ``(length << 8) | symbol`` for the code
+    that prefixes the 9-bit window ``i``, or 0 when no code of at most
+    9 bits does; ``codes`` maps ``(length, code)`` to the symbol for
+    the longer codes. Canonical codes are prefix-free even when a
+    corrupt table over-fills a length (the excess codes are unreachable,
+    ``code >= 2**length``), so no two codes share a window."""
+    codes = {lc: sym for sym, lc in _huff_encode_table(bits, vals).items()}
+    look = [0] * (1 << _PEEK_BITS)
+    for (length, code), sym in codes.items():
+        if length <= _PEEK_BITS and code < 1 << length:
+            span = 1 << (_PEEK_BITS - length)
+            look[code * span : (code + 1) * span] = [(length << 8) | sym] * span
+    return look, codes
 
 
 def _dct_matrix():
@@ -1210,7 +1233,8 @@ def _prep_components(planes: list, width: int, height: int, samp: list):
 
 
 def _encode_baseline(
-    planes: list, width: int, height: int, quant, samp: list | None = None
+    planes: list, width: int, height: int, quant, samp: list | None = None,
+    restart_interval: int = 0,
 ) -> bytes:
     """Shared baseline-sequential encoder core: ``planes`` is 1 (gray)
     or 3 (YCbCr) float arrays, all FULL-RES height x width. ``samp`` is
@@ -1220,11 +1244,14 @@ def _encode_baseline(
     luminance Huffman pair serve every component (legal — SOS table
     selectors just all point at slot 0). Each MCU interleaves h*v
     blocks per component in raster order (T.81 A.2.3) with
-    per-component DC predictors."""
+    per-component DC predictors. A nonzero ``restart_interval`` writes a
+    DRI segment and, after every that many MCUs, pads to a byte, emits
+    RST0..RST7 in turn and resets the DC predictors (T.81 E.1.4)."""
     import numpy as np
 
     q = np.ones(64, np.int64) if quant is None else np.asarray(quant, np.int64)
     assert q.shape == (64,) and (q > 0).all() and (q < 256).all()
+    assert 0 <= restart_interval < 1 << 16
     nc = len(planes)
     assert nc in (1, 3)
     samp = samp or [(1, 1)] * nc
@@ -1273,17 +1300,22 @@ def _encode_baseline(
         # is one data unit and blocks go in pure raster order regardless
         # of the declared sampling factors (identical to the MCU walk
         # when samp=(1,1), the only gray layout the public helpers emit)
-        for by in range(-(-height // 8)):
-            for bx in range(-(-width // 8)):
-                emit(0, by, bx)
+        mcus = [[(0, by, bx)] for by in range(-(-height // 8))
+                for bx in range(-(-width // 8))]
     else:
-        for my in range(mcy):
-            for mx in range(mcx):
-                for ci in range(nc):
-                    hi, vi = samp[ci]
-                    for v in range(vi):
-                        for hh in range(hi):
-                            emit(ci, my * vi + v, mx * hi + hh)
+        mcus = [
+            [(ci, my * samp[ci][1] + v, mx * samp[ci][0] + hh)
+             for ci in range(nc)
+             for v in range(samp[ci][1]) for hh in range(samp[ci][0])]
+            for my in range(mcy) for mx in range(mcx)
+        ]
+    for m, blocks in enumerate(mcus):
+        if restart_interval and m and m % restart_interval == 0:
+            bw.flush()
+            bw.buf += bytes((0xFF, 0xD0 + (m // restart_interval - 1) % 8))
+            prev_dc[:] = [0] * nc
+        for ci, by, bx in blocks:
+            emit(ci, by, bx)
     bw.flush()
 
     out = bytearray(b"\xff\xd8")  # SOI
@@ -1306,6 +1338,8 @@ def _encode_baseline(
         + bytes(_JPEG_AC_BITS)
         + bytes(_JPEG_AC_VALS)
     )
+    if restart_interval:
+        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)  # DRI
     out += b"\xff\xda" + struct.pack(">HB", 6 + 2 * nc, nc)
     for ci in range(nc):
         out += bytes([ci + 1, 0x00])
@@ -1634,111 +1668,126 @@ def make_jpeg_progressive_gray_payload(
     return _encode_progressive([img], width, height, quant)
 
 
-class _JpegBitReader:
-    """MSB-first bit reader over entropy-coded data: un-stuffs 0xFF 0x00,
-    surfaces RSTn markers to the MCU loop via ``restart()``."""
-
-    def __init__(self, data: bytes, pos: int):
-        self.d = data
-        self.pos = pos
-        self.acc = 0
-        self.n = 0
-
-    def bit(self) -> int:
-        if self.n == 0:
-            if self.pos >= len(self.d):
-                raise ValueError("truncated JPEG entropy data")
-            b = self.d[self.pos]
-            if b == 0xFF:
-                if self.pos + 1 >= len(self.d):
-                    raise ValueError("truncated JPEG entropy data")
-                nxt = self.d[self.pos + 1]
-                if nxt == 0x00:
-                    self.pos += 2
-                elif 0xD0 <= nxt <= 0xD7:
-                    raise ValueError("unexpected RST marker inside block")
-                else:
-                    raise ValueError(f"marker 0x{nxt:02x} inside entropy data")
-            else:
-                self.pos += 1
-            self.acc = b
-            self.n = 8
-        self.n -= 1
-        return (self.acc >> self.n) & 1
-
-    def bits(self, k: int) -> int:
-        v = 0
-        for _ in range(k):
-            v = (v << 1) | self.bit()
-        return v
-
-    def restart(self) -> None:
-        """Byte-align and consume an RSTn marker (DRI intervals)."""
-        self.n = 0
-        if self.pos + 1 >= len(self.d):
-            raise ValueError("truncated JPEG entropy data")
-        if self.d[self.pos] != 0xFF or not (0xD0 <= self.d[self.pos + 1] <= 0xD7):
-            raise ValueError("expected RST marker")
-        self.pos += 2
-
-
-def _huff_decode(br: _JpegBitReader, table: dict) -> int:
-    code, length = 0, 0
-    while length < 16:
-        code = (code << 1) | br.bit()
-        length += 1
-        sym = table.get((length, code))
-        if sym is not None:
-            return sym
-    raise ValueError("invalid Huffman code")
-
-
 def _extend(v: int, s: int) -> int:
     return v - (1 << s) + 1 if v < (1 << (s - 1)) else v
 
 
-def _decode_scan(br, comps, scan, htabs, coefs, w, h, hmax, vmax,
+def _decode_scan(b, pos, comps, scan, htabs, coefs, w, h, hmax, vmax,
                  mcx, mcy, restart_interval, ss, se, ah, al, progressive):
-    """Decode ONE entropy-coded scan into the per-component zigzag
-    coefficient arrays (T.81 E/F baseline, G progressive). Handles the
-    four progressive scan kinds (DC/AC x first/refinement) plus the
-    baseline full-band scan (ss=0, se=63, ah=al=0 — DC-first + AC-first
-    over the whole band, eobrun degenerate). Returns the bit reader
-    (caller resyncs ``pos`` from it)."""
-    import numpy as np
+    """Decode ONE entropy-coded scan starting at ``b[pos]`` into the
+    per-component zigzag coefficient blocks (T.81 E/F baseline, G
+    progressive). Handles the four progressive scan kinds (DC/AC x
+    first/refinement) plus the baseline full-band scan (ss=0, se=63,
+    ah=al=0 — DC-first + AC-first over the whole band, eobrun
+    degenerate). Returns the byte position just past the last byte the
+    scan read; the pad bits to that byte boundary belong to this scan.
 
+    Entropy reader: each entropy-coded segment (up to the next marker)
+    is un-stuffed once and read 32 bits at a time into an accumulator.
+    A Huffman symbol resolves with one 9-bit peek-table lookup, or a
+    bit-at-a-time walk for longer codes. Reading past the segment raises
+    what a byte-at-a-time reader raises on fetching the byte there:
+    truncation, an RST marker inside a block, or another marker."""
     sampmap = {cid: (hi, vi) for cid, _, hi, vi in comps}
-    dctab = {cid: htabs.get((0, dc)) for cid, dc, _ in scan}
-    actab = {cid: htabs.get((1, ac)) for cid, _, ac in scan}
+    for cid, _, _ in scan:
+        if cid not in sampmap:
+            raise ValueError(f"SOS references unknown component {cid}")
+    dcs = [htabs.get((0, dc)) for _, dc, _ in scan]
+    acs = [htabs.get((1, ac)) for _, _, ac in scan]
     # validate table presence BEFORE entropy decoding starts: a corrupt
     # file whose SOS references an undefined table must raise the same
-    # clear ValueError as every other malformed-input path, not an
-    # AttributeError from deep inside _huff_decode. Which class a scan
-    # needs depends on its kind — DC-first/baseline (ss==0, ah==0)
-    # consumes DC tables, any scan covering AC bands (se>0) consumes AC
-    # tables, DC refinement (ss==0, ah>0) reads raw bits only.
-    for cid, dc, ac in scan:
-        if ss == 0 and ah == 0 and dctab[cid] is None:
+    # clear ValueError as every other malformed-input path. Which class
+    # a scan needs depends on its kind — DC-first/baseline (ss==0,
+    # ah==0) consumes DC tables, any scan covering AC bands (se>0)
+    # consumes AC tables, DC refinement (ss==0, ah>0) reads raw bits only.
+    for i, (_, dc, ac) in enumerate(scan):
+        if ss == 0 and ah == 0 and dcs[i] is None:
             raise ValueError(f"missing Huffman table (DC, {dc})")
-        if se > 0 and actab[cid] is None:
+        if se > 0 and acs[i] is None:
             raise ValueError(f"missing Huffman table (AC, {ac})")
-    pred = {cid: 0 for cid, _, _ in scan}
+    pred = [0] * len(scan)
     eobrun = 0
     p1, m1 = 1 << al, -(1 << al)
 
-    def refine_nonzero(zz, k):
-        # correction bit for a coefficient already nonzero in history
-        if br.bit() and (int(zz[k]) & p1) == 0:
-            zz[k] += p1 if zz[k] >= 0 else m1
+    # reader state: accumulator, its valid bits, real (un-padded) bits
+    # left in the segment, next word; the segment's start, un-stuffed
+    # bytes, 32-bit words and the error for reading past its end
+    acc = nbits = left = wi = 0
+    seg_at, seg, words, stop = pos, b"", (), ""
 
-    def block_baseline(cid, zz):
-        s = _huff_decode(br, dctab[cid])
-        diff = _extend(br.bits(s), s) if s else 0
-        pred[cid] += diff
-        zz[0] = pred[cid]
+    def load(p):
+        nonlocal acc, nbits, left, wi, seg_at, seg, words, stop
+        end = b.find(b"\xff", p)
+        while end >= 0 and end + 1 < len(b) and b[end + 1] == 0:
+            end = b.find(b"\xff", end + 2)  # stuffed 0xFF 0x00
+        if end < 0:
+            end = len(b)
+        if end + 1 >= len(b):
+            stop = "truncated JPEG entropy data"
+        elif 0xD0 <= b[end + 1] <= 0xD7:
+            stop = "unexpected RST marker inside block"
+        else:
+            stop = f"marker 0x{b[end + 1]:02x} inside entropy data"
+        seg_at, seg = p, b[p:end].replace(b"\xff\x00", b"\xff")
+        padded = seg + bytes(8 - len(seg) % 4)  # >= one zero word of slack
+        words = struct.unpack(f">{len(padded) // 4}I", padded)
+        acc = nbits = wi = 0
+        left = 8 * len(seg)
+
+    def byte_pos():
+        """Position just past the byte holding the last bit read."""
+        used = (8 * len(seg) - left + 7) >> 3
+        return seg_at + used + seg.count(b"\xff", 0, used)
+
+    def slow(codes):
+        """(length, symbol) for a code longer than the peek window."""
+        for length in range(_PEEK_BITS + 1, 17):
+            if length > left:
+                raise ValueError(stop)
+            sym = codes.get((length, (acc >> (nbits - length)) & ((1 << length) - 1)))
+            if sym is not None:
+                return length, sym
+        raise ValueError("invalid Huffman code")
+
+    def decode(tab):
+        nonlocal acc, nbits, left, wi
+        if nbits < 32:
+            acc = ((acc & ((1 << nbits) - 1)) << 32) | words[wi]
+            wi += 1
+            nbits += 32
+        e = tab[0][(acc >> (nbits - _PEEK_BITS)) & _PEEK_MASK]
+        if e:
+            length = e >> 8
+        else:
+            length, e = slow(tab[1])
+        if length > left:
+            raise ValueError(stop)
+        nbits -= length
+        left -= length
+        return e & 0xFF
+
+    def receive(s):
+        """The next ``s`` raw bits, MSB first."""
+        nonlocal acc, nbits, left, wi
+        if s > left:
+            raise ValueError(stop)
+        while nbits < s:
+            acc = ((acc & ((1 << nbits) - 1)) << 32) | words[wi]
+            wi += 1
+            nbits += 32
+        nbits -= s
+        left -= s
+        return (acc >> nbits) & ((1 << s) - 1)
+
+    def block_baseline(ci, zz):
+        s = decode(dcs[ci])
+        if s:
+            pred[ci] += _extend(receive(s), s)
+        zz[0] = pred[ci]
+        tab = acs[ci]
         k = 1
         while k < 64:
-            rs = _huff_decode(br, actab[cid])
+            rs = decode(tab)
             r, s = rs >> 4, rs & 0xF
             if s == 0:
                 if r == 15:  # ZRL
@@ -1748,27 +1797,28 @@ def _decode_scan(br, comps, scan, htabs, coefs, w, h, hmax, vmax,
             k += r
             if k > 63:
                 raise ValueError("AC run past block end")
-            zz[k] = _extend(br.bits(s), s)
+            zz[k] = _extend(receive(s), s)
             k += 1
 
-    def block_dc_first(cid, zz):
-        s = _huff_decode(br, dctab[cid])
-        diff = _extend(br.bits(s), s) if s else 0
-        pred[cid] += diff
-        zz[0] = pred[cid] << al
+    def block_dc_first(ci, zz):
+        s = decode(dcs[ci])
+        if s:
+            pred[ci] += _extend(receive(s), s)
+        zz[0] = pred[ci] << al
 
-    def block_dc_refine(cid, zz):
-        if br.bit():
-            zz[0] = int(zz[0]) | p1
+    def block_dc_refine(ci, zz):
+        if receive(1):
+            zz[0] |= p1
 
-    def block_ac_first(cid, zz):
+    def block_ac_first(ci, zz):
         nonlocal eobrun
         if eobrun > 0:
             eobrun -= 1
             return
+        tab = acs[ci]
         k = ss
         while k <= se:
-            rs = _huff_decode(br, actab[cid])
+            rs = decode(tab)
             r, s = rs >> 4, rs & 0xF
             if s == 0:
                 if r == 15:  # ZRL
@@ -1776,16 +1826,16 @@ def _decode_scan(br, comps, scan, htabs, coefs, w, h, hmax, vmax,
                     continue
                 eobrun = 1 << r  # EOBn: run of (1<<r)+bits(r) blocks
                 if r:
-                    eobrun += br.bits(r)
+                    eobrun += receive(r)
                 eobrun -= 1  # current block is part of the run
                 break
             k += r
             if k > se:
                 raise ValueError("AC run past band end")
-            zz[k] = _extend(br.bits(s), s) << al
+            zz[k] = _extend(receive(s), s) << al
             k += 1
 
-    def block_ac_refine(cid, zz):
+    def block_ac_refine(ci, zz):
         # T.81 G.1.2.3 successive-approximation AC refinement: newly
         # nonzero coefficients arrive as ±2^al, history coefficients
         # take one correction bit each as the scan passes them, and an
@@ -1794,24 +1844,27 @@ def _decode_scan(br, comps, scan, htabs, coefs, w, h, hmax, vmax,
         nonlocal eobrun
         k = ss
         if eobrun == 0:
+            tab = acs[ci]
             while k <= se:
-                rs = _huff_decode(br, actab[cid])
+                rs = decode(tab)
                 r, s = rs >> 4, rs & 0xF
                 newval = 0
                 if s == 0:
                     if r != 15:
                         eobrun = 1 << r
                         if r:
-                            eobrun += br.bits(r)
+                            eobrun += receive(r)
                         break
                     # ZRL: skip 16 zero-history positions
                 else:
                     if s != 1:
                         raise ValueError("bad AC refinement magnitude")
-                    newval = p1 if br.bit() else m1
+                    newval = p1 if receive(1) else m1
                 while k <= se:
-                    if zz[k] != 0:
-                        refine_nonzero(zz, k)
+                    z = zz[k]
+                    if z:  # correction bit for a nonzero history coefficient
+                        if receive(1) and not z & p1:
+                            zz[k] = z + p1 if z >= 0 else z + m1
                     else:
                         if r == 0:
                             break
@@ -1823,10 +1876,11 @@ def _decode_scan(br, comps, scan, htabs, coefs, w, h, hmax, vmax,
                     zz[k] = newval
                 k += 1
         if eobrun > 0:
-            while k <= se:
-                if zz[k] != 0:
-                    refine_nonzero(zz, k)
-                k += 1
+            band = zz[k : se + 1]
+            if any(band):  # corrections only where history is nonzero
+                for k, z in enumerate(band, k):
+                    if z and receive(1) and not z & p1:
+                        zz[k] = z + p1 if z >= 0 else z + m1
             eobrun -= 1
 
     if not progressive:
@@ -1840,12 +1894,18 @@ def _decode_scan(br, comps, scan, htabs, coefs, w, h, hmax, vmax,
         if len(scan) != 1:
             raise ValueError("progressive AC scan must be single-component")
 
-    def do_restart():
+    def restart():
         nonlocal pred, eobrun
-        br.restart()
-        pred = {cid: 0 for cid, _, _ in scan}
+        p = byte_pos()
+        if p + 1 >= len(b):
+            raise ValueError("truncated JPEG entropy data")
+        if b[p] != 0xFF or not (0xD0 <= b[p + 1] <= 0xD7):
+            raise ValueError("expected RST marker")
+        load(p + 2)
+        pred = [0] * len(scan)
         eobrun = 0
 
+    # the scan's blocks in decode order, and how many make one MCU
     if len(scan) == 1:
         # T.81 A.2: single-component scan = NON-interleaved; blocks in
         # raster order over the COMPONENT's own block grid (ceil of its
@@ -1854,40 +1914,53 @@ def _decode_scan(br, comps, scan, htabs, coefs, w, h, hmax, vmax,
         hi, vi = sampmap[cid0]
         cw, ch = -(-w * hi // hmax), -(-h * vi // vmax)
         bw_cols, bh_rows = -(-cw // 8), -(-ch // 8)
-        arr = coefs[cid0]
-        for m in range(bw_cols * bh_rows):
-            if restart_interval and m and m % restart_interval == 0:
-                do_restart()
-            by, bx = divmod(m, bw_cols)
-            block(cid0, arr[by, bx])
+        blocks, row = coefs[cid0], mcx * hi
+        order = [(0, blocks[by * row + bx])
+                 for by in range(bh_rows) for bx in range(bw_cols)]
+        per_mcu = 1
     else:
-        for m in range(mcx * mcy):
-            if restart_interval and m and m % restart_interval == 0:
-                do_restart()
-            my, mx = divmod(m, mcx)
-            # T.81: MCU interleave follows the SOS component list; within
-            # a component the h*v blocks go in raster order (A.2.3)
-            for cid, _dc, _ac in scan:
-                hi, vi = sampmap[cid]
-                arr = coefs[cid]
-                for v in range(vi):
-                    for hh in range(hi):
-                        block(cid, arr[my * vi + v, mx * hi + hh])
-    return br
+        # T.81: MCU interleave follows the SOS component list; within a
+        # component the h*v blocks go in raster order (A.2.3)
+        layout = []
+        for ci, (cid, _dc, _ac) in enumerate(scan):
+            hi, vi = sampmap[cid]
+            row = mcx * hi
+            layout += [(ci, coefs[cid], v * row + hh, hi, vi * row)
+                       for v in range(vi) for hh in range(hi)]
+        order = [(ci, blocks[my * mcu_row + mx * hi + off])
+                 for my in range(mcy) for mx in range(mcx)
+                 for ci, blocks, off, hi, mcu_row in layout]
+        per_mcu = len(layout)
+    every = restart_interval * per_mcu
+    load(pos)
+    for i, (ci, zz) in enumerate(order):
+        if every and i and i % every == 0:
+            restart()
+        block(ci, zz)
+    return byte_pos()
 
 
 def decode_jpeg_pixels(b: bytes):
     """JPEG decoder, stdlib+numpy: baseline sequential (SOF0/SOF1) AND
-    progressive (SOF2, r10) — DQT/DHT/SOS/DRI parsing, canonical
-    Huffman decode, multi-scan coefficient accumulation (spectral
-    selection + successive approximation per T.81 Annex G: DC/AC first
-    and refinement scans, EOB runs, per-scan restart intervals), then
-    one dequantize + de-zigzag + float IDCT + level shift + clamp pass.
-    Grayscale and 3-component frames at any sampling-factor layout
-    where each component's factors divide the maxima — 4:4:4, 4:2:0
-    (the layout virtually every camera/web JPEG uses), 4:2:2, 4:1:1;
-    subsampled chroma upsamples by pixel replication (box/nearest,
-    spec-legal).
+    progressive (SOF2) — DQT/DHT/SOS/DRI parsing, multi-scan coefficient
+    accumulation (spectral selection + successive approximation per
+    T.81 Annex G: DC/AC first and refinement scans, EOB runs, per-scan
+    restart intervals), then dequantize + IDCT per component. Grayscale
+    and 3-component frames at any sampling-factor layout where each
+    component's factors divide the maxima — 4:4:4, 4:2:0 (the layout
+    virtually every camera/web JPEG uses), 4:2:2, 4:1:1; subsampled
+    chroma upsamples by pixel replication (box/nearest, spec-legal).
+
+    Kernels: Huffman symbols decode through a 9-bit peek table per DHT
+    table (``_decode_scan``) into one ``array('q')`` of 64 int64 per
+    block (Python-int element access, unlike numpy's). Each component
+    then joins its blocks into numpy once (a memcpy, where
+    ``np.fromiter`` over int lists unboxes every coefficient),
+    dequantizes and de-zigzags in one multiply over its (rows, cols, 64)
+    blocks, and runs the float IDCT ``C.T @ X @ C + 128`` as one batched
+    matmul over (rows, cols, 8, 8): the same 8x8 products, so the same
+    rounding, as one block at a time. Malformed or truncated input
+    raises ValueError.
 
     Returns (width, height, ndarray[h, w, 3] uint8 BGR, matching
     decode_bmp_pixels) — grayscale replicates into all three channels;
@@ -1895,6 +1968,7 @@ def decode_jpeg_pixels(b: bytes):
     rint, clamp)."""
     import numpy as np
 
+    b = bytes(b)  # bytearray/memoryview in; the scan reader needs bytes.find
     if b[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG file (no SOI)")
     pos = 2
@@ -1909,14 +1983,18 @@ def decode_jpeg_pixels(b: bytes):
     while pos < len(b):
         if b[pos] != 0xFF:
             raise ValueError("marker expected")
-        while b[pos + 1] == 0xFF:  # T.81 B.1.1.2: fill bytes before a marker
+        while pos + 1 < len(b) and b[pos + 1] == 0xFF:  # T.81 B.1.1.2 fill bytes
             pos += 1
+        if pos + 1 >= len(b):
+            raise ValueError("truncated JPEG marker")
         marker = b[pos + 1]
         pos += 2
         if marker == 0xD9:  # EOI
             break
         if marker == 0x01 or 0xD0 <= marker <= 0xD7:
             continue  # standalone
+        if pos + 2 > len(b):
+            raise ValueError("truncated JPEG segment")
         seglen = struct.unpack_from(">H", b, pos)[0]
         seg = b[pos + 2 : pos + seglen]
         if marker == 0xDB:  # DQT (possibly several tables)
@@ -1937,12 +2015,15 @@ def decode_jpeg_pixels(b: bytes):
             o = 0
             while o < len(seg):
                 tc, th = seg[o] >> 4, seg[o] & 0xF
-                bits = list(seg[o + 1 : o + 17])
+                bits = seg[o + 1 : o + 17]
                 nv = sum(bits)
-                vals = list(seg[o + 17 : o + 17 + nv])
-                htabs[(tc, th)] = _huff_decode_table(bits, vals)
+                if len(seg) < o + 17 + nv:
+                    raise ValueError("truncated DHT segment")
+                htabs[(tc, th)] = _huff_decode_table(bits, seg[o + 17 : o + 17 + nv])
                 o += 17 + nv
         elif marker in (0xC0, 0xC1, 0xC2):  # baseline / ext. seq. / progressive
+            if len(seg) < 6:
+                raise ValueError("truncated SOF segment")
             prec, h, w, nc = struct.unpack_from(">BHHB", seg, 0)
             if prec != 8:
                 raise ValueError("only 8-bit precision supported")
@@ -1961,15 +2042,22 @@ def decode_jpeg_pixels(b: bytes):
                 raise ValueError("unsupported sampling-factor combination")
             mcx, mcy = -(-w // (8 * hmax)), -(-h // (8 * vmax))
             geo = (hmax, vmax, mcx, mcy)
+            # 64 zigzag-order int64 per block, blocks in raster order
+            # over the component's MCU-padded block grid
+            zero = array.array("q", bytes(512))
             coefs = {
-                cid: np.zeros((mcy * vi, mcx * hi, 64), np.int64)
+                cid: [zero[:] for _ in range(mcy * vi * mcx * hi)]
                 for cid, _, hi, vi in comps
             }
         elif marker == 0xDD:  # DRI
+            if len(seg) < 2:
+                raise ValueError("truncated DRI segment")
             restart_interval = struct.unpack_from(">H", seg, 0)[0]
         elif marker == 0xDA:  # SOS
             if frame is None:
                 raise ValueError("SOS before SOF")
+            if not seg or len(seg) < 4 + 2 * seg[0]:
+                raise ValueError("truncated SOS segment")
             ns = seg[0]
             scan = [(seg[1 + 2 * i], seg[2 + 2 * i] >> 4, seg[2 + 2 * i] & 0xF)
                     for i in range(ns)]
@@ -1980,16 +2068,13 @@ def decode_jpeg_pixels(b: bytes):
                 ss_, se_, ah_, al_ = 0, 63, 0, 0
             w_, h_, comps_ = frame
             hmax, vmax, mcx, mcy = geo
-            br = _decode_scan(
-                _JpegBitReader(b, pos + seglen), comps_, scan, htabs, coefs,
+            pos = _decode_scan(
+                b, pos + seglen, comps_, scan, htabs, coefs,
                 w_, h_, hmax, vmax, mcx, mcy, restart_interval,
                 ss_, se_, ah_, al_, progressive,
             )
             any_scan = True
             # resync to the next marker after the entropy-coded data
-            # (br.pos already points past any partially-consumed byte —
-            # the pad bits to the byte boundary belong to this scan)
-            pos = br.pos
             while pos + 1 < len(b) and not (
                 b[pos] == 0xFF and b[pos + 1] != 0x00
                 and not (0xD0 <= b[pos + 1] <= 0xD7)
@@ -2002,21 +2087,17 @@ def decode_jpeg_pixels(b: bytes):
 
     w, h, comps = frame
     hmax, vmax, mcx, mcy = geo
-    quant = {cid: qtabs[tq] for cid, tq, _, _ in comps}
     C = _dct_matrix()
     crop = []
-    for cid, _, hi, vi in comps:
-        arr = coefs[cid]
-        bh_rows, bw_cols = arr.shape[0], arr.shape[1]
-        plane = np.zeros((bh_rows * 8, bw_cols * 8), np.float64)
-        qflat = quant[cid].reshape(-1)[_ZIGZAG]
-        for by in range(bh_rows):
-            for bx in range(bw_cols):
-                coef = np.zeros(64, np.float64)
-                coef[_ZIGZAG] = arr[by, bx] * qflat
-                plane[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
-                    C.T @ coef.reshape(8, 8) @ C + 128.0
-                )
+    for cid, tq, hi, vi in comps:
+        if tq not in qtabs:
+            raise ValueError(f"missing quantization table {tq}")
+        rows, cols = mcy * vi, mcx * hi
+        zz = np.frombuffer(b"".join(coefs[cid]), np.int64).reshape(rows, cols, 64)
+        qflat = qtabs[tq].reshape(-1)[_ZIGZAG]
+        x = (zz * qflat)[:, :, _UNZIGZAG].astype(np.float64)
+        blocks = C.T @ x.reshape(rows, cols, 8, 8) @ C + 128.0
+        plane = blocks.transpose(0, 2, 1, 3).reshape(rows * 8, cols * 8)
         fy, fx = vmax // vi, hmax // hi
         if fy > 1:
             plane = plane.repeat(fy, axis=0)
