@@ -886,14 +886,16 @@ def editdist_verify(
 
     Exact distance on LSH-pruned candidates only, never all-pairs — the
     cost profile that keeps exact verification affordable at corpus
-    scale. r19: the kernel is the batched bit-parallel Myers DP
+    scale. The kernel is the batched bit-parallel Myers DP
     (functions/editdist.py) behind an Arrow-batched pandas UDF — the
     built-in ``F.levenshtein`` walks the full O(m·n) DP matrix per pair
     (~1.4e10 cells at the gate's sf0.1 workload, 6.7 s on 32 cores)
-    where Myers does O(n·⌈m/64⌉) word-ops vectorized across the batch;
-    same exact distances (law-tested against F.levenshtein incl.
-    unicode/boundary cases, and the DuckDB oracle re-verified at
-    sf0.01+sf0.1). Returns (id_a, id_b, lev, sim) where
+    where Myers does O(n·⌈m/64⌉) word-ops, packed across the batch into
+    Python bigints; same exact distances (law-tested against
+    F.levenshtein incl. unicode/boundary cases, and the DuckDB oracle
+    re-verified at sf0.01+sf0.1). The UDF is marked nondeterministic, so
+    a caller's filter on ``sim`` stays above the projection and the
+    kernel runs once per pair. Returns (id_a, id_b, lev, sim) where
     sim = 1 - lev/max(len_a, len_b), rounded 6dp for engine-portable
     comparison."""
     from bun_csv_spark.functions.editdist import levenshtein_udf

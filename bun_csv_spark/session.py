@@ -11,6 +11,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+# the directory holding this package (see get_spark)
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 TABLES = (
     "region",
     "nation",
@@ -35,6 +38,22 @@ def get_spark(
     shuffle partitions default to the core count — the 200 default
     over-parallelizes local mode and under-parallelizes a real cluster;
     AQE coalescing corrects the remainder at runtime.
+
+    Python workers start from ``bun_csv_spark._daemon`` rather than
+    ``pyspark.daemon``. PySpark's ``worker_util.setup_spark_files`` calls
+    ``importlib.invalidate_caches()`` on every Python task, and CPython
+    3.11's zipimporter then re-reads its archive's central directory: a
+    worker holds 16 importers (one per package directory imported from
+    ``pyspark.zip``, plus py4j's zip and the spark-core jar), 0.18-0.23 s
+    per task measured on a 4-core box, so a 16-task stage paid ~1 s
+    however little data it had. The daemon re-reads an archive only when
+    its stamp changed. The package directory goes on the workers'
+    PYTHONPATH so they can import the daemon whatever the application's
+    working directory. The guard changes nothing for a session this
+    function did not build (the session a caller hands to
+    ``__spark_entry__.entry``, or one that already existed when
+    ``getOrCreate`` ran), nor on a CPython whose zipimporter already
+    skips unchanged archives.
     """
     cpus = int(cpus or os.environ.get("SPARK_GRAFT_CPUS", "32"))
     builder = (
@@ -60,6 +79,8 @@ def get_spark(
         # Cluster Spark defaults to 4 for exactly this reason; a
         # deterministic bug still fails after 4 attempts.
         .config("spark.task.maxFailures", "4")
+        .config("spark.python.daemon.module", "bun_csv_spark._daemon")
+        .config("spark.executorEnv.PYTHONPATH", _ROOT)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

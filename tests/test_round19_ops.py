@@ -269,6 +269,83 @@ def test_myers_matches_builtin_levenshtein(spark):
     for r in got:
         assert r["got"] == r["want"], r
 
+    # one kernel call per batch, at the sub-batch edges: a single pair,
+    # three pairs, and more than _MAX_PAIRS pairs (several sub-batches),
+    # with lengths from 0 to ~700 code points in one batch
+    from bun_csv_spark.functions import editdist
+
+    rows = _random_pairs(rng, editdist._MAX_PAIRS + 77, alphabet)
+    want = _builtin_levenshtein(spark, rows)
+    for lo, hi in ((0, 1), (1, 4), (0, len(rows))):
+        a, b = zip(*rows[lo:hi])
+        assert editdist.batched_levenshtein(list(a), list(b)).tolist() == want[lo:hi]
+
+
+def _random_pairs(rng, n_pairs, alphabet):
+    """Near-duplicate pairs whose lengths differ widely: empty, a few
+    chars, around the 64-bit word boundaries, and several hundred."""
+    rows = []
+    for _ in range(n_pairs):
+        la = rng.choice([0, 1, 5, 63, 64, 65, 127, 128, 129, 300, 700])
+        la = max(0, la + rng.randint(-2, 2))
+        a = "".join(rng.choice(alphabet) for _ in range(la))
+        b = list(a[: rng.randint(0, la)] if rng.random() < 0.2 else a)
+        for _ in range(rng.randint(0, 6)):
+            op = rng.random()
+            if op < 0.4 and b:
+                b[rng.randrange(len(b))] = rng.choice(alphabet)
+            elif op < 0.7:
+                b.insert(rng.randint(0, len(b)), rng.choice(alphabet))
+            elif b:
+                del b[rng.randrange(len(b))]
+        rows.append((a, "".join(b)))
+    return rows
+
+
+def _builtin_levenshtein(spark, rows):
+    df = spark.createDataFrame(rows, "a string, b string")
+    return [r[0] for r in df.select(F.levenshtein("a", "b")).collect()]
+
+
+def test_myers_table_stays_under_budget_on_a_wide_alphabet(spark, monkeypatch):
+    """20k distinct code points in one batch: each pair's match table
+    holds only its own pattern's alphabet, so every sub-batch stays under
+    the byte budget (a batch-wide alphabet would need a 5-word x 200-pair
+    x 20,000-row table, 160 MB), and the distances still equal
+    F.levenshtein."""
+    import random
+
+    from bun_csv_spark.functions import editdist
+
+    rng = random.Random(29)
+    rows = []
+    for i in range(200):  # pair i uses its own 100 code points
+        script = [chr(0x4E00 + 100 * i + c) for c in range(100)]
+        a = script + rng.choices(script, k=rng.randint(0, 200))
+        rng.shuffle(a)
+        b = a[rng.randint(0, 9):]
+        for _ in range(rng.randint(0, 6)):
+            b[rng.randrange(len(b))] = rng.choice(script)
+        rows.append(("".join(a), "".join(b)))
+    assert len({c for a, _ in rows for c in a}) == 20_000
+
+    seen = []
+    packed = editdist._myers_packed
+
+    def recording(m, n, n_rows, words, row_a, row_b):
+        seen.append((m.size, m.size * n_rows * words * 8))
+        return packed(m, n, n_rows, words, row_a, row_b)
+
+    monkeypatch.setattr(editdist, "_myers_packed", recording)
+    want = _builtin_levenshtein(spark, rows)
+    a, b = zip(*rows)
+    for budget in (editdist._TABLE_BYTES, 64 << 10):
+        monkeypatch.setattr(editdist, "_TABLE_BYTES", budget)
+        seen.clear()
+        assert editdist.batched_levenshtein(list(a), list(b)).tolist() == want
+        assert all(size <= budget or pairs == 1 for pairs, size in seen), seen
+    assert len(seen) > 1  # the small budget split the batch
+
 
 def test_batched_levenshtein_numpy_edges():
     from bun_csv_spark.functions.editdist import batched_levenshtein

@@ -484,6 +484,22 @@ def test_editdist_verify_scores_candidates(spark):
     assert out[(1, 3)][1] < 0.2                     # unrelated pair scores low
 
 
+def test_editdist_verify_runs_the_kernel_once_under_a_sim_filter(spark):
+    """A filter on ``sim`` must not be pushed below the UDF projection:
+    that would evaluate the Myers UDF in two ArrowEvalPython nodes."""
+    from bun_csv_spark.operators.dedup import editdist_verify
+
+    corpus = spark.createDataFrame(
+        [(1, "the quick brown fox"), (2, "the quick brown fax"), (3, "zzz")],
+        "doc_id long, text string",
+    )
+    pairs = spark.createDataFrame([(1, 2), (1, 3)], "id_a long, id_b long")
+    out = editdist_verify(corpus, pairs).filter(F.col("sim") >= 0.8)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert [(r.id_a, r.id_b, r.lev) for r in out.collect()] == [(1, 2, 1)]
+
+
 def test_unicode_normalization_udfs(spark):
     from bun_csv_spark.functions.text import nfc_normalize_udf, strip_accents_udf
 
