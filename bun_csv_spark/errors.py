@@ -34,7 +34,3 @@ ERROR_TYPES: dict[str, str] = {
     "InvalidCast": "Validation",
     "ConstraintViolation": "Validation",
 }
-
-
-def error_type(code: str) -> str:
-    return ERROR_TYPES.get(code, "InvalidArgument")

@@ -3,13 +3,13 @@
 The 100 TB join strategy (SCALE.md): when two fact tables join repeatedly
 on the same key, bucket both by that key once at write time; every later
 join reads co-partitioned buckets and skips the exchange entirely.
-Verified by tests/test_bucketing.py asserting the join plan contains no
-shuffle Exchange.
+Verified by tests/test_bucketing_stateful.py asserting the join plan
+contains no shuffle Exchange.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -70,17 +70,3 @@ def write_partitioned(
     (verified in tests: the scan's PartitionFilters carries the predicate
     and the input file count drops)."""
     df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
-
-
-def bucketed_join(
-    spark: SparkSession,
-    left_table: str,
-    right_table: str,
-    on: str | list[str],
-    how: str = "inner",
-) -> DataFrame:
-    """Join two same-bucketed tables; Catalyst reads the bucket spec from
-    the catalog and plans the join shuffle-free."""
-    left = spark.table(left_table)
-    right = spark.table(right_table)
-    return left.join(right, on, how)

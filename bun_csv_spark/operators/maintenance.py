@@ -1,5 +1,5 @@
 """Table-maintenance operators for large-scale pipelines: CDC changelog
-apply, Bloom-filter semi-join pruning, Z-order clustering.
+apply, Bloom-filter semi-join pruning, Z-order keys.
 
 Extension surface beyond the reference (its data model is a single parsed
 file; a 100 TB corpus is a living table). Three patterns every production
@@ -11,10 +11,10 @@ lakehouse needs, each expressed as pure DataFrame plans:
   set using a broadcastable bitmap instead of shuffling the probe for a
   semi-join. False positives are DETERMINISTIC (md5-derived bit
   positions), so results are exactly reproducible and oracle-checkable.
-- ``zorder_value`` / ``cluster_by_zorder``: interleave quantized column
-  bits into a space-filling-curve key; sorting by it co-locates rows that
-  are close in BOTH dimensions, so min/max file skipping prunes
-  multi-dimensional predicates.
+- ``zorder_value``: interleave quantized column bits into a
+  space-filling-curve key; sorting by it co-locates rows that are close
+  in BOTH dimensions, so min/max file skipping prunes multi-dimensional
+  predicates.
 """
 
 from __future__ import annotations
@@ -253,29 +253,6 @@ def zorder_value(
         bbit = F.shiftright(qb, i) % 2
         z = z + F.shiftleft(abit, 2 * i) + F.shiftleft(bbit, 2 * i + 1)
     return z
-
-
-def cluster_by_zorder(
-    df: DataFrame,
-    a: str,
-    b: str,
-    a_min: float,
-    a_max: float,
-    b_min: float,
-    b_max: float,
-    bits: int = 16,
-    n_files: int = 8,
-) -> DataFrame:
-    """Range-partition by the Z-value and sort within partitions — each
-    output file then covers a compact 2-D region (write with
-    ``.write.parquet`` to materialize the clustering)."""
-    z = zorder_value(a, b, a_min, a_max, b_min, b_max, bits).alias("__z")
-    return (
-        df.withColumn("__z", z)
-        .repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-    )
 
 
 def agg_state(df: DataFrame, keys: list[str], value: str) -> DataFrame:
@@ -762,47 +739,3 @@ def load_pipeline_state(spark, state_dir: str) -> "dict[str, DataFrame]":
         fam: spark.read.parquet(f"{state_dir}/gen={gen}/{fam}")
         for fam in families
     }
-
-
-def state_kmv_params(spark, state_dir: str) -> "tuple[int | None, str | None]":
-    """(k, salt) the state dir's CURRENT generation built its kmv family
-    with, from the ``_FAMILIES`` metadata; (None, None) when the dir has
-    no kmv family or predates the metadata."""
-    state_dir = state_dir.rstrip("/")
-    gen = current_generation(spark, state_dir)
-    if gen is None:
-        return None, None
-    meta = _gen_meta(spark, state_dir, gen)
-    if meta is None:
-        return None, None
-    return meta.get("kmv_k"), meta.get("kmv_salt")
-
-
-def state_overlap_by_key(
-    spark, state_dir_a: str, state_dir_b: str, keys: "list[str]", kmv_k: int
-) -> DataFrame:
-    """Per-key distinct-set overlap between two PERSISTED pipeline
-    states (both maintained with the same ``kmv_k`` and key columns):
-    |A|, |B|, union, intersection and Jaccard per key, computed from
-    the two <=k-row-per-key kmv families alone — the cross-pipeline
-    pre-flight ("which user segments did yesterday's crawl share with
-    the reference corpus?") without touching either corpus. Raises if
-    either state dir lacks the kmv family, or if either dir's recorded
-    (k, salt) metadata contradicts ``kmv_k`` — estimating with the
-    wrong k silently rescales the (k-1)*KMV_DOMAIN factor."""
-    from bun_csv_spark.functions.sketches import kmv_set_estimates_by
-
-    for d in (state_dir_a, state_dir_b):
-        rec_k, rec_salt = state_kmv_params(spark, d)
-        if rec_k is not None and rec_k != kmv_k:
-            raise ValueError(
-                f"{d} built its kmv family with k={rec_k}, got kmv_k={kmv_k}"
-            )
-        if rec_salt is not None and rec_salt != _STATE_KMV_SALT:
-            raise ValueError(f"{d} built its kmv family with salt={rec_salt!r}")
-    a = load_pipeline_state(spark, state_dir_a)
-    b = load_pipeline_state(spark, state_dir_b)
-    missing = [d for d, st in ((state_dir_a, a), (state_dir_b, b)) if "kmv" not in st]
-    if missing:
-        raise ValueError(f"state dir(s) without a kmv family: {missing}")
-    return kmv_set_estimates_by(a["kmv"], b["kmv"], keys, k=kmv_k)

@@ -29,7 +29,6 @@ from bun_csv_spark.functions.vectors import (
     cosine_similarity,
     cosine_similarity_const,
     dlit as _dlit,
-    dot,
     llit as _llit,
 )
 
@@ -215,19 +214,6 @@ def ann_ivf_topk(
     if not centroids:
         raise ValueError("no centroid rows found")
 
-    def cell_expr(vec):
-        # r18: const centroid norms fold driver-side (bit-identical)
-        sims = F.array(
-            *[
-                F.struct(
-                    cosine_similarity_const(vec, list(cv)).alias("s"),
-                    F.lit(int(cid)).alias("c"),
-                )
-                for cid, cv in centroids
-            ]
-        )
-        return F.array_max(sims)["c"]
-
     # probe cells for the query — computed by the same expression over a
     # 1-row plan so Spark's float math decides, not Python's
     spark = df.sparkSession
@@ -255,9 +241,9 @@ def ann_ivf_topk(
     ).first()["top"]
     probes = [r["c"] for r in probe_rows]
 
-    cand = df.withColumn("__cell", cell_expr(F.col(vec_col))).filter(
-        F.col("__cell").isin(*probes)
-    )
+    cand = df.withColumn(
+        "__cell", ivf_cell_expr(F.col(vec_col), centroids)
+    ).filter(F.col("__cell").isin(*probes))
     # r18: const-query cosine (driver-side query norm, bit-identical)
     sim = cosine_similarity_const(F.col(vec_col), list(query_vec))
     if round_digits is not None:
@@ -442,7 +428,7 @@ def ann_quantized_topk(
 
 def ivf_cell_expr(vec, centroids: list[tuple[int, list[float]]]):
     """Nearest-centroid cell id as an in-plan argmax over broadcast
-    centroid literals (shared by build and query sides)."""
+    centroid literals (the corpus side of ``ann_ivf_topk``)."""
     # r18: const centroid norms fold driver-side (bit-identical)
     sims = F.array(
         *[
@@ -454,77 +440,6 @@ def ivf_cell_expr(vec, centroids: list[tuple[int, list[float]]]):
         ]
     )
     return F.array_max(sims)["c"]
-
-
-def ivf_write_partitioned(
-    df: DataFrame,
-    path: str,
-    centroids: list[tuple[int, list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    mode: str = "overwrite",
-) -> None:
-    """Materialize the IVF index as a Hive-partitioned store: one
-    directory per Voronoi cell. The build is a single map-only pass
-    (cell assignment is an in-plan argmax against broadcast centroid
-    literals) + a partitioned write. This is the 100 TB serving shape the
-    in-flight ``ann_ivf_topk`` docstring promises: queries then touch
-    only their nprobe cell directories via partition pruning — no full
-    scan, no index service."""
-    out = df.select(
-        id_col, vec_col, ivf_cell_expr(F.col(vec_col), centroids).alias("cell")
-    )
-    out.write.mode(mode).partitionBy("cell").parquet(path)
-
-
-def ann_ivf_partitioned_topk(
-    spark,
-    path: str,
-    query_vec: list[float],
-    centroids: list[tuple[int, list[float]]],
-    k: int = 10,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int | None = 6,
-) -> DataFrame:
-    """Query the partitioned IVF store: probe cells chosen by a 1-row
-    Spark plan (same float math as the build side), then a scan filtered
-    on the PARTITION column — the predicate lands in PartitionFilters and
-    prunes whole cell directories before any file opens (plan-asserted in
-    tests/test_similarity.py)."""
-    qdf = spark.range(1).select(
-        _dlit(list(query_vec)).alias("q")
-    )
-    ranked = qdf.select(
-        F.reverse(
-            F.array_sort(
-                F.array(
-                    *[
-                        F.struct(
-                            cosine_similarity_const(
-                                F.col("q"), list(cv)
-                            ).alias("s"),
-                            F.lit(int(cid)).alias("c"),
-                        )
-                        for cid, cv in centroids
-                    ]
-                )
-            )
-        ).alias("r")
-    ).first()["r"]
-    probes = [row["c"] for row in ranked[:nprobe]]
-
-    cand = spark.read.parquet(path).filter(F.col("cell").isin(*probes))
-    # r18: const-query cosine (driver-side query norm, bit-identical)
-    sim = cosine_similarity_const(F.col(vec_col), list(query_vec))
-    if round_digits is not None:
-        sim = F.round(sim, round_digits)
-    return (
-        cand.select(F.col(id_col), sim.alias("cosine_sim"))
-        .orderBy(F.col("cosine_sim").desc(), F.col(id_col))
-        .limit(k)
-    )
 
 
 # --- IVF-PQ: product quantization (r12) --------------------------------------
@@ -749,9 +664,9 @@ def ann_pq_topk(
     ``pq_encode_expr`` — the real serving shape: 64-dim float32 vectors
     are 256 B, the codes 8 B, a 32x memory-traffic cut on the hot scan)
     instead of encoding in-flight; results are identical because the
-    encoder is deterministic. At full scale, compose with
-    ``ivf_write_partitioned`` (store codes partitioned by cell) so a
-    query reads nprobe directories of byte codes + the rerank rows."""
+    encoder is deterministic. At full scale, store the codes partitioned
+    by cell (``ivf_cell_expr``) so a query reads nprobe directories of
+    byte codes + the rerank rows."""
     m = len(codebooks)
     _pq_validate(codebooks)
     dsub = dim // m

@@ -41,71 +41,3 @@ def salted_aggregate(
         F.sum("__n").alias(count_alias),
         *[F.sum(f"__s_{c}").alias(f"sum_{c}") for c in sums],
     )
-
-
-#: salt only VIRAL keys: measured r8 (SCALE.md) — the salted as-of join
-#: wins 2.48x at skew_factor ~900 but LOSES (~0.45x) at mild imbalance,
-#: because salting pays replication/extra-phase overhead on every row to
-#: relieve a straggler that has to actually exist.
-SALT_SKEW_THRESHOLD = 10.0
-
-
-def key_skew_factor(
-    df: DataFrame,
-    keys: list[str],
-    sample_fraction: float | None = None,
-    seed: int = 42,
-) -> float:
-    """The decision metric behind the *_auto helpers: how many times
-    heavier the heaviest key is than the uniform share
-    (max_count / (rows / distinct_keys)) — the same figure
-    ``maintenance.skew_profile`` reports per key, reduced to the one
-    number the salt rule needs. EAGER: runs one aggregation job.
-
-    At corpus scale pass ``sample_fraction`` (e.g. 0.01): a uniform
-    sample preserves the skew factor of any key heavy enough to matter
-    (a key holding 10% of 100 TB still holds ~10% of the sample), and
-    the profile job then costs 1% of a scan. Returns 0.0 for empty
-    input (never salt nothing)."""
-    s = df.sample(sample_fraction, seed=seed) if sample_fraction else df
-    row = (
-        s.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .agg(
-            F.max("__c").alias("mx"),
-            F.count(F.lit(1)).alias("nkeys"),
-            F.sum("__c").alias("rows"),
-        )
-        .first()
-    )
-    if not row or not row["rows"]:
-        return 0.0
-    return float(row["mx"]) / (float(row["rows"]) / float(row["nkeys"]))
-
-
-def salted_aggregate_auto(
-    df: DataFrame,
-    keys: list[str],
-    sums: list[str] | None = None,
-    n_salt: int = 16,
-    skew_threshold: float = SALT_SKEW_THRESHOLD,
-    sample_fraction: float | None = None,
-    seed: int = 42,
-    count_alias: str = "n_rows",
-) -> DataFrame:
-    """The profile-first salt rule as an operator a user can't misapply:
-    measures ``key_skew_factor`` (on a sample at scale) and picks the
-    salted two-phase plan only above ``skew_threshold`` — below it the
-    plain one-phase groupBy is strictly faster (SCALE.md r8: salting
-    LOSES at mild imbalance). Output schema is identical either way:
-    keys + count_alias + sum_<col>."""
-    factor = key_skew_factor(df, keys, sample_fraction, seed)
-    if factor > skew_threshold:
-        return salted_aggregate(
-            df, keys, sums, n_salt=n_salt, count_alias=count_alias, seed=seed
-        )
-    sums = sums or []
-    return df.groupBy(*keys).agg(
-        F.count(F.lit(1)).alias(count_alias),
-        *[F.sum(c).alias(f"sum_{c}") for c in sums],
-    )

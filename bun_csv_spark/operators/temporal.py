@@ -42,7 +42,7 @@ def asof_join(
     greatest ``ts`` <= left ``ts`` for the same ``key`` (ties include
     equal timestamps — right side sorts first at the same instant).
     ``key`` may be a single column or a composite list — the carry window
-    partitions on all of them (what ``asof_join_salted`` builds on).
+    partitions on all of them.
 
     ``right`` must carry ``key``, ``ts``, and ``right_cols`` (the payload
     to attach; include a copy of the right timestamp if the caller needs
@@ -117,78 +117,6 @@ def asof_join(
     return out.select(
         *keys, ts, *[c for c in lcols if c not in keys and c != ts],
         *[matched[c].alias(c) for c in right_cols],
-    )
-
-
-def asof_join_salted(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    ts: str,
-    right_cols: list[str],
-    n_salt: int = 8,
-    seed: int = 42,
-    tolerance: int | None = None,
-    right_ts_col: str | None = None,
-) -> DataFrame:
-    """Hot-key-safe as-of join (operators.skew composition the module
-    docstring promises): left rows scatter uniformly over ``n_salt``
-    sub-keys, right rows replicate to EVERY sub-key, and the carry window
-    partitions by ``(key, __salt)`` — a viral key's rows spread across
-    ``n_salt`` reducers instead of pinning one.
-
-    Semantics are identical to ``asof_join``: each left row still sees all
-    prior right rows for its key (the right side is replicated, not
-    split). Cost: right side x ``n_salt`` — the right/quote side is
-    normally orders of magnitude smaller than the event side, so this is
-    the standard replicate-the-small-side trade. Salt is seeded ``rand``
-    (uniform regardless of key skew; any distribution is correct since
-    every sub-key carries the full right history)."""
-    salts = F.array(*[F.lit(i) for i in range(n_salt)])
-    l2 = left.withColumn("__salt", F.floor(F.rand(seed) * n_salt).cast("int"))
-    r2 = right.withColumn("__salt", F.explode(salts))
-    out = asof_join(
-        l2, r2, [key, "__salt"], ts, right_cols, tolerance, right_ts_col
-    )
-    return out.drop("__salt")
-
-
-def asof_join_auto(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    ts: str,
-    right_cols: list[str],
-    n_salt: int = 8,
-    skew_threshold: float | None = None,
-    sample_fraction: float | None = None,
-    seed: int = 42,
-    tolerance: int | None = None,
-    right_ts_col: str | None = None,
-) -> DataFrame:
-    """Profile-first as-of join: measures the LEFT side's key skew
-    (``skew.key_skew_factor``, on a sample at scale via
-    ``sample_fraction``) and takes the salted path only above the
-    measured-at-r8 threshold (SCALE.md: salted wins 2.48x at
-    skew_factor ~900, loses ~0.45x at mild imbalance). Turns the
-    documented profile-then-salt rule into one call a user can't
-    misapply. EAGER: the profile runs one aggregation job before the
-    join is planned; semantics and output schema are ``asof_join``'s
-    either way."""
-    from bun_csv_spark.operators.skew import SALT_SKEW_THRESHOLD, key_skew_factor
-
-    if skew_threshold is None:
-        skew_threshold = SALT_SKEW_THRESHOLD
-    factor = key_skew_factor(left, [key], sample_fraction, seed)
-    if factor > skew_threshold:
-        return asof_join_salted(
-            left, right, key, ts, right_cols,
-            n_salt=n_salt, seed=seed,
-            tolerance=tolerance, right_ts_col=right_ts_col,
-        )
-    return asof_join(
-        left, right, key, ts, right_cols,
-        tolerance=tolerance, right_ts_col=right_ts_col,
     )
 
 

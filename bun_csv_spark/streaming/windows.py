@@ -21,11 +21,11 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# The confs a drain pins are session-global: two overlapping drains would
-# observe each other's values and a racy interleave could restore the
+# The conf a drain pins is session-global: two overlapping drains would
+# observe each other's value and a racy interleave could restore the
 # wrong one. `_pinned_drain` holds this lock for EVERY drain, pinned or
-# not, so drains in this process run one at a time. Code that sets these
-# confs outside `_pinned_drain` is not covered. RLock: a drain nested on
+# not, so drains in this process run one at a time. Code that sets the
+# conf outside `_pinned_drain` is not covered. RLock: a drain nested on
 # the same thread cannot deadlock.
 _PIN_LOCK = threading.RLock()
 
@@ -83,48 +83,31 @@ def _stream_state_partitions(
 
 
 @contextlib.contextmanager
-def _pinned_drain(
-    spark: SparkSession, parts: "int | None", provider: "str | None"
-):
-    """Hold ``_PIN_LOCK`` for one stream drain and pin the two
-    session-global confs it plans against, restoring the caller's values
-    after (also on error). ``parts`` sets ``spark.sql.shuffle.partitions``
-    (micro-batches plan against the live session conf); ``provider`` sets
-    ``spark.sql.streaming.stateStore.providerClass`` (read at query start
-    and frozen into the checkpoint). A None value leaves its conf alone,
-    but the lock is taken either way, so an unpinned drain never runs
-    while another drain has the session conf mutated.
+def _pinned_drain(spark: SparkSession, parts: "int | None"):
+    """Hold ``_PIN_LOCK`` for one stream drain and pin
+    ``spark.sql.shuffle.partitions`` to ``parts`` (micro-batches plan
+    against the live session conf), restoring the caller's value after
+    (also on error). ``parts=None`` leaves the conf alone, but the lock
+    is taken either way, so an unpinned drain never runs while another
+    drain has the session conf mutated.
 
-    ``provider=None`` keeps the HDFS-backed default: the r19 A/B measured
-    RocksDB on the bounded sf0.1 replays at PARITY on the join/watermark
-    gates (4.01 -> 3.91 / 3.74 -> 3.57 s) and WORSE on the small-state
-    ones (session 1.30 -> 1.53, hll 1.90 -> 3.36 s: native store setup +
-    SST churn dwarfs the tiny per-batch deltas); deployments with large
-    live-key state opt in with ``state_store_provider="rocksdb"`` (alias)
-    or a full provider class name, where changed-key-only snapshots pay
-    off."""
-    if provider == "rocksdb":
-        provider = (
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider"
-        )
-    pins = {}
-    if parts is not None:
-        pins["spark.sql.shuffle.partitions"] = str(int(parts))
-    if provider is not None:
-        pins["spark.sql.streaming.stateStore.providerClass"] = provider
+    The state store stays on the HDFS-backed default provider: the r19
+    A/B measured RocksDB on the bounded sf0.1 replays at parity on the
+    join/watermark gates (4.01 -> 3.91 / 3.74 -> 3.57 s) and worse on the
+    small-state ones (session 1.30 -> 1.53, hll 1.90 -> 3.36 s)."""
+    key = "spark.sql.shuffle.partitions"
     with _PIN_LOCK:
-        old = {key: spark.conf.get(key, None) for key in pins}
-        for key, value in pins.items():
-            spark.conf.set(key, value)
+        old = spark.conf.get(key, None)
+        if parts is not None:
+            spark.conf.set(key, str(int(parts)))
         try:
             yield
         finally:
-            for key, value in old.items():
-                if value is None:
+            if parts is not None:
+                if old is None:
                     spark.conf.unset(key)
                 else:
-                    spark.conf.set(key, value)
+                    spark.conf.set(key, old)
 
 
 def tumbling_counts(
@@ -352,7 +335,6 @@ def run_stream_to_table(
     normalize_ts: bool = False,
     max_files_per_trigger: int | None = None,
     state_partitions: int | None = None,
-    state_store_provider: str | None = None,
 ) -> DataFrame:
     """Replay a static parquet file through readStream, apply ``transform``
     (DataFrame -> DataFrame), drain synchronously into an in-memory table,
@@ -402,7 +384,7 @@ def run_stream_to_table(
     out = transform(stream)
     name = f"stream_out_{uuid.uuid4().hex[:8]}"
     parts = _stream_state_partitions(spark, parquet_path, state_partitions)
-    with _pinned_drain(spark, parts, state_store_provider):
+    with _pinned_drain(spark, parts):
         q = (
             out.writeStream.outputMode(output_mode)
             .format("memory")
@@ -427,7 +409,6 @@ def run_stream_polling(
     max_files_per_trigger: int | None = None,
     timeout_s: float = 120.0,
     state_partitions: int | None = None,
-    state_store_provider: str | None = None,
 ) -> DataFrame:
     """Drain variant for stateful transforms carrying
     ``ProcessingTimeTimeout``: with processing-time timers in play the
@@ -450,7 +431,7 @@ def run_stream_polling(
     out = transform(stream)
     name = f"stream_poll_{_uuid.uuid4().hex[:8]}"
     parts = _stream_state_partitions(spark, parquet_path, state_partitions)
-    with _pinned_drain(spark, parts, state_store_provider):
+    with _pinned_drain(spark, parts):
         q = (
             out.writeStream.outputMode(output_mode)
             .format("memory")
@@ -527,61 +508,3 @@ def stream_static_enrich(
     event stream' shape; Catalyst broadcasts the dim side under the
     session threshold exactly as in batch."""
     return stream.join(dim, on, how)
-
-
-def run_stream_checkpointed(
-    spark: SparkSession,
-    parquet_dir: str,
-    transform,
-    checkpoint_dir: str,
-    output_mode: str = "complete",
-    state_partitions: int | None = None,
-    state_store_provider: str | None = None,
-) -> "list":
-    """One availableNow pass over whatever files are in ``parquet_dir``
-    RIGHT NOW, carrying aggregation state across CALLS through the
-    checkpoint — the scheduled-incremental-job pattern (a cron'd
-    availableNow run is Databricks' own recommendation for periodic
-    ingestion). Each call processes only files the checkpoint's source
-    log hasn't seen, restores operator state, and returns the final
-    complete-mode snapshot as a list of Rows (via foreachBatch — the
-    memory sink does not support checkpoint recovery, foreachBatch
-    does, keyed by batch id).
-
-    Scale notes: state lives in the checkpoint's state store, sized by
-    the aggregation keys, not by history; re-running after a crash
-    re-emits the last batch id to the sink, so downstream writes must
-    key on (batch_id) for idempotence — exactly what this helper's
-    snapshot-replace semantics model. The foreachBatch ``collect()``
-    below is bounded by the AGGREGATE-STATE size (one row per live
-    aggregation key in complete mode), never by the input stream — the
-    same documented-bound standard as ``append_csv_file`` /
-    ``EditLog.get_cell``; a production job would write ``batch_df`` to a
-    table instead of collecting."""
-    schema = spark.read.parquet(parquet_dir).schema
-    stream = spark.readStream.schema(schema).parquet(parquet_dir)
-    out = transform(stream)
-    snapshot: dict = {}
-
-    def sink(batch_df, batch_id):
-        snapshot["rows"] = batch_df.collect()
-        snapshot["batch_id"] = batch_id
-
-    # the partition count only binds on the checkpoint's FIRST commit
-    # (stateful queries resume with the checkpoint's own count); the
-    # derivation is still applied so fresh checkpoints size sensibly
-    parts = _stream_state_partitions(spark, parquet_dir, state_partitions)
-    with _pinned_drain(spark, parts, state_store_provider):
-        q = (
-            out.writeStream.outputMode(output_mode)
-            .foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination(300)
-        finally:
-            if q.isActive:
-                q.stop()
-    return snapshot.get("rows", [])

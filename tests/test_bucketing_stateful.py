@@ -3,7 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
-from bun_csv_spark.operators.bucketing import bucketed_join, write_bucketed
+from bun_csv_spark.operators.bucketing import write_bucketed
 from bun_csv_spark.streaming.windows import run_stream_to_table, stateful_user_counts
 
 
@@ -28,7 +28,8 @@ def test_bucketed_join_has_no_shuffle(spark):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        joined = bucketed_join(spark, "bk_a", "bk_b", "k")
+        # Catalyst reads the bucket spec from the catalog
+        joined = spark.table("bk_a").join(spark.table("bk_b"), "k")
         plan = plan_of(joined)
         import re
 

@@ -183,3 +183,65 @@ def test_greedy_skip_unicode_whitespace(spark, write_csv_file):
     path = write_csv_file("a,b\n1,x\n\u00a0,\u00a0\u00a0\n\ufeff,\t\n2,y\n")
     df = read_csv(spark, path, CSVOptions(skip_empty_rows="greedy"))
     assert [r.a for r in df.collect()] == ["1", "2"]
+
+
+def test_read_csv_url_headers_rewrite_and_utf16(spark, tmp_path, monkeypatch):
+    """URL source against a loopback HTTP server: request headers reach
+    the server, ``before_first_chunk`` rewrites the downloaded text, and
+    a UTF-16LE body (with BOM) declared as such reads back exactly —
+    the driver-side transcode writes UTF-8, so the distributed read must
+    not decode the temp file with the source codec again."""
+    import http.server
+    import tempfile
+    import threading
+
+    from bun_csv_spark.sources.csv_reader import read_csv_url
+
+    # read_csv_url leaves its downloaded copy behind; keep it in tmp_path
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+
+    bodies = {
+        "/plain.csv": b"a,b\n1,x\n2,y\n",
+        "/utf16.csv": b"\xff\xfe"
+        + "name,city\nZoë,Köln\n".encode("utf-16-le"),
+    }
+    seen = []
+
+    class Handler(http.server.BaseHTTPRequestHandler):
+        def do_GET(self):
+            seen.append(self.headers.get("X-Token"))
+            body = bodies[self.path]
+            self.send_response(200)
+            self.send_header("Content-Length", str(len(body)))
+            self.end_headers()
+            self.wfile.write(body)
+
+        def log_message(self, *args):
+            pass
+
+    server = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+    threading.Thread(target=server.serve_forever, daemon=True).start()
+    base = f"http://127.0.0.1:{server.server_port}"
+    try:
+        df = read_csv_url(
+            spark,
+            f"{base}/plain.csv",
+            request_headers={"X-Token": "t0k"},
+            before_first_chunk=lambda text: text.replace("x", "z"),
+        )
+        assert seen == ["t0k"]
+        assert [r.asDict() for r in df.orderBy("a").collect()] == [
+            {"a": "1", "b": "z"},
+            {"a": "2", "b": "y"},
+        ]
+
+        for enc in ("auto", "UTF-16LE"):
+            df = read_csv_url(
+                spark, f"{base}/utf16.csv", CSVOptions(encoding=enc)
+            )
+            assert [r.asDict() for r in df.collect()] == [
+                {"name": "Zoë", "city": "Köln"}
+            ], enc
+    finally:
+        server.shutdown()
+        server.server_close()

@@ -1,11 +1,10 @@
-"""CDC changelog apply, Bloom semi-join, Z-order clustering."""
+"""CDC changelog apply, Bloom semi-join, Z-order keys."""
 
 from pyspark.sql import functions as F
 
 from bun_csv_spark.operators.maintenance import (
     apply_changelog,
     bloom_semi_join,
-    cluster_by_zorder,
     zorder_value,
 )
 
@@ -86,31 +85,6 @@ def test_zorder_value_interleave():
 
     for (a, b), z in got.items():
         assert z == interleave(a, b), (a, b)
-
-
-def test_cluster_by_zorder_narrows_file_ranges(spark):
-    import random
-
-    rng = random.Random(11)
-    rows = [(rng.randrange(1000), rng.randrange(1000)) for _ in range(4000)]
-    df = spark.createDataFrame(rows, "x long, y long")
-    clustered = cluster_by_zorder(df, "x", "y", 0, 1000, 0, 1000, bits=8, n_files=8)
-
-    def mean_area(frame):
-        stats = (
-            frame.withColumn("p", F.spark_partition_id())
-            .groupBy("p")
-            .agg(
-                (F.max("x") - F.min("x")).alias("rx"),
-                (F.max("y") - F.min("y")).alias("ry"),
-            )
-            .collect()
-        )
-        return sum(r.rx * r.ry for r in stats) / len(stats)
-
-    # random layout: every partition spans ~the whole 1000x1000 square;
-    # z-ordered partitions cover compact sub-regions
-    assert mean_area(clustered) < mean_area(df.repartition(8)) * 0.5
 
 
 def test_agg_state_merge_equals_direct(spark):

@@ -49,34 +49,21 @@ def test_daily_state_update_kmv_k_mismatch_raises(spark, tmp_path):
     a different k must raise instead of silently truncating states and
     skewing every (k-1)*KMV_DOMAIN estimate."""
     from bun_csv_spark.operators.maintenance import (
+        _gen_meta,
+        current_generation,
         daily_state_update,
-        state_kmv_params,
     )
 
     state_dir = str(tmp_path / "state")
     daily_state_update(
         spark, _nightly_day(spark, 0), state_dir, *_NIGHTLY_ARGS, kmv_k=32
     )
-    assert state_kmv_params(spark, state_dir) == (32, "kmv")
+    meta = _gen_meta(spark, state_dir, current_generation(spark, state_dir))
+    assert (meta["kmv_k"], meta["kmv_salt"]) == (32, "kmv")
     with pytest.raises(ValueError, match="k=32"):
         daily_state_update(
             spark, _nightly_day(spark, 1), state_dir, *_NIGHTLY_ARGS, kmv_k=16
         )
-
-
-def test_state_overlap_kmv_k_mismatch_raises(spark, tmp_path):
-    """state_overlap_by_key must validate the caller's kmv_k against
-    both dirs' recorded build parameters."""
-    from bun_csv_spark.operators.maintenance import (
-        daily_state_update,
-        state_overlap_by_key,
-    )
-
-    da, db = str(tmp_path / "a"), str(tmp_path / "b")
-    daily_state_update(spark, _nightly_day(spark, 0), da, *_NIGHTLY_ARGS, kmv_k=32)
-    daily_state_update(spark, _nightly_day(spark, 1), db, *_NIGHTLY_ARGS, kmv_k=32)
-    with pytest.raises(ValueError, match="k=32"):
-        state_overlap_by_key(spark, da, db, ["k"], 64)
 
 
 def test_partial_kmv_generation_not_selected(spark, tmp_path):

@@ -580,25 +580,19 @@ def test_stream_state_partitions_sizing_rule(spark, tmp_path, monkeypatch):
 
 
 def test_pinned_shuffle_partitions_restores_on_error(spark):
-    """The drain pin is scoped: the caller's shuffle-partition and
-    state-store-provider confs survive both the happy path and an
-    exception inside the drain. Every drain holds ``_PIN_LOCK``, so an
-    unpinned drain waits while another thread holds the pins."""
+    """The drain pin is scoped: the caller's shuffle-partition conf
+    survives both the happy path and an exception inside the drain.
+    Every drain holds ``_PIN_LOCK``, so an unpinned drain waits while
+    another thread holds the pins."""
     from bun_csv_spark.streaming.windows import _PIN_LOCK, _pinned_drain
 
     key = "spark.sql.shuffle.partitions"
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
     before = spark.conf.get(key)
-    provider_before = spark.conf.get(provider_key, None)
-    with _pinned_drain(spark, 5, "rocksdb"):
+    with _pinned_drain(spark, 5):
         assert spark.conf.get(key) == "5"
-        assert spark.conf.get(provider_key).endswith(
-            "RocksDBStateStoreProvider"
-        )
     assert spark.conf.get(key) == before
-    assert spark.conf.get(provider_key, None) == provider_before
     with pytest.raises(RuntimeError):
-        with _pinned_drain(spark, 7, None):
+        with _pinned_drain(spark, 7):
             assert spark.conf.get(key) == "7"
             raise RuntimeError("boom")
     assert spark.conf.get(key) == before
@@ -611,7 +605,7 @@ def test_pinned_shuffle_partitions_restores_on_error(spark):
             release.wait(30)
 
     def unpinned_drain():
-        with _pinned_drain(spark, None, None):
+        with _pinned_drain(spark, None):
             entered.set()
 
     holder = threading.Thread(target=hold_pins)

@@ -107,74 +107,6 @@ def test_kmv_merge_by_associative_and_equals_union_state(spark):
     assert per_group["d1"] == k  # estimator path actually exercised
 
 
-# --- auto-salt decision helpers ---------------------------------------------
-
-
-def _skewed_events(spark, n, hot_share_pct):
-    """(k, ts, v): `hot_share_pct`% of rows on key 0, rest uniform 1..99."""
-    return spark.range(n).select(
-        F.when(F.col("id") % 100 < hot_share_pct, F.lit(0))
-        .otherwise(F.pmod(F.xxhash64("id"), F.lit(99)) + 1)
-        .alias("k"),
-        F.col("id").alias("ts"),
-        (F.col("id") % 7).cast("double").alias("v"),
-    )
-
-
-def test_key_skew_factor_measures_both_regimes(spark):
-    from bun_csv_spark.operators.skew import key_skew_factor
-
-    hot = _skewed_events(spark, 20_000, 90)
-    mild = _skewed_events(spark, 20_000, 2)
-    assert key_skew_factor(hot, ["k"]) > 50
-    assert key_skew_factor(mild, ["k"]) < 5
-    assert key_skew_factor(hot.limit(0), ["k"]) == 0.0  # empty: never salt
-
-
-def test_salted_aggregate_auto_picks_by_threshold(spark):
-    """Above the threshold the plan must be the two-phase salted rewrite
-    (visible as the seeded rand() salt in the analyzed plan); below it
-    the plain one-phase groupBy (no rand). Results must be identical to
-    the plain aggregate in BOTH regimes."""
-    from bun_csv_spark.operators.skew import salted_aggregate_auto
-
-    def plan_has_salt(df):
-        return "rand(" in df._jdf.queryExecution().analyzed().toString()
-
-    for pct, expect_salt in ((90, True), (2, False)):
-        df = _skewed_events(spark, 20_000, pct)
-        out = salted_aggregate_auto(df, ["k"], ["v"])
-        assert plan_has_salt(out) is expect_salt, pct
-        truth = df.groupBy("k").agg(
-            F.count(F.lit(1)).alias("n_rows"), F.sum("v").alias("sum_v")
-        )
-        assert sorted(map(tuple, out.collect())) == sorted(
-            map(tuple, truth.collect())
-        ), pct
-
-
-def test_asof_join_auto_picks_by_threshold_and_matches_plain(spark):
-    from bun_csv_spark.operators.temporal import asof_join, asof_join_auto
-
-    r = spark.range(0, 200).select(
-        F.pmod(F.col("id"), F.lit(100)).alias("k"),
-        (F.col("id") * 97).alias("ts"),
-        (F.col("id") * 1.5).alias("price"),
-    )
-
-    def plan_has_salt(df):
-        return "rand(" in df._jdf.queryExecution().analyzed().toString()
-
-    for pct, expect_salt in ((90, True), (2, False)):
-        left = _skewed_events(spark, 5_000, pct)
-        auto = asof_join_auto(left, r, "k", "ts", ["price"])
-        assert plan_has_salt(auto) is expect_salt, pct
-        plain = asof_join(left, r, "k", "ts", ["price"])
-        assert sorted(map(tuple, auto.collect())) == sorted(
-            map(tuple, plain.collect())
-        ), pct
-
-
 # --- 4:2:0 JPEG --------------------------------------------------------------
 
 
@@ -279,9 +211,13 @@ def test_daily_state_update_kmv_family_equals_single_pass(spark, tmp_path):
     """kmv_k threads the per-key bottom-k family through build, merge,
     and persistence: three nightly updates must land on EXACTLY the
     per-key state one pass over all three days builds (the mergeable-
-    family law, persisted), alongside the four core families."""
+    family law, persisted), alongside the four core families, and a
+    read-only load of the dir serves that same state."""
     from bun_csv_spark.functions.sketches import kmv_state_by
-    from bun_csv_spark.operators.maintenance import daily_state_update
+    from bun_csv_spark.operators.maintenance import (
+        daily_state_update,
+        load_pipeline_state,
+    )
 
     state_dir = str(tmp_path / "state")
     for d in range(3):
@@ -304,6 +240,12 @@ def test_daily_state_update_kmv_family_equals_single_pass(spark, tmp_path):
     }
     assert max(counts.values()) == 32  # bounded AND the estimator path hit
 
+    st = load_pipeline_state(spark, state_dir)
+    assert set(st) == {"agg", "hll", "hist", "cm", "kmv"}
+    assert sorted((r["k"], r["h"]) for r in st["kmv"].collect()) == want
+    with pytest.raises(ValueError, match="no complete generation"):
+        load_pipeline_state(spark, str(tmp_path / "nope"))
+
 
 def test_daily_state_update_kmv_family_cannot_appear_late(spark, tmp_path):
     """A state dir bootstrapped WITHOUT the kmv family has already
@@ -317,38 +259,6 @@ def test_daily_state_update_kmv_family_cannot_appear_late(spark, tmp_path):
         daily_state_update(
             spark, _nightly_day(spark, 1), state_dir, *_NIGHTLY_ARGS, kmv_k=32
         )
-
-
-def test_state_overlap_by_key_from_persisted_dirs(spark, tmp_path):
-    """Two independently-maintained state dirs -> per-key overlap from
-    their kmv families alone. Keys built from overlapping user ranges:
-    the shared keys must show high Jaccard, and the figures must equal
-    calling kmv_set_estimates_by on directly-built states."""
-    from bun_csv_spark.functions.sketches import kmv_set_estimates_by, kmv_state_by
-    from bun_csv_spark.operators.maintenance import (
-        daily_state_update,
-        load_pipeline_state,
-        state_overlap_by_key,
-    )
-
-    da, db = str(tmp_path / "a"), str(tmp_path / "b")
-    daily_state_update(spark, _nightly_day(spark, 0), da, *_NIGHTLY_ARGS, kmv_k=32)
-    daily_state_update(spark, _nightly_day(spark, 1), da, *_NIGHTLY_ARGS, kmv_k=32)
-    daily_state_update(spark, _nightly_day(spark, 1), db, *_NIGHTLY_ARGS, kmv_k=32)
-    daily_state_update(spark, _nightly_day(spark, 2), db, *_NIGHTLY_ARGS, kmv_k=32)
-
-    got = state_overlap_by_key(spark, da, db, ["k"], 32)
-    ua = _nightly_day(spark, 0).unionByName(_nightly_day(spark, 1))
-    ub = _nightly_day(spark, 1).unionByName(_nightly_day(spark, 2))
-    want = kmv_set_estimates_by(
-        kmv_state_by(ua, ["k"], "u", 32), kmv_state_by(ub, ["k"], "u", 32), ["k"], 32
-    )
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-
-    st = load_pipeline_state(spark, da)
-    assert set(st) == {"agg", "hll", "hist", "cm", "kmv"}
-    with pytest.raises(ValueError, match="no complete generation"):
-        load_pipeline_state(spark, str(tmp_path / "nope"))
 
 
 def test_jpeg_single_component_scan_is_noninterleaved():

@@ -141,41 +141,6 @@ def test_ann_quantized_matches_brute_force(spark, vecs):
     assert quant == brute
 
 
-def test_ivf_partitioned_store_prunes_and_matches(spark, vecs, tmp_path):
-    """The partitioned IVF store serves queries through partition pruning
-    (PartitionFilters carries the probe cells) and returns the same rows
-    as the in-flight IVF query."""
-    from bun_csv_spark.operators.similarity import (
-        ann_ivf_partitioned_topk,
-        ann_ivf_topk,
-        ivf_write_partitioned,
-    )
-
-    centroids = [
-        (int(r.vec_id), list(r.embedding))
-        for r in vecs.filter("vec_id < 8").collect()
-    ]
-    path = str(tmp_path / "ivf")
-    ivf_write_partitioned(vecs, path, centroids, "vec_id", "embedding")
-
-    qvec = list(vecs.filter("vec_id = 5").first()["embedding"])
-    out = ann_ivf_partitioned_topk(
-        spark, path, qvec, centroids, k=5, nprobe=2
-    )
-    plan = out._sc._jvm.PythonSQLUtils.explainString(
-        out._jdf.queryExecution(), "formatted"
-    )
-    assert "PartitionFilters" in plan
-    assert "cell" in plan.split("PartitionFilters", 1)[1][:200]
-
-    flight = [
-        (r.vec_id, r.cosine_sim)
-        for r in ann_ivf_topk(vecs, qvec, k=5, n_centroids=8, nprobe=2).collect()
-    ]
-    stored = [(r.vec_id, r.cosine_sim) for r in out.collect()]
-    assert stored == flight
-
-
 def test_knn_join_bucketed_no_cartesian_and_recall(spark, vecs):
     """The bucketed kNN join must (a) never plan a cartesian product and
     (b) recover most of the brute-force neighbor pairs via multi-probe."""

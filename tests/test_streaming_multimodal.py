@@ -506,70 +506,3 @@ def test_watermark_drop_is_window_end_based(spark, tmp_path):
     assert all(h != 8 for h, _ in rows), (prog, rows)
 
 
-def test_streaming_checkpoint_recovery(spark, tmp_path):
-    """State must survive a full stop/restart through the checkpoint:
-    the second availableNow run sees ONLY the new file (source log) yet
-    emits counts that include the first run's rows (restored state) —
-    and nothing is double-counted."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from bun_csv_spark.streaming.windows import run_stream_checkpointed
-
-    src = tmp_path / "src"
-    src.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-
-    def write_phase(name, rows):
-        build = tmp_path / f"__b_{name}"
-        spark.createDataFrame(rows, ["k", "v"]).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(build))
-        part = next(build.glob("part-*.parquet"))
-        shutil.move(str(part), str(src / f"{name}.parquet"))
-
-    def transform(stream):
-        return stream.groupBy("k").agg(
-            F.count(F.lit(1)).alias("n"), F.sum("v").alias("s")
-        )
-
-    write_phase("p0", [("a", 1), ("a", 2), ("b", 10)])
-    first = {r["k"]: (r["n"], r["s"]) for r in
-             run_stream_checkpointed(spark, str(src), transform, ckpt)}
-    assert first == {"a": (2, 3), "b": (1, 10)}
-
-    write_phase("p1", [("a", 4), ("c", 7)])
-    second = {r["k"]: (r["n"], r["s"]) for r in
-              run_stream_checkpointed(spark, str(src), transform, ckpt)}
-    # restored state + new file, no recount of p0
-    assert second == {"a": (3, 7), "b": (1, 10), "c": (1, 7)}
-
-
-def test_streaming_checkpoint_noop_when_no_new_files(spark, tmp_path):
-    """A third run with NO new files must not fail and must not lose or
-    duplicate state (availableNow with an empty backlog)."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from bun_csv_spark.streaming.windows import run_stream_checkpointed
-
-    src = tmp_path / "src"
-    src.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    build = tmp_path / "__b"
-    spark.createDataFrame([("x", 1)], ["k", "v"]).coalesce(1).write.parquet(
-        str(build)
-    )
-    shutil.move(str(next(build.glob("part-*.parquet"))), str(src / "f0.parquet"))
-
-    def transform(stream):
-        return stream.groupBy("k").agg(F.count(F.lit(1)).alias("n"))
-
-    r1 = run_stream_checkpointed(spark, str(src), transform, ckpt)
-    r2 = run_stream_checkpointed(spark, str(src), transform, ckpt)
-    assert {x["k"]: x["n"] for x in r1} == {"x": 1}
-    # no new data -> no new batch; the helper returns the empty snapshot,
-    # which models "nothing to re-emit" (downstream keeps its last state)
-    assert r2 == [] or {x["k"]: x["n"] for x in r2} == {"x": 1}

@@ -36,6 +36,18 @@ def test_asof_backward_with_ties(trades, quotes):
     assert out["t3"] == (None, None)  # B's only quote is later -> no match
     assert out["tc"] == (None, None)  # no quotes at all for C
 
+    # a composite key carries per (sym, venue): A's ts=200 quote sits on
+    # another venue, so t2 falls back to A's latest quote on its own
+    tv = trades.withColumn("venue", F.lit("x"))
+    qv = q.withColumn("venue", F.when(F.col("ts") == 200, "y").otherwise("x"))
+    out = {
+        r.trade_id: (r.qts, r.px)
+        for r in asof_join(
+            tv, qv, key=["sym", "venue"], ts="ts", right_cols=["qts", "px"]
+        ).collect()
+    }
+    assert out["t1"] == (100, 1.5) and out["t2"] == (100, 1.5)
+
 
 def test_asof_tolerance(trades, quotes):
     q = quotes.select("sym", "ts", F.col("ts").alias("qts"), "px")
@@ -115,48 +127,3 @@ def test_interval_overlap_join_exact_and_deduped(spark):
     assert pairs == [(1, 10, 50), (1, 11, 5), (3, 13, 0)]
 
 
-def test_asof_salted_matches_unsalted_on_hot_key(spark):
-    """asof_join_salted (skew composition) must return exactly the plain
-    asof_join result on a dataset where one key owns ~90% of rows, and its
-    physical plan must window on (key, __salt) — no single reducer owns
-    the hot key."""
-    from bun_csv_spark.operators.temporal import asof_join_salted
-
-    hot = [("HOT", 10 * i + 5, f"e{i}") for i in range(450)]
-    cold = [(f"K{i}", 10 * i + 5, f"c{i}") for i in range(50)]
-    left = spark.createDataFrame(hot + cold, "k string, ts long, eid string")
-    right = spark.createDataFrame(
-        [("HOT", 10 * i, float(i)) for i in range(0, 450, 3)]
-        + [(f"K{i}", 10 * i, 1000.0 + i) for i in range(50)],
-        "k string, ts long, px double",
-    )
-    r = right.select("k", "ts", F.col("ts").alias("rts"), "px")
-
-    plain = asof_join(left, r, "k", "ts", ["rts", "px"])
-    salted = asof_join_salted(left, r, "k", "ts", ["rts", "px"], n_salt=4)
-    exp = {t.eid: (t.rts, t.px) for t in plain.collect()}
-    got = {t.eid: (t.rts, t.px) for t in salted.collect()}
-    assert got == exp and len(got) == 500
-
-    plan = salted._jdf.queryExecution().executedPlan().toString()
-    win = [ln for ln in plan.splitlines() if "Window" in ln and "__m_" in ln]
-    assert win and all("__salt" in ln for ln in win), win
-
-
-def test_asof_salted_tolerance(spark):
-    from bun_csv_spark.operators.temporal import asof_join_salted
-
-    left = spark.createDataFrame(
-        [("A", 100, "t1"), ("A", 500, "t2")], "k string, ts long, eid string"
-    )
-    right = spark.createDataFrame(
-        [("A", 90, 1.0)], "k string, ts long, px double"
-    ).select("k", "ts", F.col("ts").alias("rts"), "px")
-    out = {
-        t.eid: t.px
-        for t in asof_join_salted(
-            left, right, "k", "ts", ["rts", "px"],
-            n_salt=3, tolerance=50, right_ts_col="rts",
-        ).collect()
-    }
-    assert out == {"t1": 1.0, "t2": None}
