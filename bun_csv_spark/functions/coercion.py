@@ -120,41 +120,43 @@ def dynamic_type(col: Column | str) -> Column:
     )
 
 
+def _quoted(name: str) -> str:
+    """``name`` as a SQL identifier, whatever characters it holds."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _class_code_sql(column: str) -> str:
+    """SQL text of one value's inference class: NULL or "" -> 0, a
+    boolean word -> 1, a ``NUMBER_RE`` number -> 2, anything else -> 4.
+    The two word sets are disjoint, so OR-ing a column's codes gives 1
+    (all boolean), 2 (all number) or anything else (string). The regex is
+    a raw literal: a plain SQL string literal would eat its backslashes."""
+    s = f"CAST({_quoted(column)} AS STRING)"
+    return (
+        f"CASE WHEN {s} IS NULL OR {s} = '' THEN 0"
+        f" WHEN lower({s}) IN ('true', 'false') THEN 1"
+        f" WHEN {s} RLIKE r'{NUMBER_RE}' THEN 2 ELSE 4 END"
+    )
+
+
 def infer_column_types(df: DataFrame, columns: list[str]) -> dict[str, str]:
     """Per-COLUMN inference for many columns in ONE aggregate pass:
     'boolean' | 'number' | 'string' per column.
 
     A column conforms to a type when every non-null, non-empty value
-    parses. All columns' conformance counters ride a single map-side
-    combinable aggregation — one scan total, not one scan per column
-    (a 16-column table at 100 TB must not pay 16 passes)."""
+    parses, and it needs at least one such value. Each column is one
+    ``bit_or`` of its values' class codes (``_class_code_sql``), and all
+    of them ride a single map-side combinable aggregation: one scan
+    total, not one scan per column (a 16-column table at 100 TB must not
+    pay 16 passes). The aggregates are SQL text, one parse for the lot
+    rather than a Python ``Column`` tree per column."""
     if not columns:
         return {}
-    aggs = []
-    for i, c in enumerate(columns):
-        s = F.col(c).cast("string")
-        non_empty = s.isNotNull() & (s != "")
-        aggs.append(F.sum(F.when(non_empty, 1).otherwise(0)).alias(f"n_{i}"))
-        aggs.append(
-            F.sum(
-                F.when(non_empty & ~F.lower(s).isin("true", "false"), 1).otherwise(0)
-            ).alias(f"nb_{i}")
-        )
-        aggs.append(
-            F.sum(F.when(non_empty & ~s.rlike(NUMBER_RE), 1).otherwise(0)).alias(
-                f"nn_{i}"
-            )
-        )
-    row = df.agg(*aggs).first()
-    out = {}
-    for i, c in enumerate(columns):
-        if row[f"n_{i}"] and row[f"nb_{i}"] == 0:
-            out[c] = "boolean"
-        elif row[f"n_{i}"] and row[f"nn_{i}"] == 0:
-            out[c] = "number"
-        else:
-            out[c] = "string"
-    return out
+    row = df.selectExpr(
+        *[f"bit_or({_class_code_sql(c)}) AS c{i}" for i, c in enumerate(columns)]
+    ).first()
+    kinds = {1: "boolean", 2: "number"}
+    return {c: kinds.get(row[i], "string") for i, c in enumerate(columns)}
 
 
 def infer_column_type(df: DataFrame, column: str) -> str:
@@ -185,11 +187,11 @@ def apply_dynamic_typing(
     inferred = infer_column_types(df, targets)  # ONE scan for all columns
     casts = {}
     for c in targets:
-        cleaned = F.when(F.col(c) == "", None).otherwise(F.col(c))
+        cleaned = f"CASE WHEN {_quoted(c)} = '' THEN NULL ELSE {_quoted(c)} END"
         if inferred[c] == "boolean":
-            casts[c] = F.lower(cleaned) == "true"
+            casts[c] = F.expr(f"lower({cleaned}) = 'true'")
         elif inferred[c] == "number":
-            casts[c] = cleaned.try_cast("double")
+            casts[c] = F.expr(f"try_cast({cleaned} AS DOUBLE)")
         else:
-            casts[c] = cleaned
+            casts[c] = F.expr(cleaned)
     return df.withColumns(casts)

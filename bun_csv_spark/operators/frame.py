@@ -61,8 +61,8 @@ def with_row_index(df: DataFrame, name: str = ROW_IDX) -> DataFrame:
     (reference: src/ts/row.ts:88-89). Spark has no implicit row identity;
     this delegates to ``operators.util.with_file_order_index`` — a pure
     DataFrame-API index (spark_partition_id + a tiny per-partition count
-    aggregation + broadcast offset join; no ``.rdd``, no Python hop, no
-    shuffle). One extra stats job; at 100 TB prefer carrying a natural key
+    aggregation + literal per-partition offsets; no ``.rdd``, no Python
+    hop, no shuffle, no broadcast). One extra stats job; at 100 TB prefer carrying a natural key
     instead when one exists.
     """
     from bun_csv_spark.operators.util import with_file_order_index

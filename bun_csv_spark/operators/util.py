@@ -14,7 +14,7 @@ def with_file_order_index(
     """Attach a deterministic 0-based row index — pure DataFrame API.
 
     Replaces ``df.rdd.zipWithIndex()`` (which round-trips every row through
-    Python serialization) with three JVM-side steps:
+    Python serialization) with JVM-side steps:
 
     1. tag rows with ``spark_partition_id()`` + ``monotonically_increasing_id()``;
     2. one tiny aggregation (one row per task — bounded by cluster
@@ -23,11 +23,13 @@ def with_file_order_index(
        ``_metadata.file_block_start`` to order partitions by file offset;
        default orders by partition id, matching zipWithIndex); cumulative
        offsets are computed on the driver;
-    3. broadcast-join the offsets back. When ``monotonically_increasing_id``
-       is contiguous within every partition (its documented behavior —
-       verified from the collected stats), the index is
-       ``offset + (mid - partition_min_mid)`` with NO shuffle at all;
-       otherwise fall back to a partition-local ``row_number`` window.
+    3. the offsets go back into the plan as a literal array indexed by
+       partition id: no second table, no broadcast. When
+       ``monotonically_increasing_id`` is contiguous within every
+       partition (its documented behavior — verified from the collected
+       stats), the index is ``mid + (offset - partition_min_mid)`` with NO
+       shuffle at all; otherwise fall back to a partition-local
+       ``row_number`` window.
 
     Deterministic whenever the upstream plan is (file scans are). Like
     zipWithIndex this evaluates the plan twice (stats job + real job).
@@ -50,25 +52,29 @@ def with_file_order_index(
     )
     stats.sort(key=lambda r: (r["__ordk"], r["__pid"]))
     contiguous = all(r["__mx"] - r["__mn"] + 1 == r["__cnt"] for r in stats)
-    offsets, acc = [], 0
+    width = max((r["__pid"] for r in stats), default=0) + 1
+    offset, first_mid, acc = [0] * width, [0] * width, 0
     for r in stats:
-        offsets.append((r["__pid"], acc, r["__mn"]))
+        offset[r["__pid"]], first_mid[r["__pid"]] = acc, r["__mn"]
         acc += r["__cnt"]
-    offs = df.sparkSession.createDataFrame(
-        offsets, "__pid int, __off long, __pmn long"
-    )
-    out = base.join(F.broadcast(offs), "__pid")
+
+    def per_partition(values: list[int]):
+        # one SQL literal, however many partitions: a py4j call per
+        # element would cost more than the stats job
+        return F.expr(
+            f"element_at(array({', '.join(f'{v}L' for v in values)}), __pid + 1)"
+        )
+
     if contiguous:
-        idx = F.col("__off") + (F.col("__mid") - F.col("__pmn"))
+        idx = F.col("__mid") + per_partition(
+            [o - m for o, m in zip(offset, first_mid)]
+        )
     else:  # pragma: no cover — mid has been contiguous on every Spark release
         from pyspark.sql import Window
 
         w = Window.partitionBy("__pid").orderBy("__mid")
-        idx = F.col("__off") + F.row_number().over(w) - 1
-    return (
-        out.withColumn(name, idx.cast("long"))
-        .drop("__pid", "__mid", "__off", "__pmn")
-    )
+        idx = per_partition(offset) + F.row_number().over(w) - 1
+    return base.withColumn(name, idx.cast("long")).drop("__pid", "__mid")
 
 
 def stratified_sample(

@@ -16,6 +16,16 @@ The reference is an option-rich CSV parser (reference: src/ts/parser.ts:
   slow-but-exact mode. Not for multiline records (quoted newlines) —
   those force the native reader with multiLine=true.
 
+  Lines keep file order by a job-free key (split offset, position in
+  the partition) whenever the header / skipFirstNLines cut is resolved
+  driver-side inside a single local file's first split. A dense
+  file-order line number (``operators.util.with_file_order_index``, one
+  stats job) is built only for ``with_row_index``, for directories and
+  non-local inputs, and for a cut the driver could not place. The parse
+  is cached only by ``read_csv_with_errors``, whose data and errors
+  frames read it twice; ``read_csv`` builds no errors frame and caches
+  nothing, so a read that is consumed once runs the parse once.
+
 Null semantics replicated exactly (reference row.ts:318-321, 300-317):
 an UNQUOTED empty field is NULL; a QUOTED empty field ``""`` is the empty
 string. The exact-path tokenizer distinguishes them directly; the native
@@ -30,6 +40,7 @@ positional col0..colN names.
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass
 from typing import Callable, Iterator
 
@@ -37,10 +48,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from bun_csv_spark.functions.coercion import apply_dynamic_typing
+from bun_csv_spark.functions.coercion import _quoted, apply_dynamic_typing
 
 ROW_IDX = "__row_idx"
 PARSED_EXTRA = "__parsed_extra"
+# the exact path's job-free line order: split offset, position in partition
+_BLK, _POS = "__blk", "__pos"
 
 # error codes mirror the reference's structured errors (src/ts/errors.ts:14-37)
 def _null_sentinel() -> str:
@@ -158,6 +171,7 @@ def _tokenize_line(
     quoted: list = []
     errs: list[str] = []
     i, n = 0, len(line)
+    step = len(delim) or 1  # a delimiter may be several characters long
     while True:
         if i < n and line[i] == quote:
             buf = []
@@ -189,7 +203,7 @@ def _tokenize_line(
             quoted.append(True)
             if j == -1:
                 break
-            i = j + 1
+            i = j + step
         else:
             j = line.find(delim, i)
             raw = line[i:] if j == -1 else line[i:j]
@@ -197,7 +211,7 @@ def _tokenize_line(
             quoted.append(False)
             if j == -1:
                 break
-            i = j + 1
+            i = j + step
     return fields, quoted, errs
 
 
@@ -258,8 +272,7 @@ def _needs_exact_path(opts: CSVOptions) -> bool:
 def read_csv(
     spark: SparkSession, path: str, opts: CSVOptions | None = None
 ) -> DataFrame:
-    df, _errors = read_csv_with_errors(spark, path, opts)
-    return df
+    return _read_csv(spark, path, opts, with_errors=False)[0]
 
 
 def read_csv_url(
@@ -275,7 +288,6 @@ def read_csv_url(
     ``downloadRequestHeaders`` (parser.ts:105-118) and the
     ``beforeFirstChunk`` raw-text rewrite (parser.ts:203-209) — the latter
     is driver-side by nature (it sees the whole text before parsing)."""
-    import tempfile
     import urllib.request
 
     req = urllib.request.Request(url, headers=request_headers or {})
@@ -285,15 +297,34 @@ def read_csv_url(
     text = raw.decode(_head_codec(raw, encoding), errors="replace")
     if before_first_chunk is not None:
         text = before_first_chunk(text)
-    tmp = tempfile.NamedTemporaryFile(
-        mode="w", suffix=".csv", delete=False, prefix="bcsv_url_", encoding="utf-8"
-    )
-    tmp.write(text)
-    tmp.close()
     # the temp file is UTF-8 regardless of the source encoding — reset it
     # so the distributed read doesn't re-decode with the original codec
     opts = _replace(opts or CSVOptions(), encoding="UTF-8")
-    return read_csv(spark, tmp.name, opts)
+    return read_csv(spark, _utf8_temp_file(text, "bcsv_url_"), opts)
+
+
+def _utf8_temp_file(text: str, prefix: str) -> str:
+    """Write ``text`` to a new UTF-8 ``.csv`` temp file and return its
+    path. Spark reads the path lazily, after the caller has returned, so
+    the file cannot go when the call ends; it is removed at interpreter
+    exit instead."""
+    import atexit
+    import tempfile
+
+    with tempfile.NamedTemporaryFile(
+        mode="w", suffix=".csv", delete=False, prefix=prefix, encoding="utf-8"
+    ) as tmp:
+        tmp.write(text)
+    atexit.register(_remove_quietly, tmp.name)
+    return tmp.name
+
+
+def _remove_quietly(path: str) -> None:
+    import contextlib
+    import os
+
+    with contextlib.suppress(OSError):
+        os.remove(path)
 
 
 _BOMS = (
@@ -443,17 +474,10 @@ def _resolve_encoding(path: str, opts: CSVOptions) -> tuple[str, CSVOptions]:
         _BOMS[0][0]
     ):
         return path, _replace(opts, encoding="UTF-8")
-    import tempfile
-
     with open(p, "rb") as fh:
         raw = fh.read()
     text = raw.decode(codec, errors="replace")
-    tmp = tempfile.NamedTemporaryFile(
-        mode="w", suffix=".csv", delete=False, prefix="bcsv_enc_", encoding="utf-8"
-    )
-    tmp.write(text)
-    tmp.close()
-    return tmp.name, _replace(opts, encoding="UTF-8")
+    return _utf8_temp_file(text, "bcsv_enc_"), _replace(opts, encoding="UTF-8")
 
 
 def read_csv_with_errors(
@@ -464,6 +488,15 @@ def read_csv_with_errors(
     errors is a DataFrame(row bigint, code string, message string) on the
     exact path, None on the native path (native drops malformed handling
     into Spark's PERMISSIVE mode)."""
+    return _read_csv(spark, path, opts, with_errors=True)
+
+
+def _read_csv(
+    spark: SparkSession, path: str, opts: CSVOptions | None, with_errors: bool
+) -> tuple[DataFrame, DataFrame | None]:
+    """``read_csv_with_errors``; with ``with_errors=False`` the exact path
+    builds no errors frame and does not cache its parse (``read_csv``
+    throws the errors away)."""
     opts = opts or CSVOptions()
 
     if opts.before_first_chunk is not None:
@@ -487,7 +520,7 @@ def read_csv_with_errors(
         )
 
     if _needs_exact_path(opts):
-        return _read_exact(spark, path, opts)
+        return _read_exact(spark, path, opts, with_errors)
     return _read_native(spark, path, opts), None
 
 
@@ -500,18 +533,10 @@ def _replace(opts: CSVOptions, **kw) -> CSVOptions:
 def _apply_before_first_chunk(path: str, opts: CSVOptions) -> str:
     """Run the beforeFirstChunk raw-text rewrite over a local file and
     return the rewritten temp-file path (parser.ts:203-209, 350-361)."""
-    import tempfile
-
     with open(path, "rb") as fh:
         raw = fh.read()
     text = raw.decode(_head_codec(raw, opts.encoding), errors="replace")
-    text = opts.before_first_chunk(text)
-    tmp = tempfile.NamedTemporaryFile(
-        mode="w", suffix=".csv", delete=False, prefix="bcsv_bfc_", encoding="utf-8"
-    )
-    tmp.write(text)
-    tmp.close()
-    return tmp.name
+    return _utf8_temp_file(opts.before_first_chunk(text), "bcsv_bfc_")
 
 
 def _head_bytes(spark: SparkSession, path: str, encoding: str, n: int = 8192) -> str:
@@ -542,6 +567,14 @@ def _local_head_text(path: str, encoding: str, n: int = 65536) -> str | None:
     """First ~n bytes of a local file (or the first part file of a local
     directory), decoded; None when the path isn't locally readable (then
     the caller probes through Spark instead)."""
+    raw = _local_head_bytes(path, n)
+    if raw is None:
+        return None
+    return raw.decode(_head_codec(raw, encoding), errors="replace")
+
+
+def _local_head_bytes(path: str, n: int) -> bytes | None:
+    """The raw bytes behind ``_local_head_text``."""
     import os
 
     p = path[5:].lstrip("/") if path.startswith("file:") else path
@@ -561,10 +594,9 @@ def _local_head_text(path: str, encoding: str, n: int = 65536) -> str | None:
             # compressed inputs: let Spark's text source decompress
             return None
         with open(p, "rb") as fh:
-            raw = fh.read(n)
+            return fh.read(n)
     except OSError:
         return None
-    return raw.decode(_head_codec(raw, encoding), errors="replace")
 
 
 def _post_read_column_ops(df: DataFrame, opts: CSVOptions) -> DataFrame:
@@ -678,64 +710,115 @@ def _read_native(spark: SparkSession, path: str, opts: CSVOptions) -> DataFrame:
 # -- exact path --------------------------------------------------------------
 
 
-def _first_surviving_line(path: str, opts: CSVOptions) -> tuple[str | None, int]:
+#: where Spark's text source (Hadoop's LineReader) ends a line
+_LINE_BREAK = re.compile(rb"\r\n|\r|\n")
+
+
+def _first_surviving_line(
+    path: str, opts: CSVOptions
+) -> tuple[str | None, int, int]:
     """Driver-side twin of the exact path's line filters: the first line
-    (and its raw 0-based index) that survives skipFirstNLines, comment,
-    and empty-row skipping — resolved from the local head chunk when
-    possible. Returns (None, -1) when the path isn't local or no
-    qualifying line sits inside the chunk (caller probes via Spark)."""
+    that survives skipFirstNLines, comment, and empty-row skipping, its
+    raw 0-based index and the byte offset where it starts — resolved from
+    the local head chunk when possible. Lines break where Spark's text
+    source breaks them (``\\n``, ``\\r\\n``, ``\\r``). Returns
+    (None, -1, -1) when the path isn't local or no qualifying line sits
+    inside the chunk (caller probes via Spark)."""
     n = 65536
-    head = _local_head_text(path, opts.encoding, n)
-    if head is None:
-        return None, -1
-    complete = len(head.encode("utf-8", errors="replace")) < n
-    lines = head.splitlines()
-    if not complete and lines:
-        lines = lines[:-1]  # last line may be cut mid-way
-    for idx, ln in enumerate(lines):
+    raw = _local_head_bytes(path, n)
+    if raw is None:
+        return None, -1, -1
+    codec = _head_codec(raw, opts.encoding)
+    breaks = list(_LINE_BREAK.finditer(raw))
+    starts = [0] + [m.end() for m in breaks]
+    ends = [m.start() for m in breaks]
+    # a whole file's last line may lack a line break; in a cut chunk only
+    # the lines ended by one are whole
+    if len(raw) < n and starts[-1] < len(raw):
+        ends.append(len(raw))
+    for idx, (lo, hi) in enumerate(zip(starts, ends)):
+        ln = raw[lo:hi].decode(codec, errors="replace")
         if idx < opts.skip_first_n_lines:
             continue
         if opts.comments and ln.startswith(opts.comments):
             continue
         if opts.skip_empty_rows and (
             # must agree exactly with the distributed _JS_BLANK_RE filter —
-            # both use the ECMA-262 trim set (incl. \xa0 and ﻿)
+            # both use the ECMA-262 trim set (incl. \xa0 and \ufeff)
             ln.strip(_JS_WS_CHARS) == ""
             if opts.skip_empty_rows == "greedy"
             else ln == ""
         ):
             continue
-        return ln, idx
-    return None, -1
+        return ln, idx, lo
+    return None, -1, -1
+
+
+def _first_split_bytes(spark: SparkSession) -> int:
+    """A floor on the length of a file scan's first split. Spark cuts
+    splits of ``min(maxPartitionBytes, max(openCostInBytes, bytes per
+    core))``, so a line that starts below this offset is read by the
+    split at offset 0."""
+    conf = spark._jsparkSession.sessionState().conf()
+    return min(conf.filesMaxPartitionBytes(), conf.filesOpenCostInBytes())
 
 
 def _read_exact(
-    spark: SparkSession, path: str, opts: CSVOptions
-) -> tuple[DataFrame, DataFrame]:
+    spark: SparkSession, path: str, opts: CSVOptions, with_errors: bool
+) -> tuple[DataFrame, DataFrame | None]:
     import pandas as pd
 
     from bun_csv_spark.operators.util import with_file_order_index
 
-    # deterministic file-order line numbers, all JVM-side: partition order
-    # comes from the file source's (_metadata.file_path, file_block_start)
-    # — path first so multi-file directories order by name, offset second
-    # so splits of one file order by position — and the global offset from
-    # a tiny per-partition count aggregation (SURVEY §4.3.4). No .rdd, no
-    # Python round-trip of the data. Note: a multi-file directory is
-    # indexed as one concatenated stream; only the FIRST file's first line
-    # is treated as the header (per-part headers belong to the native
-    # path, which skips them per file).
-    lines = spark.read.text(path).select(
-        F.col("value").alias("line"),
-        F.struct(
-            F.col("_metadata.file_path").alias("p"),
-            F.col("_metadata.file_block_start").alias("s"),
-        ).alias("__blk"),
+    # header row = first surviving line. Local files resolve it driver-side
+    # from the head chunk (no Spark probe jobs); non-local or head-exhausted
+    # inputs fall back to a probe.
+    probe_line, probe_idx, probe_off = _first_surviving_line(path, opts)
+    cut = opts.has_header or opts.skip_first_n_lines > 0
+    # A dense file-order line number costs a stats job (with_file_order_index).
+    # It is built only when the output carries it, or when a header or
+    # skipFirstNLines cut is not known to fall in a single local file's
+    # first split. Otherwise lines order by a job-free key: the split's
+    # file offset, then the line's position inside its partition (the low
+    # 33 bits of monotonically_increasing_id). A single file's first split
+    # leads its partition, so there a line's position is its raw line
+    # index, which is what the driver-side probe resolved.
+    dense = (
+        opts.with_row_index
+        or _local_file_path(path) is None
+        or (cut and (probe_line is None or probe_off >= _first_split_bytes(spark)))
     )
-    df = with_file_order_index(lines, ROW_IDX, order_col="__blk").drop("__blk")
-
-    if opts.skip_first_n_lines:
-        df = df.filter(F.col(ROW_IDX) >= opts.skip_first_n_lines)
+    text = spark.read.text(path)
+    if dense:
+        # partition order comes from the file source's (_metadata.file_path,
+        # file_block_start) — path first so multi-file directories order
+        # by name, offset second so splits of one file order by position.
+        # A multi-file directory is indexed as one concatenated stream;
+        # only the FIRST file's first line is treated as the header
+        # (per-part headers belong to the native path, which skips them
+        # per file).
+        lines = text.select(
+            F.col("value").alias("line"),
+            F.struct(
+                F.col("_metadata.file_path").alias("p"),
+                F.col("_metadata.file_block_start").alias("s"),
+            ).alias("__blk"),
+        )
+        df = with_file_order_index(lines, ROW_IDX, order_col="__blk").drop("__blk")
+        order = [ROW_IDX]
+        if opts.skip_first_n_lines:
+            df = df.filter(F.col(ROW_IDX) >= opts.skip_first_n_lines)
+    else:
+        df = text.select(
+            F.col("value").alias("line"),
+            F.col("_metadata.file_block_start").alias(_BLK),
+            F.expr(f"monotonically_increasing_id() & {(1 << 33) - 1}").alias(_POS),
+        )
+        order = [_BLK, _POS]
+        if cut:
+            # the lines before the first surviving one (and the header)
+            last_cut = probe_idx if opts.has_header else probe_idx - 1
+            df = df.filter((F.col(_BLK) > 0) | (F.col(_POS) > last_cut))
     if opts.comments:
         df = df.filter(~F.col("line").startswith(opts.comments))
     if opts.skip_empty_rows:
@@ -745,20 +828,19 @@ def _read_exact(
             blank = F.col("line").rlike(_JS_BLANK_RE)
         df = df.filter(~blank)
 
-    # header row = first surviving line. Local files resolve it driver-side
-    # from the head chunk (no Spark probe jobs — each costs a full job on
-    # the indexed frame); non-local or head-exhausted inputs fall back.
-    probe_line, probe_idx = _first_surviving_line(path, opts)
     if probe_line is None:
-        probed = df.orderBy(ROW_IDX).limit(1).collect()
+        probed = df.orderBy(*order).limit(1).collect()
         if probed:
-            probe_line, probe_idx = probed[0]["line"], probed[0][ROW_IDX]
+            probe_line = probed[0]["line"]
+            if dense:
+                probe_idx = probed[0][ROW_IDX]
     if opts.has_header:
         if probe_line is None:
             raise CSVReadError(f"no header row found in {path}")
         raw_names, _, _ = _tokenize_line(probe_line, opts.delimiter, opts.quote_char)
         names = [h if h is not None else "" for h in raw_names]
-        df = df.filter(F.col(ROW_IDX) > probe_idx)
+        if dense:
+            df = df.filter(F.col(ROW_IDX) > probe_idx)
     else:
         width = (
             len(_tokenize_line(probe_line, opts.delimiter, opts.quote_char)[0])
@@ -771,10 +853,15 @@ def _read_exact(
 
     delim, quote = opts.delimiter, opts.quote_char
     max_size = opts.max_record_size
+    ranged = opts.from_line is not None or opts.to_line is not None or opts.preview
+    # the parse carries the order key only for what reads it: the record
+    # windows, the errors frame's row numbers, the row-index column
+    keep = order if (ranged or with_errors or opts.with_row_index) else []
+    df = df.select("line", *keep)
 
     out_schema = T.StructType(
-        [
-            T.StructField(ROW_IDX, T.LongType()),
+        [T.StructField(c, T.LongType()) for c in keep]
+        + [
             T.StructField("fields", T.ArrayType(T.StringType())),
             T.StructField("n_fields", T.IntegerType()),
             T.StructField("err_codes", T.ArrayType(T.StringType())),
@@ -783,24 +870,23 @@ def _read_exact(
 
     def parse_batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in it:
-            idxs, fields_col, nf_col, err_col = [], [], [], []
-            for line, idx in zip(pdf["line"], pdf[ROW_IDX]):
+            fields_col, nf_col, err_col = [], [], []
+            for line in pdf["line"]:
                 if max_size is not None and len(line.encode("utf-8")) > max_size:
                     errs = [ERR_MAX_RECORD_SIZE]
                     vals: list = []
                 else:
-                    vals, _quoted, errs = _tokenize_line(line, delim, quote)
+                    vals, _, errs = _tokenize_line(line, delim, quote)
                     if len(vals) < n_cols:
                         errs = errs + [ERR_TOO_FEW]
                     elif len(vals) > n_cols:
                         errs = errs + [ERR_TOO_MANY]
-                idxs.append(idx)
                 fields_col.append(vals)
                 nf_col.append(len(vals))
                 err_col.append(errs)
             yield pd.DataFrame(
                 {
-                    ROW_IDX: idxs,
+                    **{c: pdf[c] for c in keep},
                     "fields": fields_col,
                     "n_fields": nf_col,
                     "err_codes": err_col,
@@ -817,12 +903,11 @@ def _read_exact(
     # Scale note: the row_number window is global (single task) — it only
     # engages when a line-range option is set, which is inherently an
     # ordered-file operation (exact/fidelity path, not the 100 TB path).
-    if opts.from_line is not None or opts.to_line is not None or opts.preview:
-        from pyspark.sql import Window
+    from pyspark.sql import Window
 
+    if ranged:
         hdr_off = 1 if opts.has_header else 0
-        w = Window.orderBy(ROW_IDX)
-        parsed = parsed.withColumn("__rec", F.row_number().over(w))
+        parsed = parsed.withColumn("__rec", F.row_number().over(Window.orderBy(*order)))
         start = 1
         if opts.from_line is not None:
             start = max(1, opts.from_line - hdr_off)
@@ -833,10 +918,40 @@ def _read_exact(
             parsed = parsed.filter(F.col("__rec") < start + opts.preview)
         parsed = parsed.drop("__rec")
 
-    parsed = parsed.cache()
+    errors = None
+    if with_errors:
+        # data and errors read one parse
+        parsed = parsed.cache()
+        errors = _error_records(parsed, order, opts, n_cols)
 
-    # error records, minus relaxed kinds (parser.ts:137-153, 1270-1302);
-    # one output row per (line, code) with the reference's type category
+    # Erroring rows still yield data (short rows pad with null, long rows
+    # overflow into __parsed_extra — row.ts:508-523); MaxRecordSize rows
+    # never do. skipRecordsWithError drops every erroring row.
+    if opts.skip_records_with_error:
+        data = parsed.filter(F.size("err_codes") == 0)
+    else:
+        data = parsed.filter(~F.array_contains("err_codes", ERR_MAX_RECORD_SIZE))
+
+    cols = [f"get(fields, {i}) AS {_quoted(names[i])}" for i in range(n_cols)]
+    # overflow fields -> __parsed_extra (row.ts:517-523)
+    extra = (
+        f"CASE WHEN n_fields > {n_cols}"
+        f" THEN slice(fields, {n_cols + 1}, n_fields - {n_cols}) END AS {PARSED_EXTRA}"
+    )
+    index = [ROW_IDX] if opts.with_row_index else []
+    data = data.selectExpr(*index, *cols, extra)
+
+    data = _post_read_column_ops(data, opts)
+    return data, errors
+
+
+def _error_records(
+    parsed: DataFrame, order: list[str], opts: CSVOptions, n_cols: int
+) -> DataFrame:
+    """Error records, minus relaxed kinds (parser.ts:137-153, 1270-1302);
+    one output row per (line, code) with the reference's type category."""
+    from pyspark.sql import Window
+
     from bun_csv_spark.errors import ERROR_TYPES
 
     relaxed = set()
@@ -848,11 +963,8 @@ def _read_exact(
     # not count the header or skipped/comment/blank lines (errors.ts:49) —
     # so renumber the surviving records before exploding. The global window
     # is lazy: it executes only when the errors frame is consumed.
-    from pyspark.sql import Window
-
-    w_err = Window.orderBy(ROW_IDX)
     exploded = parsed.withColumn(
-        "__rec0", F.row_number().over(w_err) - 1
+        "__rec0", F.row_number().over(Window.orderBy(*order)) - 1
     ).select(F.col("__rec0"), "n_fields", F.explode("err_codes").alias("code"))
     if relaxed:
         exploded = exploded.filter(~F.col("code").isin(*relaxed))
@@ -867,35 +979,12 @@ def _read_exact(
             ),
         )
         .when(F.col("code") == ERR_MAX_RECORD_SIZE,
-              F.lit(f"record exceeds {max_size} bytes"))
+              F.lit(f"record exceeds {opts.max_record_size} bytes"))
         .otherwise(F.concat(F.lit("malformed quoting: "), F.col("code")))
     )
-    errors = exploded.select(
+    return exploded.select(
         F.col("__rec0").alias("row"),
         type_map[F.col("code")].alias("type"),
         "code",
         message.alias("message"),
     )
-
-    # Erroring rows still yield data (short rows pad with null, long rows
-    # overflow into __parsed_extra — row.ts:508-523); MaxRecordSize rows
-    # never do. skipRecordsWithError drops every erroring row.
-    if opts.skip_records_with_error:
-        data = parsed.filter(F.size("err_codes") == 0)
-    else:
-        data = parsed.filter(~F.array_contains("err_codes", ERR_MAX_RECORD_SIZE))
-
-    cols: list[Column] = [
-        F.get("fields", i).alias(names[i]) for i in range(n_cols)
-    ]
-    # overflow fields -> __parsed_extra (row.ts:517-523)
-    extra = F.when(
-        F.col("n_fields") > n_cols,
-        F.slice(F.col("fields"), n_cols + 1, F.col("n_fields") - n_cols),
-    ).alias(PARSED_EXTRA)
-    data = data.select(F.col(ROW_IDX), *cols, extra)
-    if not opts.with_row_index:
-        data = data.drop(ROW_IDX)
-
-    data = _post_read_column_ops(data, opts)
-    return data, errors

@@ -91,3 +91,59 @@ def test_apply_dynamic_typing_empty_string_to_null(spark):
     out = apply_dynamic_typing(df)
     vals = [r.v for r in out.collect()]
     assert vals == [1.0, None, 3.0]
+
+
+def _infer_by_counts(df, columns):
+    """The three-counter inference form (one ``sum`` per column each for
+    non-empty, non-boolean and non-number values) that the ``bit_or``
+    class codes replaced; kept as the law's reference."""
+    from bun_csv_spark.functions.coercion import NUMBER_RE
+
+    aggs = []
+    for i, c in enumerate(columns):
+        s = F.col(c).cast("string")
+        non_empty = s.isNotNull() & (s != "")
+        aggs.append(F.sum(F.when(non_empty, 1).otherwise(0)).alias(f"n_{i}"))
+        aggs.append(F.sum(F.when(
+            non_empty & ~F.lower(s).isin("true", "false"), 1).otherwise(0)).alias(f"nb_{i}"))
+        aggs.append(F.sum(F.when(
+            non_empty & ~s.rlike(NUMBER_RE), 1).otherwise(0)).alias(f"nn_{i}"))
+    row = df.agg(*aggs).first()
+    out = {}
+    for i, c in enumerate(columns):
+        if row[f"n_{i}"] and row[f"nb_{i}"] == 0:
+            out[c] = "boolean"
+        elif row[f"n_{i}"] and row[f"nn_{i}"] == 0:
+            out[c] = "number"
+        else:
+            out[c] = "string"
+    return out
+
+
+def test_infer_column_types_equals_counter_form(spark):
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from bun_csv_spark.functions.coercion import infer_column_types
+
+    tricky = ["TRUE", "false", "True", " 1", "1", "1.", ".5", "1e5", "-2E-3", "-",
+              "NaN", "Infinity", "١٢", "", None, "12abc", "0x1F", "+1", "1.2.3",
+              "\\d", "yes", "`q`"]
+    value = st.one_of(st.sampled_from(tricky), st.text(max_size=4))
+    columns = ["a", "b c", "d.e", "f`g"]
+
+    @settings(max_examples=25, deadline=None)
+    @given(st.lists(st.tuples(*[value] * len(columns)), max_size=6))
+    def check(rows):
+        df = spark.createDataFrame(rows, ", ".join(f"`{c.replace('`', '``')}` string"
+                                                  for c in columns))
+        want = _infer_by_counts(df.toDF(*[f"c{i}" for i in range(len(columns))]),
+                                [f"c{i}" for i in range(len(columns))])
+        got = infer_column_types(df, columns)
+        assert list(got.values()) == list(want.values())
+
+    check()
+    # the raw regex literal keeps its backslashes: numbers do type
+    df = spark.createDataFrame([("1.5", "true", "x")], "n string, b string, s string")
+    assert infer_column_types(df, ["n", "b", "s"]) == {
+        "n": "number", "b": "boolean", "s": "string"}

@@ -253,6 +253,44 @@ def test_detect_delimiter():
     assert detect_delimiter('a,b\n"1;2",3\n"4;5",6')[0] == ","
 
 
+def test_multi_char_delimiter_matches_spark(spark, write_csv_file):
+    text = 'a||b||c\n1||"x||y"||3\n4||||6\n7||8\n'
+    path = write_csv_file(text, name="double_pipe.csv")
+    want_rows = [
+        tuple(r)
+        for r in spark.read.option("sep", "||").option("header", "true").csv(path).collect()
+    ]
+    native = read_csv(spark, path, CSVOptions(delimiter="||"))
+    exact = read_csv(spark, path, CSVOptions(delimiter="||", relax_column_count=True))
+    assert native.columns == ["a", "b", "c"]
+    assert exact.columns == ["a", "b", "c", "__parsed_extra"]
+    assert [tuple(r) for r in native.collect()] == want_rows
+    assert [tuple(r)[:3] for r in exact.collect()] == want_rows
+
+
+def test_utf8_temp_file_is_removed_at_exit(tmp_path):
+    # Spark reads the path after the call returns, so the file must live
+    # until the interpreter exits, and go then
+    import os
+    import subprocess
+    import sys
+
+    code = (
+        "import os, sys\n"
+        "from bun_csv_spark.sources.csv_reader import _utf8_temp_file\n"
+        "p = _utf8_temp_file('h\\u00e9,x\\n1,2\\n', 'bcsv_test_')\n"
+        "assert open(p, encoding='utf-8').read() == 'h\\u00e9,x\\n1,2\\n'\n"
+        "print(p)\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "TMPDIR": str(tmp_path), "PYTHONPATH": root}
+    out = subprocess.run([sys.executable, "-c", code], env=env, check=True,
+                         capture_output=True, text=True)
+    path = out.stdout.strip()
+    assert path.startswith(str(tmp_path))
+    assert not os.path.exists(path)
+
+
 def test_auto_delimiter_read(spark, write_csv_file):
     path = write_csv_file("a|b\n1|2\n3|4\n", name="pipes.csv")
     df = read_csv(spark, path, CSVOptions(delimiter="auto"))

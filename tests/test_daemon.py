@@ -87,3 +87,11 @@ def test_session_workers_run_the_guard(spark):
 
     got = {r[0] for r in spark.range(0, 8, 1, 4).select(owner("id")).collect()}
     assert got == {"bun_csv_spark._daemon"}
+
+
+def test_session_turns_off_call_site_capture(spark):
+    # PySpark's per-call stack walk costs more than building the columns
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert not is_debugging_enabled()
