@@ -59,8 +59,7 @@ def with_file_order_index(
         acc += r["__cnt"]
 
     def per_partition(values: list[int]):
-        # one SQL literal, however many partitions: a py4j call per
-        # element would cost more than the stats job
+        # one SQL literal: one py4j call however many partitions there are
         return F.expr(
             f"element_at(array({', '.join(f'{v}L' for v in values)}), __pid + 1)"
         )

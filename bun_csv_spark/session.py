@@ -57,14 +57,13 @@ def get_spark(
 
     ``spark.python.sql.dataFrameDebugging.enabled`` is off. PySpark wraps
     every ``functions.*`` call and every ``Column``/``DataFrame`` method
-    in a call-site capture (a stack walk plus about five py4j round trips
-    per call); building the 48 inference columns of a 16-column typed CSV
-    read took 0.27-0.33 s with it and 0.09-0.14 s without it on a 4-core
-    box. The cost: an analysis or runtime error raised by a DataFrame
-    operation no longer names the Python file and line that built the
-    failing expression. PySpark reads the setting once per process, at
-    the first wrapped call made under an active session, so it has no
-    effect in a process whose first session was built elsewhere.
+    in a call-site capture (a stack walk plus py4j round trips per call):
+    building 36 ``Column`` aggregates over 12 columns took 0.48 s with it
+    and 0.26 s without it (median of 7 builds, 4-core box). The cost: an
+    error raised by a DataFrame operation no longer names the Python file
+    and line that built the failing expression. PySpark caches the
+    setting at the first wrapped call in the process, so a process whose
+    first session was built elsewhere keeps that session's setting.
     """
     cpus = int(cpus or os.environ.get("SPARK_GRAFT_CPUS", "32"))
     builder = (

@@ -53,7 +53,7 @@ from bun_csv_spark.functions.coercion import _quoted, apply_dynamic_typing
 ROW_IDX = "__row_idx"
 PARSED_EXTRA = "__parsed_extra"
 # the exact path's job-free line order: split offset, position in partition
-_BLK, _POS = "__blk", "__pos"
+_SPLIT, _POS = "__split", "__pos"
 
 # error codes mirror the reference's structured errors (src/ts/errors.ts:14-37)
 def _null_sentinel() -> str:
@@ -171,7 +171,7 @@ def _tokenize_line(
     quoted: list = []
     errs: list[str] = []
     i, n = 0, len(line)
-    step = len(delim) or 1  # a delimiter may be several characters long
+    step = len(delim) or 1  # multi-character delimiters; "" still advances
     while True:
         if i < n and line[i] == quote:
             buf = []
@@ -811,14 +811,14 @@ def _read_exact(
     else:
         df = text.select(
             F.col("value").alias("line"),
-            F.col("_metadata.file_block_start").alias(_BLK),
+            F.col("_metadata.file_block_start").alias(_SPLIT),
             F.expr(f"monotonically_increasing_id() & {(1 << 33) - 1}").alias(_POS),
         )
-        order = [_BLK, _POS]
+        order = [_SPLIT, _POS]
         if cut:
             # the lines before the first surviving one (and the header)
             last_cut = probe_idx if opts.has_header else probe_idx - 1
-            df = df.filter((F.col(_BLK) > 0) | (F.col(_POS) > last_cut))
+            df = df.filter((F.col(_SPLIT) > 0) | (F.col(_POS) > last_cut))
     if opts.comments:
         df = df.filter(~F.col("line").startswith(opts.comments))
     if opts.skip_empty_rows:

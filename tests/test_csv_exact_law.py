@@ -187,7 +187,7 @@ def test_exact_path_crlf_and_file_uri(spark, tmp_path):
 
 
 def test_exact_path_multi_file_directory(spark, tmp_path):
-    # one partition holds all three files, largest first: name order here
+    # one line stream in file-name order; only part-0's first line is a header
     d = tmp_path / "parts"
     d.mkdir()
     texts = [
@@ -240,14 +240,14 @@ def test_exact_path_header_past_the_first_split(spark, tmp_path, tiny_splits, op
     _check(spark, str(path), [text], opts)
 
 
-def _jobs_while(spark, fn):
+def _jobs_while(spark, fn, group):
     sc = spark.sparkContext
-    group = "exact-law-jobs"
     sc.setJobGroup(group, group)
     try:
         fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
@@ -255,9 +255,10 @@ def test_exact_read_builds_without_a_job(spark, tmp_path):
     path = tmp_path / "t.csv"
     path.write_text(_text(BODY), encoding="utf-8")
     opts = CSVOptions(relax_column_count=True, comments="#")
-    assert _jobs_while(spark, lambda: read_csv(spark, str(path), opts)) == 0
-    plan = read_csv(spark, str(path), opts)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastExchange" not in plan and "InMemoryTableScan" not in plan
+    assert _jobs_while(spark, lambda: read_csv(spark, str(path), opts), "law-plain") == 0
+    plan = read_csv(spark, str(path), opts)._jdf.queryExecution().executedPlan()
+    assert "BroadcastExchange" not in plan.toString()
+    assert "InMemoryTableScan" not in plan.toString()
     # the row index is what the dense stats aggregation is for
     indexed = CSVOptions(relax_column_count=True, with_row_index=True)
-    assert _jobs_while(spark, lambda: read_csv(spark, str(path), indexed)) > 0
+    assert _jobs_while(spark, lambda: read_csv(spark, str(path), indexed), "law-indexed") > 0

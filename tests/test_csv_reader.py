@@ -276,7 +276,6 @@ def test_utf8_temp_file_is_removed_at_exit(tmp_path):
     import sys
 
     code = (
-        "import os, sys\n"
         "from bun_csv_spark.sources.csv_reader import _utf8_temp_file\n"
         "p = _utf8_temp_file('h\\u00e9,x\\n1,2\\n', 'bcsv_test_')\n"
         "assert open(p, encoding='utf-8').read() == 'h\\u00e9,x\\n1,2\\n'\n"

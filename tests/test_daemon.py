@@ -90,7 +90,7 @@ def test_session_workers_run_the_guard(spark):
 
 
 def test_session_turns_off_call_site_capture(spark):
-    # PySpark's per-call stack walk costs more than building the columns
+    # no per-call call-site capture (see get_spark's docstring)
     from pyspark.errors.utils import is_debugging_enabled
 
     assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
