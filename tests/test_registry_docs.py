@@ -8,11 +8,10 @@ import pathlib
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
-
-import __spark_entry__ as entry_mod
-
 REPO = pathlib.Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
+
+import __spark_entry__ as entry_mod  # noqa: E402
 
 
 def test_gate_count_matches_docs():
@@ -87,3 +86,18 @@ def test_every_public_def_has_a_consumer():
             if uses == len(word.findall(own)):
                 orphans.append(f"{path.relative_to(REPO)}:{node.lineno} {node.name}")
     assert not orphans, orphans
+
+
+def test_no_script_hard_codes_its_checkout():
+    """Tools and tests find the repo from ``__file__``. A script that
+    hard-codes this checkout's absolute path makes a copy of the repo run
+    elsewhere import this checkout's registry instead of its own."""
+    here = str(REPO)
+    hits = [
+        str(p.relative_to(REPO))
+        for p in REPO.rglob("*.py")
+        if p.relative_to(REPO).parts[0] not in ("perfbench", "spark-warehouse")
+        and not p.relative_to(REPO).parts[0].startswith(".")
+        and here in p.read_text()
+    ]
+    assert not hits, hits

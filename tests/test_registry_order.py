@@ -3,7 +3,7 @@
 Round-6 verdict: 14 new gates sat outside the driver's 50-slot correctness
 window because the registry order was a hand-maintained list nobody refreshed.
 The order is now computed from tools/registry_green.json
-(`__spark_entry__._freshness_order`); these tests make a silent recurrence
+(`gates._freshness_order`); these tests make a silent recurrence
 impossible — a new gate, a stale gate, or a map/registry drift fails CI.
 
 No SparkSession needed: everything here is pure dict/JSON inspection.
@@ -14,6 +14,9 @@ from __future__ import annotations
 import json
 import os
 import sys
+from types import SimpleNamespace
+
+import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -44,8 +47,23 @@ def test_map_covers_registry_exactly():
     gates = doc["gates"]
     extra = set(gates) - set(names)
     assert not extra, f"map entries for gates not in queries(): {sorted(extra)}"
-    # missing-from-map is ALLOWED (new gates default to never-checked), but
-    # then they must be in the window — test_least_verified_inside_window.
+    # the map's key order breaks freshness ties, so a gate without an entry
+    # has no place in the order: tools/update_registry_green.py adds one
+    missing = set(names) - set(gates)
+    assert not missing, f"gates with no map entry: {sorted(missing)}"
+
+
+def test_registry_build_rejects_a_duplicate_name():
+    """Two family modules declaring one name must fail the registry build;
+    the queries() dict view would otherwise keep only one of them."""
+    from gates import build_registry
+    from gates.common import Gate
+
+    def family(name):
+        return SimpleNamespace(__name__=name, GATES=[Gate("dup", None, None)])
+
+    with pytest.raises(ValueError, match="'dup' declared in gates.a and gates.b"):
+        build_registry([family("gates.a"), family("gates.b")])
 
 
 def test_least_verified_inside_window():

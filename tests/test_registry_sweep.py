@@ -28,28 +28,6 @@ def test_every_registry_query_analyzes_and_every_oracle_parses():
     ) + "\n\n" + "\n".join(err for _, err in failures[:3])
 
 
-# gates whose plans legitimately contain a SinglePartition window — each
-# runs over a BOUNDED row set by construction (audited per-gate in
-# tools/audit_plans.py), so the linter's global-window error is a false
-# positive here and ONLY here:
-#   quantile_sketch      window over <= n_bins histogram rows
-#   bm25                 idf table bounded by vocab term budget
-#   temperature_resample window over one row PER SOURCE (dim-sized)
-#   edit_overlay         window over the driver-side edit log
-#   csv_opts_errors      window over the skipped-error report rows
-#   tpch_q17             the window IS keyed (partitionBy l_partkey); the
-#                        SinglePartition the blunt co-occurrence rule sees
-#                        is the final 1-row aggregate's partial-state
-#                        reduce (audited at 2 shuffles in audit_plans)
-#   tpch_q16             row_number over the bucket dim — bounded by the
-#                        brand x type x size vocabulary PRODUCT
-#                        (SF-independent; the late-materialized group key)
-BOUNDED_GLOBAL_WINDOW = {
-    "quantile_sketch", "bm25", "temperature_resample",
-    "edit_overlay", "csv_opts_errors", "tpch_q17", "tpch_q16",
-}
-
-
 def test_no_gate_plan_has_lint_errors(spark):
     """Standing scale-antipattern gate: no registry query may plan a
     cartesian product, a row-at-a-time Python UDF, or an unbounded
@@ -57,23 +35,23 @@ def test_no_gate_plan_has_lint_errors(spark):
     trap rule (fact-broadcast / dim-cut-not-broadcast, warn-severity
     but forbidden here: every landed gate carries its guard, so a
     firing means a guard regressed). New gates are linted automatically
-    the moment they enter the registry; new exceptions must be argued
-    into the allowlist above WITH the boundedness reason."""
-    import __spark_entry__ as entry_mod
-
+    the moment they enter the registry. The one exception is a
+    SinglePartition window over a row set that is BOUNDED by construction:
+    the gate's ``Plan.bounded_window`` must say why."""
     from bun_csv_spark.plans.lint import lint_plan
+    from gates import GATES
 
     forbidden_warns = {"fact-broadcast", "dim-cut-not-broadcast"}
     bad = {}
-    for name, fn in entry_mod.queries().items():
-        df = fn(spark, "/root/testdata/sf0.001")
+    for g in GATES:
+        df = g.build(spark, SF_DIR)
         errs = [
             f.code
             for f in lint_plan(df)
             if f.severity == "error" or f.code in forbidden_warns
         ]
-        if name in BOUNDED_GLOBAL_WINDOW:
+        if g.plan and g.plan.bounded_window:
             errs = [c for c in errs if c != "global-window"]
         if errs:
-            bad[name] = errs
+            bad[g.name] = errs
     assert not bad, f"lint errors in gate plans: {bad}"

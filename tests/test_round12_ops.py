@@ -244,10 +244,9 @@ def test_ann_pq_recall_and_code_col_path(spark):
         pq_encode_expr,
     )
 
-    import __spark_entry__ as entry_mod
+    from gates.similarity import _ANN_PQ_COARSE, _ANN_PQ_CODEBOOKS
 
-    books = entry_mod._ANN_PQ_CODEBOOKS
-    coarse = entry_mod._ANN_PQ_COARSE
+    books, coarse = _ANN_PQ_CODEBOOKS, _ANN_PQ_COARSE
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     n = emb.count()
     qvec = list(
@@ -291,13 +290,13 @@ def test_ann_pq_pinned_literals_reproduce(spark):
         refined_centroids,
     )
 
-    import __spark_entry__ as entry_mod
+    from gates.similarity import _ANN_PQ_COARSE, _ANN_PQ_CODEBOOKS
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     books = pq_train_codebooks(emb, dim=64, m=8, ksub=16, iters=2)
-    assert books == entry_mod._ANN_PQ_CODEBOOKS
+    assert books == _ANN_PQ_CODEBOOKS
     coarse = refined_centroids(emb, n_centroids=4, n_iter=1)
-    assert coarse == entry_mod._ANN_PQ_COARSE
+    assert coarse == _ANN_PQ_COARSE
 
 
 def test_scratch_dir_reaper_rules(monkeypatch, tmp_path):
@@ -309,7 +308,7 @@ def test_scratch_dir_reaper_rules(monkeypatch, tmp_path):
     import os
     import time
 
-    import __spark_entry__ as entry_mod
+    from gates.common import _scratch_dir
 
     monkeypatch.setenv("TMPDIR", str(tmp_path))
     import tempfile
@@ -341,7 +340,7 @@ def test_scratch_dir_reaper_rules(monkeypatch, tmp_path):
                 st = fh.read()
             return int(st[st.rindex(b")") + 2:].split()[19])
 
-        mine = entry_mod._scratch_dir("rtest", "/nonexistent_sf")
+        mine = _scratch_dir("rtest", "/nonexistent_sf")
         assert os.path.isdir(mine) and os.path.exists(
             os.path.join(mine, "_OWNER")
         )
@@ -353,7 +352,7 @@ def test_scratch_dir_reaper_rules(monkeypatch, tmp_path):
         survivor.mkdir()
         (survivor / "_OWNER").write_text(f"1 {start_of(1)}")
         os.utime(survivor, (old_ts, old_ts))
-        entry_mod._scratch_dir("rtest", "/nonexistent_sf")
+        _scratch_dir("rtest", "/nonexistent_sf")
         assert survivor.exists(), "live-owner dir must never be reaped"
     finally:
         tempfile.tempdir = None

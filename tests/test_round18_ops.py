@@ -388,8 +388,9 @@ def test_csv_opts_skipempty_gate_fixture_and_result(spark):
     the greedy read returns exactly the 25 clean nation records with
     fields aligned."""
     import __spark_entry__ as e
+    from gates.csv_io import _nation_csv_fixture
 
-    path = e._nation_csv_fixture(spark, SF, empties=True)
+    path = _nation_csv_fixture(spark, SF, empties=True)
     raw = open(path).read().splitlines()
     assert raw.count("") == 7  # keys 0,4,8,12,16,20,24
     assert raw.count("  \t ") == 5  # keys 0,6,12,18,24
@@ -634,3 +635,25 @@ def test_connected_components_deep_chain(spark):
     )
     out = {r.node: r.label for r in connected_components(pairs).collect()}
     assert out == {i: 100 for i in range(100, 112)}
+
+
+def test_nation_csv_fixture_is_removed_at_exit(tmp_path):
+    """The option-matrix gates write their CSV fixture to a temp file that
+    must not outlive the process: build and collect csv_opts_comments in a
+    child whose TMPDIR is tmp_path, and no bcsv_opts_* file may remain."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import __spark_entry__ as e\n"
+        "from bun_csv_spark.session import get_spark\n"
+        "spark = get_spark('fixture_leak', cpus=1, shuffle_partitions=1)\n"
+        f"e.queries()['csv_opts_comments'](spark, {SF!r}).collect()\n"
+    )
+    subprocess.run(
+        [sys.executable, "-c", code], cwd=repo, check=True, timeout=600,
+        env=dict(os.environ, TMPDIR=str(tmp_path)),
+    )
+    assert not list(tmp_path.glob("bcsv_opts_*"))

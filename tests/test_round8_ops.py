@@ -15,9 +15,9 @@ def test_incremental_day_pipeline_invariants(spark):
     every family's invariants holding — CM never underestimates (est >=
     exact n, and here the sketched key IS the group key so est_count_cm
     bounds n from above), quantiles ordered, moments consistent."""
-    import __spark_entry__ as entry
+    from gates.incremental import q_incremental_day_pipeline
 
-    rows = entry.q_incremental_day_pipeline(spark, "/root/testdata/sf0.001").collect()
+    rows = q_incremental_day_pipeline(spark, "/root/testdata/sf0.001").collect()
     assert len(rows) >= 1
     for r in rows:
         assert r["min_c"] <= r["max_c"]
@@ -349,7 +349,6 @@ def test_multimodal_split_components_move_as_unit(spark):
     modality produced it — must land both endpoints in the SAME split,
     and at least one enforced pair must come from a non-text modality
     (otherwise the gate degenerates to the text-only cluster_split)."""
-    import __spark_entry__ as entry
     from bun_csv_spark.multimodal.binary import (
         attach_bmp_payload,
         attach_pcm_wav_payload,
@@ -357,21 +356,23 @@ def test_multimodal_split_components_move_as_unit(spark):
         extract_dhash,
     )
     from bun_csv_spark.operators.dedup import hamming_pairs64, neardup_pairs_minhash
+    from gates.common import _neardup_corpus, _t
+    from gates.multimodal import q_multimodal_cluster_split
 
     sf_dir = "/root/testdata/sf0.001"
     split = {
         r["doc_id"]: (r["split"], r["split_group"])
-        for r in entry.q_multimodal_cluster_split(spark, sf_dir).collect()
+        for r in q_multimodal_cluster_split(spark, sf_dir).collect()
     }
 
-    docs = entry._t(spark, sf_dir, "documents").select("doc_id")
+    docs = _t(spark, sf_dir, "documents").select("doc_id")
     twins = docs.select(
         (F.col("doc_id") + 100000).alias("doc_id"), F.col("doc_id").alias("src")
     )
     tpairs = {
         (r["id_a"], r["id_b"])
         for r in neardup_pairs_minhash(
-            entry._neardup_corpus(spark, sf_dir), "doc_id", "text",
+            _neardup_corpus(spark, sf_dir), "doc_id", "text",
             n_hashes=8, bands=4, shingle_k=5,
         ).select("id_a", "id_b").collect()
     }

@@ -30,12 +30,14 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from bun_csv_spark.session import TABLES, get_spark  # noqa: E402
 
-CACHE_DIR = "/root/repo/.oracle_cache"
+CACHE_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".oracle_cache"
+)
 
 
 def _fixture_digest(sf_dir: str) -> str:

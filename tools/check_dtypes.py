@@ -6,11 +6,12 @@ results per query — the driver's schema comparison may be type-sensitive.
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from bun_csv_spark.session import TABLES, get_spark  # noqa: E402

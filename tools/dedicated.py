@@ -16,7 +16,7 @@ raw walls. Compare ratios across rounds, not walls.
 
     python tools/dedicated.py <query> <SF> [runs] [--noop]
 
-SF picks /root/repo/.scale/sf{SF} (generated by scale_sf1.py gen).
+SF picks the repo's .scale/sf{SF} (generated by scale_sf1.py gen).
 
 Sink (r17): default is .collect() — right for the TPC-H gates (small
 aggregate outputs), WRONG for gates whose result is the full dataset

@@ -14,11 +14,33 @@ rule bug (outer-join preserved sides) — see SCALE.md r16.
 Gates whose tables don't exist in the fixture (documents/events/
 embeddings are TPC-H-only in .scale) are skipped and counted.
 
-Usage: python tools/lint_registry.py [sf_dir=/root/repo/.scale/sf10]
+Usage: python tools/lint_registry.py [sf_dir=.scale/sf10 under the repo]
 Exit 1 if any gate fires a non-adjudicated trap rule OR raises a
 non-AnalysisException during plan construction (r17: a construction
 regression is an ERROR row, not a skip). Info-tier findings
 (broadcast-fanout-budget) print as FANOUT lines and never gate.
+
+A gate whose ``Plan.lint_wash`` names a reason is adjudicated (SCALE.md
+r16) and prints WASH instead of TRAP. Two classes: (1) measured washes —
+the hinted variant A/B'd within noise at both scales, so the flag costs
+nothing here (single-box caveat: a multi-hundred-MB broadcast still fans
+out to every executor on a real cluster; revisit if a cluster-scale
+harness lands); (2) the scan-level-cut recipe — the build scans a big
+table but with a SELECTIVE pushed row filter (p_size=15, name LIKE,
+isin) that the size-only estimator cannot see: broadcasting that cut IS
+the landed r12/r13 fix (q2's 27 MB actual at sf100), and the raw-bytes
+test cannot distinguish it from a whole-table narrow projection.
+
+r17: the single-box caveat is now CHECKABLE — the info-tier
+broadcast-fanout-budget rule (plans/lint.py, default 100 MB) prints a
+non-gating FANOUT line per breaching gate. At sf100 it fires on all 9
+broadcast-carrying adjudicated gates: set_ops / join_size_estimate read
+224 MB raw (customer/orders keys builds — the measured-wash pair; past
+~the budget on a real cluster prefer the merge hint these A/Bs showed
+costless), and the 7 scan-level-cut gates read 159-224 MB RAW where the
+post-filter ACTUAL build is far smaller (q2: 27 MB measured at sf100) —
+for those the advisory overstates by the cut selectivity, which a
+raw-bytes bound cannot see; the recipe stands.
 """
 
 from __future__ import annotations
@@ -26,64 +48,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-# adjudicated allowlist: gate -> reason + evidence (SCALE.md r16).
-# Two classes: (1) measured washes — the hinted variant A/B'd within
-# noise at both scales, so the flag costs nothing here (single-box
-# caveat: a multi-hundred-MB broadcast still fans out to every executor
-# on a real cluster; revisit if a cluster-scale harness lands);
-# (2) the scan-level-cut recipe — the build scans a big table but with
-# a SELECTIVE pushed row filter (p_size=15, name LIKE, isin) that the
-# size-only estimator cannot see: broadcasting that cut IS the landed
-# r12/r13 fix (q2's 27 MB actual at sf100), and the raw-bytes test
-# cannot distinguish it from a whole-table narrow projection.
-#
-# r17: the single-box caveat is now CHECKABLE — the info-tier
-# broadcast-fanout-budget rule (plans/lint.py, default 100 MB) prints a
-# non-gating FANOUT line per breaching gate. At sf100 it fires on all 9
-# broadcast-carrying allowlisted gates: set_ops / join_size_estimate
-# read 224 MB raw (customer/orders keys builds — the measured-wash pair;
-# past ~the budget on a real cluster prefer the merge hint these A/Bs
-# showed costless), and the 7 scan-level-cut gates read 159-224 MB RAW
-# where the post-filter ACTUAL build is far smaller (q2: 27 MB measured
-# at sf100) — for those the advisory overstates by the cut selectivity,
-# which a raw-bytes bound cannot see; the recipe stands.
-ADJUDICATED = {
-    "tpch_q21": "measured wash: sup_cut broadcast A/B'd 1.04-1.05x at "
-    "sf10 AND sf100 — the flagged exchange carries the post-aggregate "
-    "qualifier set, already collapsed by map-side partials",
-    "set_ops": "measured wash: merge on the intersect/except builds "
-    "A/B'd 0.98-1.02x at sf10 AND sf100 — the keys-only 7.5M-row "
-    "HashedRelation is compact and the SMJ alternative exchanges BOTH "
-    "large sides",
-    "join_size_estimate": "measured wash: merge on the exact arm's "
-    "customer side A/B'd 0.96-0.98x at sf10 AND sf100 (same reasoning "
-    "as set_ops); the gate's point is the sketch estimate — the exact "
-    "arm is the verification baseline",
-    "tpch_q2": "scan-level-cut recipe: the part p_size=15 cut prices "
-    "~27 MB ACTUAL at sf100 (SCALE.md r12/r13) — broadcasting it is "
-    "the landed fix, not the trap",
-    "tpch_q3": "scan-level-cut recipe: customer mktsegment cut (~1/5 "
-    "keys-only); sf100 dedicated census in-family (r14 22-shape table)",
-    "tpch_q8": "scan-level-cut recipe x2: customer isin() + part "
-    "equality cuts (r14; docstring documents both orderkey inputs as "
-    "join-derived, so no q9 fact trap)",
-    "tpch_q9": "scan-level-cut recipe: the p_name LIKE part cut "
-    "carrying p_retailprice (r14 landed shape; the orders side holds "
-    "the merge guard already)",
-    "tpch_q16": "scan-level-cut recipe: the survivors part cut "
-    "(p_size IN 8-of-50 + brand/type NOT-predicates, ~16% selective, "
-    "~26 MB actual at sf100 vs 159 MB raw) broadcast-joined to the "
-    "agg-bounded bucket dim — the landed r14 late-materialization "
-    "shape, A/B'd 3.2x at sf100 (SCALE.md r14). Surfaced only in r17 "
-    "when the agg exemption became per-branch (the raw cut branch is "
-    "correctly no longer hidden by the sibling bdim aggregate)",
-    "tpch_q17": "scan-level-cut recipe: part cut, audited at 2 "
-    "shuffles with the windowed one-pass shape (r12)",
-    "tpch_q20": "scan-level-cut recipe: part name-cut semi build "
-    "(r13 landed shape, audited LeftSemi)",
-}
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 TRAP_CODES = ("fact-broadcast", "dim-cut-not-broadcast")
 
@@ -94,15 +60,19 @@ def main() -> int:
     from bun_csv_spark.plans.lint import lint_plan
     from bun_csv_spark.session import get_spark
 
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scale/sf10"
+    from gates import GATES
+
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, ".scale", "sf10")
     spark = get_spark("lint_registry", cpus=16, shuffle_partitions=16)
     spark.sparkContext.setLogLevel("ERROR")
-    import __spark_entry__ as entry_mod
 
+    n_wash = sum(bool(g.plan and g.plan.lint_wash) for g in GATES)
     bad, skipped, clean, washed, fanout = {}, 0, 0, 0, 0
-    for name, fn in entry_mod.queries().items():
+    for g in GATES:
+        name = g.name
+        wash = g.plan and g.plan.lint_wash
         try:
-            df = fn(spark, sf_dir)
+            df = g.build(spark, sf_dir)
             findings = lint_plan(df)
         except AnalysisException as e:
             # table absent in this fixture (.scale generates the TPC-H
@@ -127,16 +97,16 @@ def main() -> int:
             if f.code == "broadcast-fanout-budget":
                 fanout += 1
                 print(f"FANOUT {name}: {f.message.split(':')[0]}")
-        if codes and name in ADJUDICATED:
+        if codes and wash:
             washed += 1
-            print(f"WASH {name}: {codes} — {ADJUDICATED[name]}")
+            print(f"WASH {name}: {codes} — {wash}")
         elif codes:
             bad[name] = codes
             print(f"TRAP {name}: {codes}")
         else:
             clean += 1
     print(f"\n{clean} clean, {len(bad)} trap/error, {washed} "
-          f"adjudicated-fired (of {len(ADJUDICATED)} allowlisted), "
+          f"adjudicated-fired (of {n_wash} allowlisted), "
           f"{fanout} fan-out advisories (info, non-gating), {skipped} "
           f"skipped (table absent at this SF)")
     return 1 if bad else 0

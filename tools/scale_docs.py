@@ -16,7 +16,7 @@ doc_id with id%25==1 is a word-level perturbation of the block anchor
 every scale, like the driver corpus does.
 
 Usage:
-    python tools/scale_docs.py gen [M]   # writes /root/repo/.scale/docs{M}
+    python tools/scale_docs.py gen [M]   # writes .scale/docs{M} under the repo
     python tools/scale_docs.py run [M]   # times the subset at sf0.1 AND Mx
 """
 

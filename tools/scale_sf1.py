@@ -19,7 +19,7 @@ cannot download — the same-shape synthetic keeps the comparison
 apples-to-apples with the driver's own sf0.1 tables anyway.
 
 Usage:
-    python tools/scale_sf1.py gen [SF]   # writes /root/repo/.scale/sf{SF} (~25s @sf1)
+    python tools/scale_sf1.py gen [SF]   # writes .scale/sf{SF} under the repo (~25s @sf1)
     python tools/scale_sf1.py run [SF]   # times the subset at sf0.1 AND sf{SF}
 """
 

@@ -1,13 +1,14 @@
 """Full-registry analysis sweep — the cheap regression tripwire.
 
-The driver's correctness gate rotates ~50 of the registry's queries per
-round, which let 11 queries sit green-on-stale-checks while broken on disk
-(round 5 postmortem). This sweep closes that hole: it builds EVERY
-``queries()`` entry against a real sf dir and forces Catalyst analysis
-(``df.schema``) — no execution, no collect — so any AnalysisException from
-a schema/type drift in the testdata surfaces in seconds, for all ~130
-queries, every round. It also EXPLAINs every ``oracle_sql()`` twin in
-DuckDB so oracle drift is caught on the same sweep.
+The driver's correctness gate checks only the first window of the
+registry's queries per round, which let 11 queries sit green-on-stale-checks
+while broken on disk (round 5 postmortem). This sweep closes that hole: it
+builds EVERY ``queries()`` entry against a real sf dir and forces Catalyst
+analysis (``df.schema``) — no execution, no collect — so any
+AnalysisException from a schema/type drift in the testdata surfaces in
+seconds, for every gate, every round. It also EXPLAINs every
+``oracle_sql()`` twin in DuckDB so oracle drift is caught on the same
+sweep.
 
 Streaming queries are the one exception: building them runs the micro-batch
 replay (run_stream_to_table executes eagerly). At sf0.001 that's a few
@@ -21,13 +22,14 @@ Usage:
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 import traceback
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from bun_csv_spark.session import TABLES, get_spark  # noqa: E402

@@ -1,6 +1,6 @@
 """Bump tools/registry_green.json after a driver round's verdict.
 
-The map drives `__spark_entry__._freshness_order`; keeping it current is the
+The map drives `gates._freshness_order`; keeping it current is the
 ONE per-round registry chore (replaces the hand-reshuffle the round-6 verdict
 flagged). Run it BEFORE adding new gates for the next round, while the
 effective order still matches what the driver checked.
