@@ -19,7 +19,6 @@ from __future__ import annotations
 import argparse
 import os
 import sys
-import tempfile
 import time
 
 from pyspark.sql import DataFrame, functions as F
@@ -31,6 +30,7 @@ from bun_csv_spark.operators.stats import column_stats
 from bun_csv_spark.plans.expr import ExprError, compile_filter
 from bun_csv_spark.sources.csv_reader import (
     CSVOptions,
+    _utf8_temp_file,
     read_csv,
     read_csv_with_errors,
 )
@@ -121,12 +121,7 @@ def build_parser() -> argparse.ArgumentParser:
 def _resolve_input(path: str) -> str:
     if path == "-":
         # stdin -> temp file (cli/index.ts:294-299)
-        tmp = tempfile.NamedTemporaryFile(
-            mode="w", suffix=".csv", delete=False, prefix="bcsv_stdin_"
-        )
-        tmp.write(sys.stdin.read())
-        tmp.close()
-        return tmp.name
+        return _utf8_temp_file(sys.stdin.read(), "bcsv_stdin_")
     return path
 
 

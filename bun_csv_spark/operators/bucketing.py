@@ -19,7 +19,6 @@ def write_bucketed(
     n_buckets: int = 32,
     sort_cols: list[str] | None = None,
     mode: str = "overwrite",
-    path: str | None = None,
 ) -> None:
     """Persist ``df`` as a bucketed (and optionally sorted) table.
 
@@ -31,29 +30,23 @@ def write_bucketed(
     not), and saveAsTable refuses to adopt an unregistered location — so
     stale catalog entries AND leftover directories are cleared first.
 
-    ``path`` (r18) makes the table EXTERNAL at that location instead of
-    under the shared warehouse dir — callers that stage per-process
-    bucketed tables (the bucketed_join_agg gate) point it at their own
-    reaped scratch, so two concurrent drivers never clobber each
-    other's files. The caller owns the path's lifecycle."""
+    The table is managed, so its files live in the session's warehouse.
+    A session ``get_spark`` builds keeps that warehouse under the
+    process's scratch root, so two processes never share a table and
+    the files go when the process exits."""
     import os
     import shutil
 
     spark = df.sparkSession
     if mode == "overwrite" and "." not in table:
         spark.sql(f"DROP TABLE IF EXISTS `{table}`")
-        if path is None:
-            warehouse = spark.conf.get("spark.sql.warehouse.dir", "")
-            loc = os.path.join(warehouse.removeprefix("file:"), table.lower())
-        else:
-            loc = path
+        warehouse = spark.conf.get("spark.sql.warehouse.dir", "")
+        loc = os.path.join(warehouse.removeprefix("file:"), table.lower())
         if loc and os.path.isdir(loc):
             shutil.rmtree(loc, ignore_errors=True)
     writer = df.write.format("parquet").mode(mode).bucketBy(n_buckets, *bucket_cols)
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
-    if path is not None:
-        writer = writer.option("path", path)
     writer.saveAsTable(table)
 
 

@@ -11,6 +11,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from bun_csv_spark import scratch
+
 # the directory holding this package (see get_spark)
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -92,6 +94,9 @@ def get_spark(
         .config("spark.python.daemon.module", "bun_csv_spark._daemon")
         .config("spark.executorEnv.PYTHONPATH", _ROOT)
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # managed tables (write_bucketed) belong to the process that wrote
+        # them, not to the working directory, and go when it exits
+        .config("spark.sql.warehouse.dir", os.path.join(scratch.root(), "warehouse"))
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

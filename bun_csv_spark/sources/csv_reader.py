@@ -48,6 +48,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from bun_csv_spark import scratch
 from bun_csv_spark.functions.coercion import _quoted, apply_dynamic_typing
 
 ROW_IDX = "__row_idx"
@@ -304,27 +305,16 @@ def read_csv_url(
 
 
 def _utf8_temp_file(text: str, prefix: str) -> str:
-    """Write ``text`` to a new UTF-8 ``.csv`` temp file and return its
-    path. Spark reads the path lazily, after the caller has returned, so
-    the file cannot go when the call ends; it is removed at interpreter
-    exit instead."""
-    import atexit
+    """Write ``text`` to a new UTF-8 ``.csv`` file under the scratch root
+    and return its path. Spark reads the path lazily, after the caller has
+    returned, so the file cannot go when the call ends; it goes with the
+    root when the process exits."""
     import tempfile
 
-    with tempfile.NamedTemporaryFile(
-        mode="w", suffix=".csv", delete=False, prefix=prefix, encoding="utf-8"
-    ) as tmp:
-        tmp.write(text)
-    atexit.register(_remove_quietly, tmp.name)
-    return tmp.name
-
-
-def _remove_quietly(path: str) -> None:
-    import contextlib
-    import os
-
-    with contextlib.suppress(OSError):
-        os.remove(path)
+    fd, path = tempfile.mkstemp(suffix=".csv", prefix=prefix, dir=scratch.root())
+    with open(fd, "w", encoding="utf-8") as fh:
+        fh.write(text)
+    return path
 
 
 _BOMS = (

@@ -153,14 +153,15 @@ def append_csv_file(
     nothing."""
     import glob
     import shutil
-    import tempfile
 
     from pyspark.sql import Observation
+
+    from bun_csv_spark.scratch import new_dir
 
     line = csv_line_expr(
         df, delimiter=delimiter, quote=quote, quote_style=quote_style
     )
-    staged = tempfile.mkdtemp(prefix="bun_csv_append_")
+    staged = new_dir("bun_csv_append_")
     try:
         out = os.path.join(staged, "parts")
         # the row count comes from the WRITE JOB ITSELF (Observation

@@ -347,16 +347,17 @@ def run_stream_to_table(
     windows), never the input stream; it is a test/gate harness, and a
     production job would point writeStream at parquet/kafka instead."""
     import os
-    import tempfile
 
     from pyspark.sql import types as T
+
+    from bun_csv_spark.scratch import new_dir
 
     batch = spark.read.parquet(parquet_path)
     schema = batch.schema
     if os.path.isfile(parquet_path):
         # FileStreamSource wants a directory; replay a single file by
         # symlinking it into a scratch dir
-        d = tempfile.mkdtemp(prefix="stream_src_")
+        d = new_dir("stream_src_")
         os.symlink(parquet_path, os.path.join(d, os.path.basename(parquet_path)))
         parquet_path = d
     reader = spark.readStream.schema(schema)

@@ -7,6 +7,7 @@ on each builder; ``gates/__init__.py`` joins the families into one list."""
 
 from __future__ import annotations
 
+import hashlib
 import os
 from collections.abc import Callable, Mapping, Sequence
 from dataclasses import dataclass
@@ -14,6 +15,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from bun_csv_spark.functions.sketches import _hll_alpha
+from bun_csv_spark.scratch import scratch_dir
 
 
 @dataclass(frozen=True)
@@ -82,102 +84,9 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _scratch_dir(tag: str, sf_dir: str) -> str:
-    """Per-(gate, sf_dir, PROCESS) scratch directory, WIPED on entry —
-    the staging gates (streaming replays, the incremental-dedup stores)
-    re-use one path per invocation instead of leaking a fresh mkdtemp
-    every call (bench warmups and repeated sweeps would otherwise
-    accumulate orphans for the host's lifetime). The PID suffix keeps
-    two concurrent drivers (e.g. bench + a sweep over the same sf_dir)
-    from clobbering each other's staged state mid-query; dirs left by
-    DEAD processes are reaped by age (>6h) on each call, so the
-    leak-free property survives the per-process naming — but never dirs
-    whose owning PID is still alive: an hours-long sweep's lazily
-    re-read store must not vanish under it just because its mtime aged
-    out. Liveness is PID + the _OWNER marker's kernel start time (r12:
-    an unrelated process recycling the number no longer keeps a dead
-    run's dir alive), and pre-r11 unsuffixed dirs fall under the same
-    age rule. Each invocation fully rebuilds the dir, so callers must collect
-    the returned DataFrame before invoking the same gate again IN THE
-    SAME process."""
-    import glob
-    import hashlib
-    import shutil
-    import tempfile
-    import time
-
-    def proc_start(pid: int) -> "int | None":
-        """Kernel start time (clock ticks) of a live process — the
-        recycled-PID disambiguator. None where /proc is unavailable."""
-        try:
-            with open(f"/proc/{pid}/stat", "rb") as fh:
-                st = fh.read()
-            # field 22, counted after the last ')' (comm may hold spaces)
-            return int(st[st.rindex(b")") + 2:].split()[19])
-        except (OSError, ValueError, IndexError):
-            return None
-
-    base = f"bun_csv_gate_{tag}_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
-    tmp = tempfile.gettempdir()
-    # the pre-r11 naming wrote exactly `base` (no PID suffix): those dirs
-    # have no live owner running this code, so they go through the same
-    # age rule as dead-PID dirs instead of leaking forever
-    candidates = glob.glob(os.path.join(tmp, base + "_*"))
-    legacy = os.path.join(tmp, base)
-    if os.path.isdir(legacy):
-        candidates.append(legacy)
-    for old in candidates:
-        if old == legacy:
-            # the legacy dir's tail is the md5 prefix, which can be
-            # all-decimal (~2% of tag/sf_dir combos) and collide with a
-            # live PID — it has no owner by construction, so never
-            # PID-parse it (r12 advice)
-            pid = None
-        else:
-            try:
-                pid = int(old.rsplit("_", 1)[-1])
-            except ValueError:
-                pid = None
-        if pid is not None and pid != os.getpid():
-            alive = False
-            try:
-                os.kill(pid, 0)  # scratch is host-local, so PIDs are too
-                alive = True
-            except ProcessLookupError:
-                pass  # owner gone; the age rule below decides
-            except OSError:
-                alive = True  # EPERM etc.: assume alive, don't touch
-            if alive:
-                # a live PID may be an unrelated process that recycled the
-                # number: the _OWNER marker records the creator's kernel
-                # start time — a mismatch means the real owner is gone and
-                # the age rule applies; no marker (pre-r12 dir) or no
-                # /proc means we can't disambiguate, so stay conservative
-                owner_start = None
-                try:
-                    with open(os.path.join(old, "_OWNER")) as fh:
-                        owner_start = int(fh.read().split()[1])
-                except (OSError, ValueError, IndexError):
-                    pass
-                live_start = proc_start(pid)
-                if (
-                    owner_start is None
-                    or live_start is None
-                    or owner_start == live_start
-                ):
-                    continue  # owner (apparently) alive — never reap
-        try:
-            if time.time() - os.path.getmtime(old) > 6 * 3600:
-                shutil.rmtree(old, ignore_errors=True)
-        except OSError:
-            pass
-    d = os.path.join(tmp, f"{base}_{os.getpid()}")
-    shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(d, exist_ok=True)
-    me = proc_start(os.getpid())
-    if me is not None:
-        with open(os.path.join(d, "_OWNER"), "w") as fh:
-            fh.write(f"{os.getpid()} {me}")
-    return d
+    """Per-(gate, sf_dir) staging directory under the process's scratch
+    root, wiped on entry (see ``scratch_dir``)."""
+    return scratch_dir(f"{tag}_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}")
 
 
 def _neardup_corpus(spark, sf_dir):

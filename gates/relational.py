@@ -925,9 +925,9 @@ def q_partitioned_pruned_read(spark, sf_dir):
 def q_bucketed_join_agg(spark, sf_dir):
     """Bucketed co-located join under the oracle gate (SURVEY §2.3 ext —
     previously pytest-only): orders and lineitem are bucketed AND
-    sorted by orderkey into per-process external tables (data under
-    _scratch_dir so concurrent drivers cannot clobber and dead runs get
-    reaped), then the merge-hinted join reads co-partitioned,
+    sorted by orderkey into managed tables (under the process's scratch
+    root when get_spark built the session, so concurrent drivers cannot
+    clobber each other), then the merge-hinted join reads co-partitioned,
     pre-sorted buckets — ZERO exchange and ZERO sort below the join at
     every SF (law-asserted; the hint pins SMJ so a small-SF broadcast
     cannot hide the bucket path). Both inputs are thinned 97x by a
@@ -939,7 +939,6 @@ def q_bucketed_join_agg(spark, sf_dir):
     import hashlib as _hl
 
     tag = _hl.md5(sf_dir.encode()).hexdigest()[:8]
-    base = _scratch_dir("bkt_join", sf_dir)
     o = (
         _t(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") % 97 == 0)
@@ -966,12 +965,10 @@ def q_bucketed_join_agg(spark, sf_dir):
     write_bucketed(
         o.repartition(8, "orderkey"),
         t_o, ["orderkey"], n_buckets=8, sort_cols=["orderkey"],
-        path=base + "/orders",
     )
     write_bucketed(
         li.repartition(8, "orderkey"),
         t_li, ["orderkey"], n_buckets=8, sort_cols=["orderkey"],
-        path=base + "/lineitem",
     )
     j = spark.table(t_o).hint("merge").join(spark.table(t_li), "orderkey")
     return j.groupBy((F.col("o_custkey") % 10).alias("cust_bucket")).agg(

@@ -107,6 +107,32 @@ def test_cli_config_precedence(tmp_path, monkeypatch):
     assert merge_config({"format": "table"})["format"] == "table"  # CLI beats env
 
 
+def test_cli_stdin_temp_file_is_removed_at_exit(tmp_path):
+    """``-`` reads stdin into a file under the scratch root: the file holds
+    the stdin bytes, and it is gone once the process exits."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "from bun_csv_spark.cli.main import _resolve_input\n"
+        "p = _resolve_input('-')\n"
+        "print(p, open(p, 'rb').read().hex())\n"
+    )
+    data = "h\u00e9,x\n1,2\n".encode()
+    out = subprocess.run(
+        [sys.executable, "-c", code], input=data, capture_output=True,
+        check=True, timeout=120,
+        env=dict(os.environ, TMPDIR=str(tmp_path), PYTHONPATH=repo,
+                 LC_ALL="C.UTF-8"),
+    )
+    path, written = out.stdout.decode().split()
+    assert path.startswith(str(tmp_path))
+    assert bytes.fromhex(written) == data
+    assert not list(tmp_path.iterdir())
+
+
 # -- edit overlay -------------------------------------------------------------
 
 

@@ -88,6 +88,25 @@ def test_every_public_def_has_a_consumer():
     assert not orphans, orphans
 
 
+def test_temp_state_goes_through_the_scratch_root():
+    """Only ``bun_csv_spark/scratch.py`` makes temp files or directories of
+    its own. Every other writer in the library and the gates goes under its
+    per-process root, which the owner's exit or the next process's reap
+    removes, so no temp state outlives the process that wrote it."""
+    bare = re.compile(
+        r"\b(mkdtemp|NamedTemporaryFile|gettempdir|TemporaryDirectory)\s*\("
+    )
+    hits = [
+        f"{p.relative_to(REPO)}:{n}"
+        for top in ("bun_csv_spark", "gates")
+        for p in sorted((REPO / top).rglob("*.py"))
+        if p != REPO / "bun_csv_spark" / "scratch.py"
+        for n, line in enumerate(p.read_text().splitlines(), 1)
+        if bare.search(line)
+    ]
+    assert not hits, hits
+
+
 def test_no_script_hard_codes_its_checkout():
     """Tools and tests find the repo from ``__file__``. A script that
     hard-codes this checkout's absolute path makes a copy of the repo run

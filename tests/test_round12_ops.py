@@ -299,63 +299,66 @@ def test_ann_pq_pinned_literals_reproduce(spark):
     assert coarse == _ANN_PQ_COARSE
 
 
-def test_scratch_dir_reaper_rules(monkeypatch, tmp_path):
-    """The reaper's three r12 rules: (1) a legacy UNSUFFIXED dir (pre-r11
-    naming) is reaped once stale; (2) a stale dir whose PID was recycled
-    by an unrelated live process (its _OWNER start time disagrees with
-    /proc) is reaped; (3) a stale dir with a live owner whose marker
-    MATCHES is never reaped."""
+def test_scratch_root_lock_rules(tmp_path):
+    """A scratch root's owner is the process holding its lock: (1) the root
+    of a SIGKILLed owner, whose exit handler never ran, is reaped by the
+    next process's first root() call, whatever its PID now names; (2) a
+    live owner's root survives that call; (3) a normal exit removes the
+    process's own root; (4) a fork()ed child's exit leaves its parent's
+    root in place."""
     import os
-    import time
+    import signal
+    import subprocess
+    import sys
 
-    from gates.common import _scratch_dir
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, TMPDIR=str(tmp_path), PYTHONPATH=repo)
+    head = "import os, sys\nfrom bun_csv_spark.scratch import root\n"
 
-    monkeypatch.setenv("TMPDIR", str(tmp_path))
-    import tempfile
+    def hold():
+        # makes its root, then lives until its stdin closes
+        p = subprocess.Popen(
+            [sys.executable, "-c", head + "print(root(), flush=True)\nsys.stdin.read()\n"],
+            env=env, stdin=subprocess.PIPE, stdout=subprocess.PIPE, text=True,
+        )
+        return p, p.stdout.readline().strip()
 
-    tempfile.tempdir = None  # force re-read of TMPDIR
+    def run(code):
+        out = subprocess.run([sys.executable, "-c", head + code], env=env,
+                             check=True, capture_output=True, text=True, timeout=120)
+        return out.stdout.strip()
+
+    killed, killed_root = hold()
+    live, live_root = hold()
     try:
-        import hashlib
-
-        base = (
-            f"bun_csv_gate_rtest_"
-            f"{hashlib.md5(b'/nonexistent_sf').hexdigest()[:8]}"
-        )
-        old_ts = time.time() - 7 * 3600
-
-        legacy = tmp_path / base
-        legacy.mkdir()
-        os.utime(legacy, (old_ts, old_ts))
-
-        # PID 1 is alive (init) but its start time can't match a marker
-        # from a long-dead creator: plant a wrong start time
-        recycled = tmp_path / f"{base}_1"
-        recycled.mkdir()
-        (recycled / "_OWNER").write_text("1 999999999")
-        os.utime(recycled, (old_ts, old_ts))
-
-        # a dir owned by PID 1 with a MATCHING marker must survive
-        def start_of(pid):
-            with open(f"/proc/{pid}/stat", "rb") as fh:
-                st = fh.read()
-            return int(st[st.rindex(b")") + 2:].split()[19])
-
-        mine = _scratch_dir("rtest", "/nonexistent_sf")
-        assert os.path.isdir(mine) and os.path.exists(
-            os.path.join(mine, "_OWNER")
-        )
-        assert not legacy.exists(), "stale legacy dir must be reaped"
-        assert not recycled.exists(), "recycled-PID stale dir must be reaped"
-
-        # matching marker: recreate with pid 1's real start time
-        survivor = tmp_path / f"{base}_1"
-        survivor.mkdir()
-        (survivor / "_OWNER").write_text(f"1 {start_of(1)}")
-        os.utime(survivor, (old_ts, old_ts))
-        _scratch_dir("rtest", "/nonexistent_sf")
-        assert survivor.exists(), "live-owner dir must never be reaped"
+        killed.send_signal(signal.SIGKILL)
+        killed.wait(timeout=60)
+        assert os.path.isfile(os.path.join(killed_root, ".lock"))
+        other_root = run("print(root())\n")
+        assert not os.path.exists(killed_root), "(1) a dead owner's root is reaped"
+        assert os.path.isdir(live_root), "(2) a live owner's root survives"
+        assert not os.path.exists(other_root), "(3) a normal exit removes the root"
+        live.stdin.close()
+        live.wait(timeout=60)
+        assert not os.path.exists(live_root), "(3) a normal exit removes the root"
     finally:
-        tempfile.tempdir = None
+        for p in (killed, live):
+            if p.poll() is None:
+                p.kill()
+            p.wait(timeout=60)
+            p.stdout.close()
+
+    forked_root = run(
+        "r = root()\n"
+        "pid = os.fork()\n"
+        "if pid == 0:\n"
+        "    sys.exit(0)\n"  # the child runs the inherited exit handlers
+        "os.waitpid(pid, 0)\n"
+        "assert os.path.isdir(r), '(4) the child removed its parent root'\n"
+        "print(r)\n"
+    )
+    assert forked_root.startswith(str(tmp_path))
+    assert not list(tmp_path.iterdir())
 
 
 def test_avi_decode_ignores_foreign_stream_chunks():

@@ -638,22 +638,60 @@ def test_connected_components_deep_chain(spark):
 
 
 def test_nation_csv_fixture_is_removed_at_exit(tmp_path):
-    """The option-matrix gates write their CSV fixture to a temp file that
-    must not outlive the process: build and collect csv_opts_comments in a
-    child whose TMPDIR is tmp_path, and no bcsv_opts_* file may remain."""
+    """Every temp writer goes under the process's scratch root, which goes
+    when the process exits. A child whose TMPDIR is empty, started in an
+    empty working directory, builds and collects every staging gate (the
+    streaming replays, the incremental stores, the partitioned, bucketed
+    and round-trip writes, the CSV option fixture), appends to a CSV file
+    and reads a latin-1 one. After it exits, its TMPDIR and its working
+    directory are as empty as they began: no scratch, no spark-warehouse/."""
+    import inspect
     import os
+    import re
     import subprocess
     import sys
 
+    from gates import GATES
+
+    stages = re.compile(
+        r"\b(_scratch_dir|run_stream_to_table|_nation_csv_fixture"
+        r"|write_bucketed|neardup_pairs_minhash_bucketed)\("
+    )
+    names = [g.name for g in GATES if stages.search(inspect.getsource(g.build))]
+    assert {
+        "streaming_join", "streaming_watermark", "streaming_kmv",
+        "incremental_dedup", "incremental_neardup", "incremental_neardup_narrow",
+        "partitioned_pruned_read", "bucketed_join_agg", "csv_roundtrip",
+        "jsonl_roundtrip", "csv_opts_comments", "neardup_pairs_bucketed",
+    } <= set(names), names
+
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    tmp, cwd, data = (tmp_path / d for d in ("tmp", "cwd", "data"))
+    for d in (tmp, cwd, data):
+        d.mkdir()
+    target = data / "target.csv"
+    target.write_text("a,b\n")
+    latin = data / "latin.csv"
+    latin.write_bytes("h\u00e9,x\n\u00e9,2\n".encode("latin-1"))
     code = (
         "import __spark_entry__ as e\n"
         "from bun_csv_spark.session import get_spark\n"
-        "spark = get_spark('fixture_leak', cpus=1, shuffle_partitions=1)\n"
-        f"e.queries()['csv_opts_comments'](spark, {SF!r}).collect()\n"
+        "from bun_csv_spark.sources.csv_reader import CSVOptions, read_csv\n"
+        "from bun_csv_spark.sources.csv_writer import append_csv_file\n"
+        "spark = get_spark('scratch_leak', cpus=2, shuffle_partitions=2)\n"
+        "qs = e.queries()\n"
+        f"for name in {names!r}:\n"
+        f"    qs[name](spark, {SF!r}).collect()\n"
+        "append_csv_file(spark.createDataFrame([(1, 'x')], 'a int, b string'),"
+        f" {str(target)!r})\n"
+        f"rows = read_csv(spark, {str(latin)!r}, CSVOptions(encoding='latin-1'))"
+        ".collect()\n"
+        "assert [tuple(r) for r in rows] == [('\\u00e9', '2')], rows\n"
     )
     subprocess.run(
-        [sys.executable, "-c", code], cwd=repo, check=True, timeout=600,
-        env=dict(os.environ, TMPDIR=str(tmp_path)),
+        [sys.executable, "-c", code], cwd=cwd, check=True, timeout=900,
+        env=dict(os.environ, TMPDIR=str(tmp), PYTHONPATH=repo),
     )
-    assert not list(tmp_path.glob("bcsv_opts_*"))
+    assert target.read_text() == "a,b\n1,x\n"
+    assert not list(tmp.iterdir())
+    assert not list(cwd.iterdir())
