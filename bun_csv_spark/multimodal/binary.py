@@ -21,6 +21,10 @@ Scale notes: binary payloads inflate row size — keep
 ``spark.sql.files.maxPartitionBytes`` low enough that an Arrow batch of
 payloads fits executor memory, and select the payload column as late as
 possible so column pruning keeps it out of unrelated scans.
+
+Every extractor is a per-payload kernel run by ``_map_payloads`` (one
+``mapInPandas``) and every ``attach_*_payload`` fixture writer a per-row
+maker run by ``_attach`` (one binary pandas UDF).
 """
 
 from __future__ import annotations
@@ -33,9 +37,45 @@ import wave
 import zlib
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType
+
+
+def _map_payloads(df: DataFrame, id_col: str, payload_col: str, out_cols, rows) -> DataFrame:
+    """One Arrow-batched ``mapInPandas`` over ``(id_col, payload_col)``:
+    an output row ``(id, *t)`` for every tuple ``t`` that
+    ``rows(payload_bytes)`` yields, zero or more per payload. ``out_cols``
+    are the schema fields after the id, each ``"<name> long"`` or
+    ``"<name> string"``."""
+    fields = [f"{id_col} long", *out_cols]
+    names = [f.split()[0] for f in fields]
+    dtypes = ["object" if f.endswith(" string") else "int64" for f in fields]
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            out = [(i, *t) for i, b in zip(pdf[id_col].tolist(), pdf[payload_col])
+                   for t in rows(bytes(b))]
+            cols = list(zip(*out)) or [()] * len(names)
+            yield pd.DataFrame(
+                {n: pd.Series(c, dtype=t) for n, c, t in zip(names, cols, dtypes)}
+            )
+
+    return df.select(id_col, payload_col).mapInPandas(batches, schema=", ".join(fields))
+
+
+def _attach(df: DataFrame, payload_col: str, make, *cols: str) -> DataFrame:
+    """``df`` plus ``payload_col`` = ``make(*values)`` over each row's
+    ``cols``, as one Arrow-batched binary pandas UDF that takes
+    ``make``'s name (the name the physical plan shows)."""
+
+    def udf(*series: pd.Series) -> pd.Series:
+        return pd.Series([make(*v) for v in zip(*(s.tolist() for s in series))])
+
+    udf.__name__ = make.__name__
+    return df.withColumn(payload_col, F.pandas_udf(udf, BinaryType())(*map(F.col, cols)))
 
 
 def attach_binary_payload(
@@ -169,8 +209,6 @@ def decode_png_pixels(b: bytes):
     Returns (width, height, ndarray[height, width, channels] uint8).
     Palette/interlaced/16-bit images raise ValueError (out of scope), as
     do truncated or corrupt files."""
-    import numpy as np
-
     if b[:8] != b"\x89PNG\r\n\x1a\n":
         raise ValueError("not a PNG file")
     pos, n = 8, len(b)
@@ -289,8 +327,6 @@ def decode_bmp_pixels(b: bytes):
     top-down). Raises ValueError for anything that isn't this exact
     (and most common uncompressed) BMP flavor; compressed codecs
     (PNG/GIF/JPEG entropy coding) stay out of scope by design."""
-    import numpy as np
-
     if b[:2] != b"BM" or len(b) < 54:
         raise ValueError("not a BMP file")
     offset = struct.unpack_from("<I", b, 10)[0]
@@ -340,34 +376,20 @@ def extract_image_meta(
     md5-derived dims (1 + first/second 16 bits mod 512) so arbitrary
     bytes still flow through the Arrow-batched plumbing."""
 
-    out_schema = f"{id_col} long, width long, height long"
-
-    def one(b) -> tuple[int, int]:
-        raw = bytes(b)
-        dims = parse_image_dims(raw)
+    def rows(b):
+        dims = parse_image_dims(b)
         if dims is None:
-            h = hashlib.md5(raw).hexdigest()
+            h = hashlib.md5(b).hexdigest()
             dims = (1 + int(h[:4], 16) % 512, 1 + int(h[4:8], 16) % 512)
-        return dims
+        yield dims
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            dims = pdf[payload_col].map(one)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "width": dims.map(lambda d: d[0]).astype("int64"),
-                    "height": dims.map(lambda d: d[1]).astype("int64"),
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(batches, schema=out_schema)
+    return _map_payloads(df, id_col, payload_col, ("width long", "height long"), rows)
 
 
 def resize_dims(width, height, max_dim: int = 256):
     """Aspect-preserving thumbnail dimensions as Column expressions
     (integer math, floor scaling, min 1px). The geometry half of a resize
-    operator — the pixel half plugs into decode_image_stub."""
+    operator — the pixel half is ``decode_image``."""
     from pyspark.sql import Column
 
     w = F.col(width) if isinstance(width, str) else width
@@ -394,46 +416,25 @@ def attach_wav_payload(
     genuine RIFF/WAVE header to parse while keeping every field derivable
     from (id, text) — which is what lets the SQL oracle state the expected
     values without building bytes."""
-    from pyspark.sql.types import BinaryType
 
-    @F.pandas_udf(BinaryType())
-    def wav(ids: pd.Series, texts: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                make_wav_payload(t.encode("utf-8"), AUDIO_RATES[int(i) % 4])
-                for i, t in zip(ids, texts)
-            ]
-        )
+    def wav(i, t):
+        return make_wav_payload(t.encode("utf-8"), AUDIO_RATES[i % 4])
 
-    return df.withColumn(payload_col, wav(F.col(id_col), F.col(text_col)))
+    return _attach(df, payload_col, wav, id_col, text_col)
 
 
 def attach_png_payload(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    w_mult: int = 37,
-    h_mult: int = 53,
-    mod: int = 512,
+    df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
 ) -> DataFrame:
     """Materialize a REAL PNG header per row with deterministic dims
-    width = 1 + (id*w_mult) % mod, height = 1 + (id*h_mult) % mod — a
-    genuine IHDR for ``extract_image_meta`` to parse, with dims the SQL
-    oracle can restate from ``id`` alone."""
-    from pyspark.sql.types import BinaryType
+    width = 1 + (id*37) % 512, height = 1 + (id*53) % 512 — a genuine
+    IHDR for ``extract_image_meta`` to parse, with dims the SQL oracle
+    can restate from ``id`` alone."""
 
-    @F.pandas_udf(BinaryType())
-    def png(ids: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                make_png_payload(
-                    1 + int(i) * w_mult % mod, 1 + int(i) * h_mult % mod
-                )
-                for i in ids
-            ]
-        )
+    def png(i):
+        return make_png_payload(1 + i * 37 % 512, 1 + i * 53 % 512)
 
-    return df.withColumn(payload_col, png(F.col(id_col)))
+    return _attach(df, payload_col, png, id_col)
 
 
 def decode_wav_samples(b: bytes):
@@ -442,8 +443,6 @@ def decode_wav_samples(b: bytes):
     Returns (sample_rate, ndarray[n_frames, n_channels] int64; 8-bit PCM
     is unsigned [0,255], 16-bit signed). Raises ValueError for non-PCM /
     other widths — compressed audio needs an external codec."""
-    import numpy as np
-
     try:
         with wave.open(io.BytesIO(bytes(b))) as w:
             rate = w.getframerate()
@@ -489,23 +488,14 @@ def extract_audio_meta(
     fall back to deterministic md5-derived values. Arrow-batched
     mapInPandas; output (id, sample_rate, n_samples, duration_ms)."""
 
-    out_schema = f"{id_col} long, sample_rate long, n_samples long, duration_ms long"
+    def rows(b):
+        rate, n = _audio_meta_one(b)
+        yield rate, n, n * 1000 // rate
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            meta = pdf[payload_col].map(_audio_meta_one)
-            rates = meta.map(lambda m: m[0]).astype("int64")
-            n_samples = meta.map(lambda m: m[1]).astype("int64")
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "sample_rate": rates,
-                    "n_samples": n_samples,
-                    "duration_ms": (n_samples * 1000 // rates).astype("int64"),
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(batches, schema=out_schema)
+    return _map_payloads(
+        df, id_col, payload_col,
+        ("sample_rate long", "n_samples long", "duration_ms long"), rows,
+    )
 
 
 def sample_frames(
@@ -524,64 +514,38 @@ def sample_frames(
     else the deterministic md5 stub; the one-in-many-out Arrow batch
     row explosion is the production part."""
 
-    out_schema = f"{id_col} long, frame_idx long, frame_ts_ms long, frame_hash string"
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, tss, hashes = [], [], [], []
-            for rid, payload in zip(pdf[id_col], pdf[payload_col]):
-                b = bytes(payload)
-                avi = parse_avi_meta(b)
-                if avi is not None:
-                    _, _, uspf, n_avi = avi
-                    _, _, _, av_frames = decode_avi_frames(b)
-                    h = hashlib.md5(
-                        b"".join(f.tobytes() for f in av_frames)
-                    ).hexdigest()
-                    duration_ms = n_avi * uspf // 1000
-                    # strict ts < duration, matching sample_video_frames
-                    # on the same payload (ts == duration is media time
-                    # that does not exist; the WAV/stub branches below
-                    # keep their long-pinned inclusive endpoint)
-                    n_frames = (
-                        min((duration_ms - 1) // every_ms + 1, max_frames)
-                        if duration_ms > 0
-                        else 0
-                    )
-                    for i in range(n_frames):
-                        ids.append(rid)
-                        idxs.append(i)
-                        tss.append(i * every_ms)
-                        hashes.append(
-                            hashlib.md5(f"{h}:{i}".encode()).hexdigest()
-                        )
-                    continue
-                rate, n_samples = _audio_meta_one(b)
-                # the frame hash keys off the DECODED sample data (WAV
-                # frames), not the container bytes — container metadata
-                # doesn't change frame content; non-containers hash whole
-                data = b
-                if parse_wav_meta(b) is not None:
-                    with wave.open(io.BytesIO(b)) as w:
-                        data = w.readframes(w.getnframes())
-                h = hashlib.md5(data).hexdigest()
-                duration_ms = n_samples * 1000 // rate
-                n_frames = min(duration_ms // every_ms + 1, max_frames)
-                for i in range(n_frames):
-                    ids.append(rid)
-                    idxs.append(i)
-                    tss.append(i * every_ms)
-                    hashes.append(hashlib.md5(f"{h}:{i}".encode()).hexdigest())
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int64"),
-                    "frame_ts_ms": pd.Series(tss, dtype="int64"),
-                    "frame_hash": pd.Series(hashes, dtype="object"),
-                }
+    def rows(b):
+        if parse_avi_meta(b) is not None:
+            _, _, uspf, frames = decode_avi_frames(b)
+            data = b"".join(f.tobytes() for f in frames)
+            duration_ms = len(frames) * uspf // 1000
+            # strict ts < duration, matching sample_video_frames on the
+            # same payload (ts == duration is media time that does not
+            # exist; the WAV/stub branch keeps its long-pinned inclusive
+            # endpoint)
+            n_frames = (
+                min((duration_ms - 1) // every_ms + 1, max_frames)
+                if duration_ms > 0
+                else 0
             )
+        else:
+            rate, n_samples = _audio_meta_one(b)
+            # the frame hash keys off the DECODED sample data (WAV
+            # frames), not the container bytes — container metadata
+            # doesn't change frame content; non-containers hash whole
+            data = b
+            if parse_wav_meta(b) is not None:
+                with wave.open(io.BytesIO(b)) as w:
+                    data = w.readframes(w.getnframes())
+            n_frames = min(n_samples * 1000 // rate // every_ms + 1, max_frames)
+        h = hashlib.md5(data).hexdigest()
+        for i in range(n_frames):
+            yield i, i * every_ms, hashlib.md5(f"{h}:{i}".encode()).hexdigest()
 
-    return df.select(id_col, payload_col).mapInPandas(batches, schema=out_schema)
+    return _map_payloads(
+        df, id_col, payload_col,
+        ("frame_idx long", "frame_ts_ms long", "frame_hash string"), rows,
+    )
 
 
 def extract_binary_features(
@@ -593,40 +557,46 @@ def extract_binary_features(
     mapInPandas shape (iterator of pandas batches in/out, explicit output
     schema) is exactly what a real decoder uses; swap the body, keep the
     harness."""
-    out_schema = f"{id_col} long, byte_len long, content_hash string"
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = pdf[payload_col]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "byte_len": payloads.map(len).astype("int64"),
-                    "content_hash": payloads.map(
-                        lambda b: hashlib.md5(bytes(b)).hexdigest()
-                    ),
-                }
-            )
+    def rows(b):
+        yield len(b), hashlib.md5(b).hexdigest()
 
-    return df.select(id_col, payload_col).mapInPandas(batches, schema=out_schema)
+    return _map_payloads(
+        df, id_col, payload_col, ("byte_len long", "content_hash string"), rows
+    )
+
+
+def _rgb_fixture(i: int, bias: int = 0, texture: bool = False):
+    """(width, height, ndarray[h, w, 3] uint8) of doc ``i``'s pixels for
+    the BMP, PNG and GIF fixtures, whose oracles share one SQL
+    restatement: dims (1 + i % 16, 1 + i*3 % 16), channels at (x, y) =
+    (i + x*7 + y*13, i + x*11 + y*3, i + x*5 + y*17) + bias + t mod 256,
+    t = x*y*(1 + i % 7) with ``texture``, else 0."""
+    w, h = 1 + i % 16, 1 + (i * 3) % 16
+    x = np.arange(w).reshape(1, w)
+    y = np.arange(h).reshape(h, 1)
+    t = x * y * (1 + i % 7) if texture else 0
+    px = np.empty((h, w, 3), np.uint8)
+    for c, (kx, ky) in enumerate(((7, 13), (11, 3), (5, 17))):
+        px[:, :, c] = (i + x * kx + y * ky + bias + t) % 256
+    return w, h, px
 
 
 def attach_bmp_payload(
     df: DataFrame,
     id_col: str = "doc_id",
     payload_col: str = "payload",
-    mod: int = 16,
     bias: int = 0,
     src_col: str | None = None,
     texture: bool = False,
 ) -> DataFrame:
-    """Materialize a REAL 24-bit BMP per row with deterministic pixels:
-    dims (1 + id % mod, 1 + id*3 % mod), channel values at (x, y) =
-    (id + x*7 + y*13 + bias, id + x*11 + y*3 + bias, id + x*5 + y*17
-    + bias) mod 256 for (B, G, R). A genuine uncompressed container for
-    decode_bmp_pixels, with every pixel restatable from ``id`` alone —
-    which is what lets the SQL oracle state exact channel sums without
-    building bytes.
+    """Materialize a REAL 24-bit BMP per row with deterministic pixels
+    (``_rgb_fixture``): dims (1 + id % 16, 1 + id*3 % 16), channel
+    values at (x, y) = (id + x*7 + y*13 + bias, id + x*11 + y*3 + bias,
+    id + x*5 + y*17 + bias) mod 256 for (B, G, R). A genuine
+    uncompressed container for decode_bmp_pixels, with every pixel
+    restatable from ``id`` alone — which is what lets the SQL oracle
+    state exact channel sums without building bytes.
 
     ``bias`` models a brightness tweak of the same underlying image
     (near-duplicate fixture for perceptual hashing); ``src_col`` lets a
@@ -636,80 +606,51 @@ def attach_bmp_payload(
     (``x*y*(1 + id % 7)``) to every channel so distinct ids produce
     perceptually DISTINCT images (without it the additive formulas make
     same-dims images order-identical, collapsing perceptual hashes)."""
-    import numpy as np
 
-    from pyspark.sql.types import BinaryType
+    def bmp(i):
+        w, h, px = _rgb_fixture(i, bias, texture)
+        return make_bmp_payload(w, h, px.tobytes())
 
-    @F.pandas_udf(BinaryType())
-    def bmp(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            i = int(i)
-            w, h = 1 + i % mod, 1 + (i * 3) % mod
-            x = np.arange(w).reshape(1, w)
-            y = np.arange(h).reshape(h, 1)
-            t = x * y * (1 + i % 7) if texture else 0
-            px = np.empty((h, w, 3), np.uint8)
-            px[:, :, 0] = (i + x * 7 + y * 13 + bias + t) % 256
-            px[:, :, 1] = (i + x * 11 + y * 3 + bias + t) % 256
-            px[:, :, 2] = (i + x * 5 + y * 17 + bias + t) % 256
-            out.append(make_bmp_payload(w, h, px.tobytes()))
-        return pd.Series(out)
-
-    return df.withColumn(payload_col, bmp(F.col(src_col or id_col)))
+    return _attach(df, payload_col, bmp, src_col or id_col)
 
 
 def extract_pixel_stats(
     df: DataFrame,
     id_col: str = "doc_id",
     payload_col: str = "payload",
-    decoder=None,
+    decoder=decode_image,
     channel_cols: tuple = ("sum_b", "sum_g", "sum_r"),
 ) -> DataFrame:
     """REAL pixel statistics over image payloads: decode every pixel
-    (default ``decode_bmp_pixels``; pass ``decode_image`` to also accept
-    PNG — both stdlib-only) and reduce to exact integer channel sums.
-    Arrow-batched mapInPandas; output (id, width, height, n_pixels,
-    *channel_cols) — all BIGINT, so the oracle compares exactly, no
-    float tolerance."""
-    if decoder is None:
-        decoder = decode_bmp_pixels
-    out_schema = (
-        f"{id_col} long, width long, height long, n_pixels long, "
-        + ", ".join(f"{c} long" for c in channel_cols)
+    (default ``decode_image``, which dispatches BMP, PNG, GIF and JPEG —
+    all stdlib-only; a per-format decoder skips the dispatch) and reduce
+    to exact integer channel sums. Arrow-batched mapInPandas; output
+    (id, width, height, n_pixels, *channel_cols) — all BIGINT, so the
+    oracle compares exactly, no float tolerance."""
+
+    def rows(b):
+        w, h, px = decoder(b)
+        sums = px.reshape(-1, px.shape[2]).sum(axis=0, dtype="int64")
+        yield (w, h, w * h, *(int(sums[k]) for k in range(len(channel_cols))))
+
+    return _map_payloads(
+        df, id_col, payload_col,
+        ("width long", "height long", "n_pixels long",
+         *(f"{c} long" for c in channel_cols)),
+        rows,
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in
-                    (id_col, "width", "height", "n_pixels", *channel_cols)}
-            for i, b in zip(pdf[id_col], pdf[payload_col]):
-                w, h, px = decoder(bytes(b))
-                nch = px.shape[2]
-                sums = px.reshape(-1, nch).sum(axis=0, dtype="int64")
-                rows[id_col].append(int(i))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_pixels"].append(w * h)
-                for k, col in enumerate(channel_cols):
-                    rows[col].append(int(sums[k]))
-            yield pd.DataFrame({k: pd.Series(v, dtype="int64") for k, v in rows.items()})
-
-    return df.select(id_col, payload_col).mapInPandas(batches, schema=out_schema)
 
 
 def attach_pcm_wav_payload(
     df: DataFrame,
     id_col: str = "doc_id",
     payload_col: str = "payload",
-    base_samples: int = 16,
-    mod_samples: int = 64,
     bias: int = 0,
     src_col: str | None = None,
     texture: bool = False,
 ) -> DataFrame:
     """Materialize a REAL 8-bit PCM mono WAV per row with deterministic
-    samples: n = base + id % mod samples, sample i = (id*31 + i*7
+    samples: n = 16 + id % 64 samples, sample i = (id*31 + i*7
     + bias [+ (i*i % 16) * (1 + id % 5) if texture]) % 256,
     rate = AUDIO_RATES[id % 4] — every sample restatable from ``id`` for
     the SQL oracle.
@@ -720,23 +661,14 @@ def attach_pcm_wav_payload(
     id-dependent quadratic ripple so distinct ids produce waveforms
     with DISTINCT local shape (the plain sawtooth is order-identical
     across ids, which collapses difference fingerprints)."""
-    import numpy as np
 
-    from pyspark.sql.types import BinaryType
+    def wav(i):
+        idx = np.arange(16 + i % 64)
+        t = (idx * idx % 16) * (1 + i % 5) if texture else 0
+        data = ((i * 31 + idx * 7 + bias + t) % 256).astype(np.uint8).tobytes()
+        return make_wav_payload(data, AUDIO_RATES[i % 4])
 
-    @F.pandas_udf(BinaryType())
-    def wav(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            i = int(i)
-            n = base_samples + i % mod_samples
-            idx = np.arange(n)
-            t = (idx * idx % 16) * (1 + i % 5) if texture else 0
-            data = ((i * 31 + idx * 7 + bias + t) % 256).astype(np.uint8).tobytes()
-            out.append(make_wav_payload(data, AUDIO_RATES[i % 4]))
-        return pd.Series(out)
-
-    return df.withColumn(payload_col, wav(F.col(src_col or id_col)))
+    return _attach(df, payload_col, wav, src_col or id_col)
 
 
 def extract_audio_stats(
@@ -746,58 +678,33 @@ def extract_audio_stats(
     (decode_wav_samples — stdlib wave + numpy) and reduce to exact
     integer stats. Output (id, sample_rate, n_samples, sum_samples,
     peak) — all BIGINT, exact oracle compare."""
-    out_schema = (
-        f"{id_col} long, sample_rate long, n_samples long, "
-        "sum_samples long, peak long"
+
+    def rows(b):
+        rate, samples = decode_wav_samples(b)
+        flat = samples.reshape(-1)
+        yield rate, len(flat), int(flat.sum()), int(flat.max()) if len(flat) else 0
+
+    return _map_payloads(
+        df, id_col, payload_col,
+        ("sample_rate long", "n_samples long", "sum_samples long", "peak long"),
+        rows,
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in
-                    (id_col, "sample_rate", "n_samples", "sum_samples", "peak")}
-            for i, b in zip(pdf[id_col], pdf[payload_col]):
-                rate, samples = decode_wav_samples(bytes(b))
-                flat = samples.reshape(-1)
-                rows[id_col].append(int(i))
-                rows["sample_rate"].append(rate)
-                rows["n_samples"].append(len(flat))
-                rows["sum_samples"].append(int(flat.sum()))
-                rows["peak"].append(int(flat.max()) if len(flat) else 0)
-            yield pd.DataFrame({k: pd.Series(v, dtype="int64") for k, v in rows.items()})
-
-    return df.select(id_col, payload_col).mapInPandas(batches, schema=out_schema)
 
 
 def attach_png_rgb_payload(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    mod: int = 16,
+    df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
 ) -> DataFrame:
     """Materialize a REAL complete PNG per row (IDAT pixels, zlib) with
     the SAME deterministic id-derived dims/channel formulas as
-    attach_bmp_payload — so one SQL oracle covers both containers and a
-    decode through the zlib+unfilter path must land on identical sums."""
-    import numpy as np
+    attach_bmp_payload (``_rgb_fixture``) — so one SQL oracle covers
+    both containers and a decode through the zlib+unfilter path must
+    land on identical sums."""
 
-    from pyspark.sql.types import BinaryType
+    def png(i):
+        w, h, px = _rgb_fixture(i)
+        return make_png_rgb_payload(w, h, px.tobytes())
 
-    @F.pandas_udf(BinaryType())
-    def png(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            i = int(i)
-            w, h = 1 + i % mod, 1 + (i * 3) % mod
-            x = np.arange(w).reshape(1, w)
-            y = np.arange(h).reshape(h, 1)
-            px = np.empty((h, w, 3), np.uint8)
-            px[:, :, 0] = (i + x * 7 + y * 13) % 256
-            px[:, :, 1] = (i + x * 11 + y * 3) % 256
-            px[:, :, 2] = (i + x * 5 + y * 17) % 256
-            out.append(make_png_rgb_payload(w, h, px.tobytes()))
-        return pd.Series(out)
-
-    return df.withColumn(payload_col, png(F.col(id_col)))
+    return _attach(df, payload_col, png, id_col)
 
 
 def make_gif_indexed_payload(
@@ -894,8 +801,6 @@ def decode_gif_pixels(b: bytes):
     (variable-width codes, clear/EOI, 4096-entry dictionary) + palette
     mapping. Returns (width, height, ndarray[h, w, 3] uint8 RGB) for the
     FIRST image block. Interlaced images raise ValueError."""
-    import numpy as np
-
     if b[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF file")
     sw, sh, flags, _bg, _ar = struct.unpack_from("<HHBBB", b, 6)
@@ -945,52 +850,40 @@ def decode_gif_pixels(b: bytes):
 
 
 def attach_gif_payload(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    mod: int = 16,
+    df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
 ) -> DataFrame:
-    """Materialize a REAL LZW-coded GIF per row: dims (1 + id % mod,
-    1 + id*3 % mod) as the BMP/PNG fixtures, palette index at (x, y) =
-    (id + x*7 + y*13) % 256, palette entry i -> (i, 3i % 256, 7i % 256).
-    Decoded channel sums are therefore restatable from ``id`` arithmetic
-    alone — through a genuine LZW bitstream."""
-    import numpy as np
-
-    from pyspark.sql.types import BinaryType
-
+    """Materialize a REAL LZW-coded GIF per row: dims (1 + id % 16,
+    1 + id*3 % 16) as the BMP/PNG fixtures, palette index at (x, y) =
+    (id + x*7 + y*13) % 256 (``_rgb_fixture``'s first channel), palette
+    entry i -> (i, 3i % 256, 7i % 256). Decoded channel sums are
+    therefore restatable from ``id`` arithmetic alone — through a
+    genuine LZW bitstream."""
     palette = bytes(
         np.array(
             [[i, (i * 3) % 256, (i * 7) % 256] for i in range(256)], np.uint8
         )
     )
 
-    @F.pandas_udf(BinaryType())
-    def gif(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            i = int(i)
-            w, h = 1 + i % mod, 1 + (i * 3) % mod
-            x = np.arange(w).reshape(1, w)
-            y = np.arange(h).reshape(h, 1)
-            idx = ((i + x * 7 + y * 13) % 256).astype(np.uint8)
-            out.append(make_gif_indexed_payload(w, h, idx.tobytes(), palette))
-        return pd.Series(out)
+    def gif(i):
+        w, h, px = _rgb_fixture(i)
+        return make_gif_indexed_payload(w, h, px[:, :, 0].tobytes(), palette)
 
-    return df.withColumn(payload_col, gif(F.col(id_col)))
+    return _attach(df, payload_col, gif, id_col)
+
+
+def _pack64(bits) -> int:
+    """64 booleans packed LSB-first (bit k = ``bits.flat[k]``) into one
+    two's-complement int64."""
+    return int(np.packbits(bits.reshape(-1), bitorder="little").view("<i8")[0])
 
 
 def extract_dhash(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    decoder=None,
-    grid: tuple = (9, 8),
+    df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
 ) -> DataFrame:
     """Perceptual difference-hash (dHash) per image — the standard
     near-duplicate fingerprint for photos (Krawetz; the 'resize to 9x8,
-    compare neighbors' hash): decode the payload, nearest-neighbor
-    sample onto a ``grid`` = (9, 8) grayscale raster, set bit (i, j)
+    compare neighbors' hash): decode the payload (``decode_image``),
+    nearest-neighbor sample onto a 9x8 grayscale raster, set bit (i, j)
     when gray(i+1, j) > gray(i, j), pack the 8x8 comparisons LSB-first
     into ONE int64. Brightness shifts and re-encodes barely move it;
     different photos land far apart in Hamming space.
@@ -1000,90 +893,43 @@ def extract_dhash(
     (2 * target), gray = (B + G + R) // 3. Arrow-batched mapInPandas —
     pixels never become Python row objects; output (id, dhash) feeds
     ``operators.dedup.hamming_pairs64`` for banded near-dup pairing."""
-    import numpy as np
 
-    if decoder is None:
-        decoder = decode_bmp_pixels
-    gx, gy = grid
-    out_schema = f"{id_col} long, width long, height long, dhash long"
+    def rows(b):
+        w, h, px = decode_image(b)
+        xs = ((2 * np.arange(9) + 1) * w) // 18
+        ys = ((2 * np.arange(8) + 1) * h) // 16
+        g = px[ys][:, xs].astype(np.int64).sum(axis=2) // 3
+        yield w, h, _pack64(g[:, 1:] > g[:, :-1])  # bit j*8 + i: row j, col i
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, ws, hs, hashes = [], [], [], []
-            for i, b in zip(pdf[id_col], pdf[payload_col]):
-                w, h, px = decoder(bytes(b))
-                xs = ((2 * np.arange(gx) + 1) * w) // (2 * gx)
-                ys = ((2 * np.arange(gy) + 1) * h) // (2 * gy)
-                g = px[ys][:, xs].astype(np.int64).sum(axis=2) // 3
-                bits = g[:, 1:] > g[:, :-1]  # (gy rows j, gx-1 cols i)
-                val = 0
-                for j in range(gy):
-                    for i_ in range(gx - 1):
-                        if bits[j, i_]:
-                            val |= 1 << (j * (gx - 1) + i_)
-                if val >= 1 << 63:
-                    val -= 1 << 64  # two's-complement int64 wrap
-                ids.append(int(i))
-                ws.append(w)
-                hs.append(h)
-                hashes.append(val)
-            yield pd.DataFrame(
-                {id_col: pd.Series(ids, dtype="int64"),
-                 "width": pd.Series(ws, dtype="int64"),
-                 "height": pd.Series(hs, dtype="int64"),
-                 "dhash": pd.Series(hashes, dtype="int64")}
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(batches, schema=out_schema)
+    return _map_payloads(
+        df, id_col, payload_col, ("width long", "height long", "dhash long"), rows
+    )
 
 
 def extract_audio_fingerprint(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    n_points: int = 65,
+    df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
 ) -> DataFrame:
     """Difference fingerprint over decoded PCM samples — the waveform
     analogue of ``extract_dhash`` (Chromaprint-style local-shape bits,
-    minus the spectral transform): nearest-neighbor sample ``n_points``
-    = 65 amplitudes across the clip (src = ((2t + 1) * n) // (2 *
-    n_points) — duration-invariant, so re-sampled/trimmed-pad twins
-    still align), bit t = amp(t+1) > amp(t), packed LSB-first into one
-    int64. DC/level shifts barely move it; different recordings land
-    far apart. Arrow-batched mapInPandas, zero shuffles; output
-    (id, sample_rate, n_samples, fingerprint) feeds
-    ``operators.dedup.hamming_pairs64``."""
-    import numpy as np
+    minus the spectral transform): nearest-neighbor sample 65
+    amplitudes across the clip (src = ((2t + 1) * n) // 130 —
+    duration-invariant, so re-sampled/trimmed-pad twins still align),
+    bit t = amp(t+1) > amp(t), packed LSB-first into one int64. DC/level
+    shifts barely move it; different recordings land far apart.
+    Arrow-batched mapInPandas, zero shuffles; output (id, sample_rate,
+    n_samples, fingerprint) feeds ``operators.dedup.hamming_pairs64``."""
 
-    out_schema = f"{id_col} long, sample_rate long, n_samples long, fingerprint long"
+    def rows(b):
+        rate, arr = decode_wav_samples(b)
+        mono = arr[:, 0]
+        n = mono.shape[0]
+        amp = mono[((2 * np.arange(65) + 1) * n) // 130]
+        yield rate, n, _pack64(amp[1:] > amp[:-1])
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, rates, ns, fps = [], [], [], []
-            for i, b in zip(pdf[id_col], pdf[payload_col]):
-                rate, arr = decode_wav_samples(bytes(b))
-                mono = arr[:, 0]
-                n = mono.shape[0]
-                src = ((2 * np.arange(n_points) + 1) * n) // (2 * n_points)
-                amp = mono[src]
-                val = 0
-                for t in range(n_points - 1):
-                    if amp[t + 1] > amp[t]:
-                        val |= 1 << t
-                if val >= 1 << 63:
-                    val -= 1 << 64
-                ids.append(int(i))
-                rates.append(int(rate))
-                ns.append(int(n))
-                fps.append(val)
-            yield pd.DataFrame(
-                {id_col: pd.Series(ids, dtype="int64"),
-                 "sample_rate": pd.Series(rates, dtype="int64"),
-                 "n_samples": pd.Series(ns, dtype="int64"),
-                 "fingerprint": pd.Series(fps, dtype="int64")}
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(batches, schema=out_schema)
+    return _map_payloads(
+        df, id_col, payload_col,
+        ("sample_rate long", "n_samples long", "fingerprint long"), rows,
+    )
 
 
 # --- JPEG baseline sequential (ITU-T T.81, public spec) ---------------------
@@ -1175,8 +1021,6 @@ def _huff_decode_table(bits: bytes, vals: bytes) -> tuple:
 
 
 def _dct_matrix():
-    import numpy as np
-
     x = np.arange(8)
     c = np.cos((2 * x[None, :] + 1) * x[:, None] * np.pi / 16)
     c *= np.sqrt(2.0 / 8.0)
@@ -1213,8 +1057,6 @@ def _prep_components(planes: list, width: int, height: int, samp: list):
     dimensions and edge-pad to the MCU grid. Returns (component
     planes, mcx, mcy) — shared by the baseline and progressive
     encoders."""
-    import numpy as np
-
     hmax = max(hv[0] for hv in samp)
     vmax = max(hv[1] for hv in samp)
     assert all(hmax % hv[0] == 0 and vmax % hv[1] == 0 for hv in samp)
@@ -1247,8 +1089,6 @@ def _encode_baseline(
     per-component DC predictors. A nonzero ``restart_interval`` writes a
     DRI segment and, after every that many MCUs, pads to a byte, emits
     RST0..RST7 in turn and resets the DC predictors (T.81 E.1.4)."""
-    import numpy as np
-
     q = np.ones(64, np.int64) if quant is None else np.asarray(quant, np.int64)
     assert q.shape == (64,) and (q > 0).all() and (q < 256).all()
     assert 0 <= restart_interval < 1 << 16
@@ -1361,8 +1201,6 @@ def make_jpeg_gray_payload(
     quantization, EXACTLY lossless for images constant within each 8x8
     block (constant c => DC = 8*(c-128), every AC rounds to 0) — the
     property the oracle-checked fixtures rely on."""
-    import numpy as np
-
     img = np.frombuffer(gray_rows, np.uint8, width * height).reshape(
         height, width
     )
@@ -1386,8 +1224,6 @@ def make_jpeg_color_payload(
     ``decode_jpeg_pixels`` is near-lossless for 4:4:4 block-constant
     input and for 4:2:0 input constant per 16x16 macroblock (chroma
     box-average of a constant is the constant)."""
-    import numpy as np
-
     if subsampling not in ("444", "420"):
         raise ValueError("subsampling must be '444' or '420'")
     px = (
@@ -1426,8 +1262,6 @@ def _encode_progressive(
     bits. Because the coefficients are transmitted losslessly, decoding
     a progressive encoding must produce pixels BIT-IDENTICAL to
     decoding the baseline encoding of the same input."""
-    import numpy as np
-
     q = np.ones(64, np.int64) if quant is None else np.asarray(quant, np.int64)
     assert q.shape == (64,) and (q > 0).all() and (q < 256).all()
     nc = len(planes)
@@ -1639,8 +1473,6 @@ def make_jpeg_progressive_payload(
     AC refinement with EOB runs). Decoding it must match decoding the
     baseline encoding of the same input BIT-EXACTLY (the coefficients
     are identical; only their transmission order differs)."""
-    import numpy as np
-
     if subsampling not in ("444", "420"):
         raise ValueError("subsampling must be '444' or '420'")
     px = (
@@ -1660,8 +1492,6 @@ def make_jpeg_progressive_gray_payload(
     width: int, height: int, gray_rows: bytes, quant: list | None = None
 ) -> bytes:
     """Progressive grayscale twin of ``make_jpeg_gray_payload``."""
-    import numpy as np
-
     img = np.frombuffer(gray_rows, np.uint8, width * height).reshape(
         height, width
     )
@@ -1966,8 +1796,6 @@ def decode_jpeg_pixels(b: bytes):
     decode_bmp_pixels) — grayscale replicates into all three channels;
     color converts JFIF YCbCr -> RGB (x1.402/0.344136/0.714136/1.772,
     rint, clamp)."""
-    import numpy as np
-
     b = bytes(b)  # bytearray/memoryview in; the scan reader needs bytes.find
     if b[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG file (no SOI)")
@@ -2116,62 +1944,38 @@ def decode_jpeg_pixels(b: bytes):
     return w, h, out
 
 
-def attach_jpeg_payload(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    src_col: str | None = None,
-    bias: int = 0,
-) -> DataFrame:
-    """Materialize a REAL baseline JPEG per row whose pixels are CONSTANT
-    within each 8x8 block — gray of block (bx, by) = (id + bx*7 + by*13
-    + bias) mod 256, dims (8*(1 + id%8), 8*(1 + id*3%8)) — so the flat
-    quant table makes the full DCT round trip LOSSLESS and the SQL
-    oracle restates every decoded pixel from id arithmetic (the JPEG
-    analogue of attach_bmp_payload's contract)."""
-    import numpy as np
-
-    from pyspark.sql.types import BinaryType
-
-    @F.pandas_udf(BinaryType())
-    def jpg(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            i = int(i)
-            wb, hb = 1 + i % 8, 1 + (i * 3) % 8
-            bx = np.arange(wb).reshape(1, wb)
-            by = np.arange(hb).reshape(hb, 1)
-            g = ((i + bx * 7 + by * 13 + bias) % 256).astype(np.uint8)
-            px = np.repeat(np.repeat(g, 8, axis=0), 8, axis=1)
-            out.append(make_jpeg_gray_payload(wb * 8, hb * 8, px.tobytes()))
-        return pd.Series(out)
-
-    return df.withColumn(payload_col, jpg(F.col(src_col or id_col)))
-
-
-def _jpeg_macroblock_fixture(i: int):
-    """(width, height, bgr_bytes) of the macroblock-constant gray-valued
-    fixture BOTH JPEG-subsampling gates encode — 4:2:0 baseline
-    (attach_jpeg420_payload) and progressive (attach_jpeg_progressive_
-    payload) share it, and their oracles share one SQL restatement, so
-    the pixel formula must live in exactly one place: macroblock
-    (bx, by) = (i + bx*7 + by*13) % 256, dims 16*(1+i%4) x 16*(1+i*3%4)."""
-    import numpy as np
-
-    wb, hb = 1 + i % 4, 1 + (i * 3) % 4
+def _block_gray(i: int, n: int, size: int, f: int = 0):
+    """Gray ndarray[h, w] uint8 of doc ``i``'s frame ``f`` for the JPEG
+    and AVI fixtures: (1 + i % n) x (1 + i*3 % n) blocks of size x size
+    pixels, block (bx, by) = (i + f*29 + bx*7 + by*13) % 256. Constant
+    blocks are what make the flat-quant DCT round trip lossless, so the
+    oracles restate every decoded pixel from this one formula."""
+    wb, hb = 1 + i % n, 1 + (i * 3) % n
     bx = np.arange(wb).reshape(1, wb)
     by = np.arange(hb).reshape(hb, 1)
-    g = ((i + bx * 7 + by * 13) % 256).astype(np.uint8)
-    px = np.repeat(np.repeat(g, 16, axis=0), 16, axis=1)
-    bgr = np.stack([px, px, px], axis=-1)
-    return wb * 16, hb * 16, bgr.tobytes()
+    g = ((i + f * 29 + bx * 7 + by * 13) % 256).astype(np.uint8)
+    return np.repeat(np.repeat(g, size, axis=0), size, axis=1)
+
+
+def attach_jpeg_payload(
+    df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
+) -> DataFrame:
+    """Materialize a REAL baseline JPEG per row whose pixels are CONSTANT
+    within each 8x8 block — gray of block (bx, by) = (id + bx*7 + by*13)
+    mod 256, dims (8*(1 + id%8), 8*(1 + id*3%8)) (``_block_gray``) — so
+    the flat quant table makes the full DCT round trip LOSSLESS and the
+    SQL oracle restates every decoded pixel from id arithmetic (the JPEG
+    analogue of attach_bmp_payload's contract)."""
+
+    def jpg(i):
+        g = _block_gray(i, 8, 8)
+        return make_jpeg_gray_payload(g.shape[1], g.shape[0], g.tobytes())
+
+    return _attach(df, payload_col, jpg, id_col)
 
 
 def attach_jpeg420_payload(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    src_col: str | None = None,
+    df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
 ) -> DataFrame:
     """Materialize a REAL 4:2:0-subsampled color JPEG per row (the
     layout virtually every camera/web JPEG uses: 16x16 MCUs of 4 Y +
@@ -2183,24 +1987,15 @@ def attach_jpeg420_payload(
     is EXACTLY lossless and the SQL oracle restates every decoded pixel
     from id arithmetic — the subsampled analogue of
     attach_jpeg_payload's contract."""
-    from pyspark.sql.types import BinaryType
 
-    @F.pandas_udf(BinaryType())
-    def jpg(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            w, h, bgr = _jpeg_macroblock_fixture(int(i))
-            out.append(make_jpeg_color_payload(w, h, bgr, subsampling="420"))
-        return pd.Series(out)
+    def jpg(i):
+        return make_jpeg_color_payload(*_avi_macroblock_fixture(i, 1)[0], subsampling="420")
 
-    return df.withColumn(payload_col, jpg(F.col(src_col or id_col)))
+    return _attach(df, payload_col, jpg, id_col)
 
 
 def attach_jpeg_progressive_payload(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    src_col: str | None = None,
+    df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
 ) -> DataFrame:
     """Materialize a REAL progressive (SOF2) 4:2:0 color JPEG per row —
     the exact macroblock-constant fixture of ``attach_jpeg420_payload``
@@ -2209,17 +2004,13 @@ def attach_jpeg_progressive_payload(
     quantized coefficients are identical to the baseline encoding, so
     the decoded pixels — and therefore the SQL oracle arithmetic — are
     exactly those of the 4:2:0 gate; only the wire format differs."""
-    from pyspark.sql.types import BinaryType
 
-    @F.pandas_udf(BinaryType())
-    def jpg(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            w, h, bgr = _jpeg_macroblock_fixture(int(i))
-            out.append(make_jpeg_progressive_payload(w, h, bgr, subsampling="420"))
-        return pd.Series(out)
+    def jpg(i):
+        return make_jpeg_progressive_payload(
+            *_avi_macroblock_fixture(i, 1)[0], subsampling="420"
+        )
 
-    return df.withColumn(payload_col, jpg(F.col(src_col or id_col)))
+    return _attach(df, payload_col, jpg, id_col)
 
 
 # --- MJPEG-in-AVI video container (RIFF — the WAV parser's sibling) ---------
@@ -2374,47 +2165,30 @@ def decode_avi_frames(b: bytes):
 
 
 def _avi_macroblock_fixture(i: int, n_frames: int):
-    """Frame list for doc ``i``: the JPEG gates' macroblock-constant
-    fixture extended with a per-frame term — frame f's macroblock
-    (bx, by) = (i + f*29 + bx*7 + by*13) % 256, dims pinned per doc at
-    16*(1+i%4) x 16*(1+i*3%4) (AVI streams have constant frame dims).
-    Same lossless-round-trip argument as _jpeg_macroblock_fixture, so a
-    SQL oracle restates every decoded pixel of every frame."""
-    import numpy as np
-
-    wb, hb = 1 + i % 4, 1 + (i * 3) % 4
-    bx = np.arange(wb).reshape(1, wb)
-    by = np.arange(hb).reshape(hb, 1)
+    """Frame list ``[(width, height, bgr_bytes)]`` for doc ``i``: frame f
+    is the gray-valued 16x16-macroblock ``_block_gray(i, 4, 16, f)``,
+    dims 16*(1+i%4) x 16*(1+i*3%4) pinned per doc (AVI streams have
+    constant frame dims). Frame 0 is the fixture of the 4:2:0 and
+    progressive JPEG gates, whose oracles share one SQL restatement."""
     out = []
     for f in range(n_frames):
-        g = ((i + f * 29 + bx * 7 + by * 13) % 256).astype(np.uint8)
-        px = np.repeat(np.repeat(g, 16, axis=0), 16, axis=1)
-        out.append((wb * 16, hb * 16, np.stack([px, px, px], -1).tobytes()))
+        g = _block_gray(i, 4, 16, f)
+        out.append((g.shape[1], g.shape[0], np.stack([g, g, g], -1).tobytes()))
     return out
 
 
 def attach_avi_mjpeg_payload(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    src_col: str | None = None,
-    us_per_frame: int = 40000,
+    df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
 ) -> DataFrame:
     """Materialize a REAL MJPEG-in-AVI video per row: 2 + id%3 frames
     of the per-frame macroblock fixture at 25 fps (40 ms/frame), each
     frame a complete baseline 4:2:0 JPEG. Deterministic from the id, so
     the oracle restates every sampled frame's pixel sums."""
-    from pyspark.sql.types import BinaryType
 
-    @F.pandas_udf(BinaryType())
-    def avi(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            frames = _avi_macroblock_fixture(int(i), 2 + int(i) % 3)
-            out.append(make_avi_mjpeg_payload(frames, us_per_frame))
-        return pd.Series(out)
+    def avi(i):
+        return make_avi_mjpeg_payload(_avi_macroblock_fixture(i, 2 + i % 3))
 
-    return df.withColumn(payload_col, avi(F.col(src_col or id_col)))
+    return _attach(df, payload_col, avi, id_col)
 
 
 def sample_video_frames(
@@ -2439,37 +2213,21 @@ def sample_video_frames(
     work), only the <= ``max_frames`` frames under sampling instants
     are ever decoded, so per-row decode cost is bounded by the stride,
     not the clip length."""
-    out_schema = (
-        f"{id_col} long, frame_idx long, frame_ts_ms long, width long, "
-        "height long, sum_b long, sum_g long, sum_r long"
+
+    def rows(b):
+        w, h, uspf, spans = _avi_frame_spans(b)
+        duration_ms = len(spans) * uspf // 1000
+        for k in range(max_frames):
+            ts = k * every_ms
+            if ts >= duration_ms:
+                break
+            fi = ts * 1000 // uspf
+            sums = _avi_decode_span(b, spans[fi], w, h).reshape(-1, 3).sum(0, dtype="int64")
+            yield (fi, ts, w, h, *map(int, sums))
+
+    return _map_payloads(
+        df, id_col, payload_col,
+        ("frame_idx long", "frame_ts_ms long", "width long", "height long",
+         "sum_b long", "sum_g long", "sum_r long"),
+        rows,
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            cols = {k: [] for k in (id_col, "frame_idx", "frame_ts_ms",
-                                    "width", "height", "sum_b", "sum_g",
-                                    "sum_r")}
-            for rid, payload in zip(pdf[id_col], pdf[payload_col]):
-                raw = bytes(payload)
-                w, h, uspf, spans = _avi_frame_spans(raw)
-                duration_ms = len(spans) * uspf // 1000
-                k = 0
-                while k < max_frames and k * every_ms < duration_ms:
-                    ts = k * every_ms
-                    fi = ts * 1000 // uspf
-                    px = _avi_decode_span(raw, spans[fi], w, h)
-                    sums = px.reshape(-1, 3).sum(0, dtype="int64")
-                    cols[id_col].append(int(rid))
-                    cols["frame_idx"].append(fi)
-                    cols["frame_ts_ms"].append(ts)
-                    cols["width"].append(w)
-                    cols["height"].append(h)
-                    cols["sum_b"].append(int(sums[0]))
-                    cols["sum_g"].append(int(sums[1]))
-                    cols["sum_r"].append(int(sums[2]))
-                    k += 1
-            yield pd.DataFrame(
-                {k: pd.Series(v, dtype="int64") for k, v in cols.items()}
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(batches, schema=out_schema)

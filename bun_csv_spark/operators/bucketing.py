@@ -11,6 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from bun_csv_spark.scratch import scratch_dir
+
 
 def write_bucketed(
     df: DataFrame,
@@ -18,33 +20,23 @@ def write_bucketed(
     bucket_cols: list[str],
     n_buckets: int = 32,
     sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
-    """Persist ``df`` as a bucketed (and optionally sorted) table.
+    """Persist ``df`` as a bucketed (and optionally sorted) table,
+    replacing any table of that name.
 
     Sorting within buckets additionally removes the sort from sort-merge
     joins and enables faster merge scans.
 
-    A managed-table location can outlive the session-local catalog (the
-    in-memory catalog forgets the table, the warehouse directory does
-    not), and saveAsTable refuses to adopt an unregistered location — so
-    stale catalog entries AND leftover directories are cleared first.
-
-    The table is managed, so its files live in the session's warehouse.
-    A session ``get_spark`` builds keeps that warehouse under the
-    process's scratch root, so two processes never share a table and
-    the files go when the process exits."""
-    import os
-    import shutil
-
-    spark = df.sparkSession
-    if mode == "overwrite" and "." not in table:
-        spark.sql(f"DROP TABLE IF EXISTS `{table}`")
-        warehouse = spark.conf.get("spark.sql.warehouse.dir", "")
-        loc = os.path.join(warehouse.removeprefix("file:"), table.lower())
-        if loc and os.path.isdir(loc):
-            shutil.rmtree(loc, ignore_errors=True)
-    writer = df.write.format("parquet").mode(mode).bucketBy(n_buckets, *bucket_cols)
+    The table is external: its files live in ``table_<table>`` under the
+    process's scratch root in every session, not in the session's
+    warehouse, so two processes never share a table's files and they go
+    when the process exits."""
+    df.sparkSession.sql(f"DROP TABLE IF EXISTS `{table}`")
+    writer = (
+        df.write.format("parquet").mode("overwrite")
+        .option("path", scratch_dir(f"table_{table}"))
+        .bucketBy(n_buckets, *bucket_cols)
+    )
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
     writer.saveAsTable(table)

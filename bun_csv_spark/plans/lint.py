@@ -176,10 +176,10 @@ class Finding:
         return SUGGESTIONS.get(self.code, "")
 
 
-def plan_text(df: DataFrame, mode: str = "formatted") -> str:
-    """The physical plan as text (same accessor the audit uses)."""
+def plan_text(df: DataFrame) -> str:
+    """The formatted physical plan as text (the accessor the audit uses)."""
     return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), mode
+        df._jdf.queryExecution(), "formatted"
     )
 
 

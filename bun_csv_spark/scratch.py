@@ -3,8 +3,11 @@ directory under the temp dir, removed when the process that made it exits.
 
 Every temp writer goes under ``root()``: the staging gates, the CSV
 shims that re-encode a URL, a non-UTF-8 file or stdin, the single-file
-append, the streaming single-file replay and the warehouse of a session
-``get_spark`` builds.
+append, the streaming single-file replay and the bucketed tables'
+files in every session. A session ``get_spark`` builds also keeps its
+warehouse there, where Spark's catalog makes the default database's
+directory on first use; any other session makes it in the working
+directory, empty.
 
 An owner's liveness is a kernel lock, not a PID. The root's ``.lock`` is
 ``flock``ed before the directory appears under its reaped name, and the

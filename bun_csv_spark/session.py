@@ -94,8 +94,8 @@ def get_spark(
         .config("spark.python.daemon.module", "bun_csv_spark._daemon")
         .config("spark.executorEnv.PYTHONPATH", _ROOT)
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        # managed tables (write_bucketed) belong to the process that wrote
-        # them, not to the working directory, and go when it exits
+        # the catalog makes the default database's directory here on
+        # first use; under the scratch root it goes when the process exits
         .config("spark.sql.warehouse.dir", os.path.join(scratch.root(), "warehouse"))
     )
     spark = builder.getOrCreate()

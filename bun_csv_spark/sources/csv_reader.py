@@ -540,15 +540,24 @@ def _head_bytes(spark: SparkSession, path: str, encoding: str, n: int = 8192) ->
     return "\n".join(r.value for r in rows)[:n]
 
 
+_REMOTE_SCHEMES = ("hdfs:", "s3:", "s3a:", "abfs", "gs:")
+_COMPRESSED = (".gz", ".bz2", ".zst", ".lz4", ".snappy", ".deflate")
+
+
+def _local_path(path: str) -> str | None:
+    """``path`` with a ``file:`` scheme stripped; None for a remote one."""
+    if path.startswith(_REMOTE_SCHEMES):
+        return None
+    return "/" + path[5:].lstrip("/") if path.startswith("file:") else path
+
+
 def _local_file_path(path: str) -> str | None:
     """Filesystem path when ``path`` is a local single uncompressed file;
     None for remote schemes, directories, and compressed inputs."""
     import os
 
-    if any(path.startswith(s) for s in ("hdfs:", "s3:", "s3a:", "abfs", "gs:")):
-        return None
-    p = "/" + path[5:].lstrip("/") if path.startswith("file:") else path
-    if p.endswith((".gz", ".bz2", ".zst", ".lz4", ".snappy", ".deflate")):
+    p = _local_path(path)
+    if p is None or p.endswith(_COMPRESSED):
         return None
     return p if os.path.isfile(p) else None
 
@@ -567,10 +576,8 @@ def _local_head_bytes(path: str, n: int) -> bytes | None:
     """The raw bytes behind ``_local_head_text``."""
     import os
 
-    p = path[5:].lstrip("/") if path.startswith("file:") else path
-    if path.startswith("file:"):
-        p = "/" + p
-    if any(path.startswith(s) for s in ("hdfs:", "s3:", "s3a:", "abfs", "gs:")):
+    p = _local_path(path)
+    if p is None:
         return None
     try:
         if os.path.isdir(p):
@@ -580,7 +587,7 @@ def _local_head_bytes(path: str, n: int) -> bytes | None:
             if not parts:
                 return None
             p = os.path.join(p, parts[0])
-        if p.endswith((".gz", ".bz2", ".zst", ".lz4", ".snappy", ".deflate")):
+        if p.endswith(_COMPRESSED):
             # compressed inputs: let Spark's text source decompress
             return None
         with open(p, "rb") as fh:

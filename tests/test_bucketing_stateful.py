@@ -14,9 +14,8 @@ def plan_of(df) -> str:
 
 
 def test_bucketed_join_has_no_shuffle(spark):
-    # saveAsTable writes under the session's warehouse, which get_spark
-    # keeps in the process's scratch root; tables are dropped in the
-    # finally block
+    # write_bucketed puts the table's files under the process's scratch
+    # root; tables are dropped in the finally block
     a = spark.range(1000).select(
         F.col("id").alias("k"), (F.col("id") * 2).alias("va")
     )

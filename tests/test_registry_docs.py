@@ -107,6 +107,25 @@ def test_temp_state_goes_through_the_scratch_root():
     assert not hits, hits
 
 
+def test_multimodal_harnesses_are_the_two_helpers():
+    """In ``multimodal/binary.py`` only ``_map_payloads`` calls
+    ``mapInPandas`` and only ``_attach`` calls ``pandas_udf``: every
+    extractor and fixture writer is a per-payload kernel on those two
+    harnesses, not a batch loop of its own."""
+    path = REPO / "bun_csv_spark" / "multimodal" / "binary.py"
+    owner = {}
+    for node in ast.parse(path.read_text()).body:
+        if isinstance(node, ast.FunctionDef):
+            owner.update(dict.fromkeys(range(node.lineno, node.end_lineno + 1), node.name))
+    hits = [
+        f"{owner.get(n)}:{n}"
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if re.search(r"\b(mapInPandas|pandas_udf)\(", line)
+        and owner.get(n) not in ("_map_payloads", "_attach")
+    ]
+    assert not hits, hits
+
+
 def test_no_script_hard_codes_its_checkout():
     """Tools and tests find the repo from ``__file__``. A script that
     hard-codes this checkout's absolute path makes a copy of the repo run

@@ -644,7 +644,12 @@ def test_nation_csv_fixture_is_removed_at_exit(tmp_path):
     streaming replays, the incremental stores, the partitioned, bucketed
     and round-trip writes, the CSV option fixture), appends to a CSV file
     and reads a latin-1 one. After it exits, its TMPDIR and its working
-    directory are as empty as they began: no scratch, no spark-warehouse/."""
+    directory are as empty as they began: no scratch, no spark-warehouse/.
+    A second child builds the bucketed gates under a plain SparkSession,
+    the kind ``__spark_entry__.entry()`` receives: its tables' files go
+    with its scratch root too. Only the empty default-database directory that
+    Spark's catalog makes in a session's warehouse (``spark-warehouse/``
+    for a session ``get_spark`` did not build) may remain."""
     import inspect
     import os
     import re
@@ -688,10 +693,21 @@ def test_nation_csv_fixture_is_removed_at_exit(tmp_path):
         ".collect()\n"
         "assert [tuple(r) for r in rows] == [('\\u00e9', '2')], rows\n"
     )
-    subprocess.run(
-        [sys.executable, "-c", code], cwd=cwd, check=True, timeout=900,
-        env=dict(os.environ, TMPDIR=str(tmp), PYTHONPATH=repo),
+    plain = (
+        "import __spark_entry__ as e\n"
+        "from pyspark.sql import SparkSession\n"
+        "spark = SparkSession.builder.master('local[2]').getOrCreate()\n"
+        "qs = e.queries()\n"
+        "for name in ('bucketed_join_agg', 'neardup_pairs_bucketed'):\n"
+        f"    qs[name](spark, {SF!r}).collect()\n"
     )
-    assert target.read_text() == "a,b\n1,x\n"
-    assert not list(tmp.iterdir())
-    assert not list(cwd.iterdir())
+    for child in (code, plain):
+        subprocess.run(
+            [sys.executable, "-c", child], cwd=cwd, check=True, timeout=900,
+            env=dict(os.environ, TMPDIR=str(tmp), PYTHONPATH=repo),
+        )
+        assert not list(tmp.iterdir())
+        if child is code:
+            assert target.read_text() == "a,b\n1,x\n"
+            assert not list(cwd.iterdir())
+    assert {str(p.relative_to(cwd)) for p in cwd.rglob("*")} <= {"spark-warehouse"}

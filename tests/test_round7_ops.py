@@ -842,7 +842,6 @@ def test_dhash_is_container_invariant(spark):
     from bun_csv_spark.multimodal.binary import (
         attach_bmp_payload,
         attach_png_rgb_payload,
-        decode_image,
         extract_dhash,
     )
 
@@ -850,8 +849,7 @@ def test_dhash_is_container_invariant(spark):
     bmp = {r["doc_id"]: r["dhash"] for r in
            extract_dhash(attach_bmp_payload(docs)).collect()}
     png = {r["doc_id"]: r["dhash"] for r in
-           extract_dhash(attach_png_rgb_payload(docs),
-                         decoder=decode_image).collect()}
+           extract_dhash(attach_png_rgb_payload(docs)).collect()}
     assert bmp == png
 
 

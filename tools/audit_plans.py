@@ -16,14 +16,9 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bun_csv_spark.plans.lint import plan_text  # noqa: E402
 from bun_csv_spark.session import get_spark  # noqa: E402
 from gates import GATES  # noqa: E402
-
-
-def plan_of(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
 
 
 def report(name: str, problems: list[str], ok: str) -> int:
@@ -47,7 +42,7 @@ def main() -> int:
             over = [f"{n_hints} broadcast hints (budget {p.hints})"] if n_hints > p.hints else []
             bad += report(g.name, over, f"broadcast hints={n_hints}/{p.hints}")
         if p.shuffles is not None or p.fact_scans:
-            plan = plan_of(df)
+            plan = plan_text(df)
             # count shuffle nodes once each: the "(N) Exchange" detail headers
             # (tree lines would double-count; BroadcastExchange is not a shuffle)
             n_ex = len(re.findall(r"\(\d+\) Exchange\b", plan))
